@@ -9,7 +9,7 @@ reference (per table, serial batches)          this engine
 existence probe (mysql.go:202-207)           Source.table_exists
 PK detect (mysql.go:210-220)                 Source.detect_primary_key
 checkpoint load/skip (mysql.go:222-229)      CheckpointStore.is_complete
-COUNT(*) denominator (mysql.go:243-249)      df.count() (optional)
+COUNT(*) denominator (mysql.go:243-249)      rows counted on the upsert write
 DDL clone+apply (mysql.go:254-274)           Sink.ensure_schema
 batch loop WHERE pk>? LIMIT n                one partitioned job, or PK-range
   (mysql.go:302-368)                           chunks for checkpoint granularity
@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import math
 import threading
+import time
 from concurrent.futures import ThreadPoolExecutor, as_completed
 from typing import Any
 
@@ -129,18 +130,23 @@ class TransferEngine:
                 # next run skip the untransferred remainder.
                 return {"rows": rows, "resumed_from": watermark, "interrupted": True}
         else:
-            # S6 row-count pre-scan (mysql.go:243-249) doubling as R9
-            # resume-progress recompute (postgresql.go:312-337): the
-            # remaining-row denominator, delegated to the source so JDBC
-            # issues one server-side COUNT instead of re-running the
-            # whole partitioned read (parquet counts from footers).
-            self.stats.init_table(
-                name, self.source.count_rows(df, table, pk, watermark)
-            )
+            # S6/R9 progress denominator (mysql.go:243-249,
+            # postgresql.go:312-337) without a pre-scan: the sink counts
+            # the rows it writes on the write itself, and single-shot
+            # progress only ever jumps from 0 to done, so the rows written
+            # (those above any resume watermark) are the denominator.
+            started = time.monotonic()
             rows = self.sink.upsert(df, table, key_columns)
             if rows >= 0:
+                self.stats.init_table(name, rows, started=started)
                 self.stats.add_processed(name, rows)
                 self.limiter.acquire(rows)
+            else:
+                # a sink that cannot count its writes: the source's own
+                # count (server-side for JDBC) is the denominator
+                self.stats.init_table(
+                    name, self.source.count_rows(df, table, pk, watermark), started=started
+                )
         self.store.mark_complete(name)  # mysql.go:374-377
         return {"rows": rows, "resumed_from": watermark}
 

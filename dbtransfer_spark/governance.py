@@ -75,9 +75,14 @@ class MigrationStats:
         self._lock = threading.Lock()
         self.tables: dict[str, TableStats] = {}
 
-    def init_table(self, table: str, total_rows: int) -> None:
+    def init_table(self, table: str, total_rows: int, started: float | None = None) -> None:
+        """``started``: the ``time.monotonic()`` the table's transfer began,
+        when the denominator is only known once it ends."""
+        stats = TableStats(total_rows=total_rows)
+        if started is not None:
+            stats.start_time = started
         with self._lock:
-            self.tables[table] = TableStats(total_rows=total_rows)
+            self.tables[table] = stats
 
     def add_processed(self, table: str, rows: int) -> None:
         with self._lock:

@@ -21,6 +21,7 @@ from dbtransfer_spark.operators.dedup import (
     minhash_jaccard_estimate,
     minhash_signatures,
 )
+from dbtransfer_spark.observe import observe_count
 from dbtransfer_spark.sources.versioned import VersionedDatasetStore
 
 _BANDS, _ROWS_PER_BAND = 8, 4
@@ -167,23 +168,19 @@ def incremental_release(
     re-snapshots the index — the same self-heal that covers out-of-band
     corpus commits. Readers of the corpus store never observe it
     (snapshot isolation); only the sibling index is briefly ahead."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    batch = (
+    # n_batch rides whichever job first materializes the cached batch
+    # (guide §1.4/§5 — no standalone count action): the seed path still
+    # counts eagerly (its commits need the number before any other job
+    # has run), but the incremental path reads the metric off the probe
+    # job that materializes batch_sigs anyway, removing one full job
+    # wave per release.
+    batch, n_batch_observed = observe_count(
         exact_dedup(
             new_docs.withColumn("__fp", F.md5(F.col(text_col))), ["__fp"], id_col
-        )
-        .drop("__fp")
-        # n_batch rides whichever job first materializes the cached
-        # batch (guide §1.4/§5 — no standalone count action): the seed
-        # path still counts eagerly (its commits need the number before
-        # any other job has run), but the incremental path reads the
-        # metric off the probe job that materializes batch_sigs anyway,
-        # removing one full job wave per release.
-        .observe(obs, F.count(F.lit(1)).cast("bigint").alias("n"))
-        .persist()
-    )  # counted, probed, anti-joined, committed
+        ).drop("__fp"),
+        "incremental_release batch rows",
+    )
+    batch = batch.persist()  # counted, probed, anti-joined, committed
     sigs_store = _sig_store(store)
     batch_sigs = None
     sig_corpus_persisted = None
@@ -244,8 +241,9 @@ def incremental_release(
         drops = near_dup_probe(batch_sigs, sig_corpus, id_col, threshold).persist()
         drops.count()
         # the probe job materialized batch/batch_sigs, so the batch-size
-        # metric is available without its own count action
-        n_batch = int(obs.get["n"])
+        # metric is available without its own count action (the reader
+        # counts the cache itself when an empty probe skipped the batch)
+        n_batch = n_batch_observed()
         kept = batch.join(drops, id_col, "left_anti")
         kept_sigs = batch_sigs.join(drops, id_col, "left_anti")
         # append-commit: writes ONLY the survivors and references the parent

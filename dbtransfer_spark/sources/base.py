@@ -41,11 +41,13 @@ class Source(ABC):
     def count_rows(
         self, df: DataFrame, table: TableMapping, pk: str | None, watermark: int | None
     ) -> int:
-        """S6/R9 progress denominator. Default: count the (already
-        watermark-filtered) DataFrame — cheap for parquet (footer counts).
-        Connector sources should override with a server-side COUNT so the
-        pre-scan doesn't re-read the table (mysql.go:243-249 counts on the
-        server)."""
+        """S6/R9 row count of the (already watermark-filtered) table.
+
+        The engine asks only when the sink cannot count its own writes
+        (``Sink.upsert`` returned -1); otherwise the rows written are the
+        denominator and no count job runs. Default: count the DataFrame,
+        which re-runs the read. Connector sources should override with a
+        server-side COUNT (mysql.go:243-249 counts on the server)."""
         return df.count()
 
 
@@ -56,7 +58,12 @@ class Sink(ABC):
 
     @abstractmethod
     def upsert(self, df: DataFrame, table: TableMapping, key_columns: list[str]) -> int:
-        """Idempotent merge-by-key write; returns rows written.
+        """Idempotent merge-by-key write; returns rows written, or -1 if
+        the sink cannot count them.
+
+        Count on the write itself (an Observation or an accumulator), not
+        with a separate count job: the engine takes the returned rows as
+        the table's progress denominator and runs no pre-scan.
 
         Idempotence is the engine's exactly-once-effect mechanism: Spark
         task retries give at-least-once, the upsert collapses replays

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dbtransfer_spark.config import TableMapping
+from dbtransfer_spark.observe import observe_count
 from dbtransfer_spark.sources.base import Sink, Source
 
 CORRUPT_COL = "_corrupt_record"
@@ -186,11 +187,11 @@ class _FileSink(Sink):
             w = w.option("header", "true")
         getattr(w, "json" if self.FMT == "json" else "csv")(path)
 
-    def _read(self, path: str) -> DataFrame:
+    def _read(self, spark: SparkSession, path: str) -> DataFrame:
         if self.FMT == "json":
-            return self.spark.read.json(path)
+            return spark.read.json(path)
         return (
-            self.spark.read.option("header", "true")
+            spark.read.option("header", "true")
             .option("inferSchema", "true")
             .csv(path)
         )
@@ -200,22 +201,24 @@ class _FileSink(Sink):
     ) -> int:
         target = self._path(table.effective_target)
         os.makedirs(self.cfg.database, exist_ok=True)
-        n_new = df.count()
+        # the row count rides the write, observed on the new rows' branch
+        new, n_new = observe_count(df, f"rows upserted into {target}")
         if not os.path.exists(target):
-            self._write(df, target)
-            return n_new
-        existing = self._read(target)
+            self._write(new, target)
+            return n_new()
+        # in df's session, where the Observation is registered
+        existing = self._read(df.sparkSession, target)
         kept = existing.join(
             df.select(*key_columns).distinct(), key_columns, "left_anti"
         )
         merged = kept.select(*existing.columns).unionByName(
-            df.select(*existing.columns), allowMissingColumns=True
+            new.select(*existing.columns), allowMissingColumns=True
         )
         staging = target + f".staging-{uuid.uuid4().hex[:8]}"
         self._write(merged, staging)
         shutil.rmtree(target)
         os.rename(staging, target)
-        return n_new
+        return n_new()
 
 
 class JsonlSink(_FileSink):

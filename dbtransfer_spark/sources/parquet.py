@@ -13,6 +13,12 @@ only partitions actually touched by the incoming batch are rewritten —
 the parquet equivalent of the reference writing only the rows in the batch
 (mysql.go:455-476). Combined with a PK-range chunked transfer this bounds
 each commit's write amplification.
+
+The rows written are counted on the write itself: a COUNT Observation on
+the ``new`` branch of the merge (``dbtransfer_spark.observe``), so an
+upsert is one job wave with no separate count job, and its return value
+is the engine's progress denominator. The merged output keeps the
+incoming frame's column order.
 """
 
 from __future__ import annotations
@@ -25,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dbtransfer_spark.config import TableMapping
+from dbtransfer_spark.observe import observe_count
 from dbtransfer_spark.sources.base import Sink, Source
 
 
@@ -67,14 +74,18 @@ class ParquetSink(Sink):
     def upsert(self, df: DataFrame, table: TableMapping, key_columns: list[str]) -> int:
         target = self._path(table.effective_target)
         os.makedirs(self.cfg.database, exist_ok=True)
-        n_new = df.count()
+        # The row count rides the write: observed on the branch that
+        # carries the new rows, never on the anti-join's key side.
+        new, n_new = observe_count(df, f"rows upserted into {target}")
         if not os.path.exists(target):
-            writer = df.write.mode("overwrite")
+            writer = new.write.mode("overwrite")
             if self.partition_by:
                 writer = writer.partitionBy(*self.partition_by)
             writer.format(self.FORMAT).save(target)
-            return n_new
-        existing = self.spark.read.format(self.FORMAT).load(target)
+            return n_new()
+        # read in df's session, so the merge runs where the Observation
+        # is registered (foreachBatch hands over a cloned session's frame)
+        existing = df.sparkSession.read.format(self.FORMAT).load(target)
         if self.partition_by:
             # Rewrite only affected partitions (dynamic overwrite). The
             # merged batch is staged to a scratch dir first: Spark's file
@@ -84,8 +95,7 @@ class ParquetSink(Sink):
             # the staged copy, never `target` itself.
             parts = df.select(*self.partition_by).distinct()
             affected = existing.join(F.broadcast(parts), self.partition_by, "left_semi")
-            kept = affected.join(df.select(*key_columns), key_columns, "left_anti")
-            merged = kept.unionByName(df)
+            merged = _merge(affected, df, new, key_columns)
             tmp = f"{target}.__staging_{uuid.uuid4().hex[:8]}"
             merged.write.mode("overwrite").format(self.FORMAT).save(tmp)
             try:
@@ -99,9 +109,8 @@ class ParquetSink(Sink):
                 )
             finally:
                 shutil.rmtree(tmp, ignore_errors=True)
-            return n_new
-        kept = existing.join(df.select(*key_columns), key_columns, "left_anti")
-        merged = kept.unionByName(df)
+            return n_new()
+        merged = _merge(existing, df, new, key_columns)
         # Cannot overwrite a path while lazily reading it: stage then swap.
         tmp = f"{target}.__staging_{uuid.uuid4().hex[:8]}"
         merged.write.mode("overwrite").format(self.FORMAT).save(tmp)
@@ -109,7 +118,18 @@ class ParquetSink(Sink):
         os.replace(target, old) if os.path.isfile(target) else shutil.move(target, old)
         shutil.move(tmp, target)
         shutil.rmtree(old, ignore_errors=True)
-        return n_new
+        return n_new()
+
+
+def _merge(
+    existing: DataFrame, df: DataFrame, new: DataFrame, key_columns: list[str]
+) -> DataFrame:
+    """Rows of ``existing`` whose key ``df`` lacks, plus ``new`` (``df``
+    with its count observed), in ``df``'s column order: the anti-join
+    moves the key columns first, and ``unionByName`` keeps its left
+    side's order."""
+    kept = existing.join(df.select(*key_columns), key_columns, "left_anti")
+    return kept.select(*df.columns).unionByName(new)
 
 
 class OrcSource(ParquetSource):

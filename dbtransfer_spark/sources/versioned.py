@@ -12,7 +12,7 @@ single small manifest-file rename.
 Layout::
 
     <root>/<table>/
-        _versions/v00000001.json   # immutable: file list + row count + parent
+        _versions/v00000001.json   # immutable: file list + rows added + parent
         _versions/v00000002.json
         _latest.json               # atomically-swapped pointer {"version": 2}
         data/v2-<uuid>/part-*.parquet
@@ -70,9 +70,11 @@ import os
 import shutil
 import time
 import uuid
+from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
+
+from dbtransfer_spark.observe import observe_count
 
 
 class VersionedDatasetStore:
@@ -127,6 +129,7 @@ class VersionedDatasetStore:
         compaction: bool = False,
         n_rows: int | None = None,
         n_rows_hint: int | None = None,
+        n_new_rows: Callable[[], int] | None = None,
     ) -> int:
         """Write a new data directory, record a manifest whose file list
         is ``parent_dirs + [new]``, swap the latest pointer. The data is
@@ -143,7 +146,11 @@ class VersionedDatasetStore:
         an upper bound is known (e.g. pre-dedup batch size). When the
         exact count is unknown it rides the write itself as an
         ``Observation`` metric — one job total, never a read-back
-        count scan over the just-written files."""
+        count scan over the just-written files.
+
+        ``n_new_rows``: reader of the manifest's ``n_new_rows`` when the
+        rows this version adds are fewer than the rows it writes (a
+        compaction rewrites its parent too); called after the write."""
         parent = self.latest_version()
         version = (parent or 0) + 1
         data_name = f"v{version}-{uuid.uuid4().hex[:8]}"
@@ -154,12 +161,10 @@ class VersionedDatasetStore:
             # the whole upstream compute (dedup/anti-join) into one task;
             # the round-robin shuffle costs O(batch) and keeps it parallel
             df = df.repartition(max(1, min(1 + size_rows // 1_000_000, 10_000)))
-        obs = None
-        if n_rows is None:
-            obs = Observation()
-            df = df.observe(obs, F.count(F.lit(1)).cast("bigint").alias("n"))
+        if n_rows is None and n_new_rows is None:
+            df, n_new_rows = observe_count(df, f"rows of {data_path}")
         df.write.mode("error").parquet(data_path)
-        n_new = n_rows if n_rows is not None else int(obs.get["n"])
+        n_new = n_rows if n_rows is not None else n_new_rows()
         man = {
             "version": version,
             "parent": parent,
@@ -204,7 +209,8 @@ class VersionedDatasetStore:
         Auto-compaction: once the parent manifest already references
         ``max_data_dirs`` directories, this commit is published as a
         full snapshot instead (parent ∪ batch rewritten into one fresh
-        directory, ``compaction: true`` in the manifest) — amortized
+        directory, ``compaction: true`` in the manifest, whose
+        ``n_new_rows`` still counts only the batch) — amortized
         O(|corpus| / max_data_dirs) per append, bounding every read
         plan to ``max_data_dirs`` directories forever. Time travel is
         untouched: pre-compaction manifests keep their own dir lists.
@@ -212,8 +218,10 @@ class VersionedDatasetStore:
         parent = self.latest_version()
         parent_dirs = list(self.manifest(parent)["data_dirs"]) if parent else []
         if len(parent_dirs) >= self.max_data_dirs:
-            full = self.read(parent).unionByName(df)
-            return self._publish(full, note, [], compaction=True)
+            # the manifest counts the batch, not the compacted corpus
+            batch, n_batch = observe_count(df, f"batch rows of {self.base}")
+            full = self.read(parent).unionByName(batch)
+            return self._publish(full, note, [], compaction=True, n_new_rows=n_batch)
         return self._publish(
             df, note, parent_dirs, n_rows=n_rows, n_rows_hint=n_rows_hint
         )

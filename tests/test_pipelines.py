@@ -124,3 +124,30 @@ def test_release_self_heals_stale_signature_index(spark, store):
     sv = sig_store.latest_version()
     assert sig_store.manifest(sv)["note"] == P._sig_note(r["version"])
     assert sig_store.read().count() == store.read().count()
+
+
+def test_compacting_release_counts_only_the_batch(spark, tmp_path):
+    """On the release whose commit auto-compacts, n_kept/n_dropped
+    describe the batch, not the rewritten corpus: 0 <= n_dropped <=
+    n_batch, and the corpus grows by exactly n_kept."""
+    store = VersionedDatasetStore(spark, str(tmp_path), "corpus", max_data_dirs=2)
+    incremental_release(spark, store, _docs(spark, [(1, BASE)]))
+    incremental_release(
+        spark, store, _docs(spark, [(2, " ".join(f"a{i}" for i in range(60)))])
+    )
+    size = store.read().count()
+    r = incremental_release(
+        spark,
+        store,
+        _docs(
+            spark,
+            [
+                (301, BASE.replace("w59", "zz")),             # near-dup of doc 1
+                (302, " ".join(f"b{i}" for i in range(60))),  # novel
+            ],
+        ),
+    )
+    assert store.manifest(r["version"])["compaction"]
+    assert 0 <= r["n_dropped"] <= r["n_batch"]
+    assert (r["n_batch"], r["n_kept"], r["n_dropped"]) == (2, 1, 1)
+    assert store.read(r["version"]).count() == size + r["n_kept"]

@@ -104,7 +104,10 @@ def test_resume_from_watermark(spark, tmp_path):
     partial.write.parquet(str(tmp_path / "out" / "supplier.parquet"))
     store.save("supplier", Checkpoint(last_key={"s_suppkey": str(cut)}))
 
-    TransferEngine(spark, cfg).run()
+    engine = TransferEngine(spark, cfg)
+    engine.run()
+    # R9: the progress denominator is the rows remaining above the cut
+    assert engine.stats.snapshot()["supplier"]["total"] == len([k for k in keys if k > cut])
     out = spark.read.parquet(str(tmp_path / "out" / "supplier.parquet"))
     assert out.count() == src.count()
     # Rows beyond the watermark were re-transferred fresh...
@@ -112,6 +115,71 @@ def test_resume_from_watermark(spark, tmp_path):
     assert fresh == 0
     # ...and rows before it were left as the partial run wrote them.
     assert out.filter(F.col("s_name") == "STALE").count() == len([k for k in keys if k <= cut])
+
+
+def test_merge_keeps_source_column_order(spark, tmp_path):
+    """The merge's anti-join moves the key columns first; the upsert must
+    still write lineitem's columns in the source's order."""
+    cfg = make_config(tmp_path, [TableMapping(name="lineitem")])
+    TransferEngine(spark, cfg).run()
+    CheckpointStore(cfg.migration.checkpoint_dir).save("lineitem", Checkpoint())
+    results = TransferEngine(spark, cfg).run()  # the merge path
+    assert "error" not in results["lineitem"], results["lineitem"]
+    src = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
+    out = spark.read.parquet(str(tmp_path / "out" / "lineitem.parquet"))
+    assert out.columns == src.columns
+
+
+def _job_ids(spark) -> set[int]:
+    sc = spark.sparkContext
+    # job starts reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return set(sc.statusTracker().getJobIdsForGroup())
+
+
+def test_single_shot_merge_transfer_job_budget(spark, tmp_path):
+    """A one-table merge-path transfer is one job wave: the merge write
+    counts its own rows, so no count job runs beside it."""
+    name = "supplier"
+    cfg = make_config(tmp_path, [TableMapping(name=name, primary_key="s_suppkey")])
+    TransferEngine(spark, cfg).run()
+    CheckpointStore(cfg.migration.checkpoint_dir).save(name, Checkpoint())
+    before = _job_ids(spark)
+    results = TransferEngine(spark, cfg).run()
+    jobs = _job_ids(spark) - before
+    assert "error" not in results[name], results[name]
+    assert len(jobs) <= 4, sorted(jobs)
+
+
+def test_single_shot_progress_needs_no_count_rows(spark, tmp_path, monkeypatch):
+    """The single-shot denominator comes from the rows the sink wrote,
+    never from a Source.count_rows pre-scan."""
+    name = "nation"
+    cfg = make_config(tmp_path, [TableMapping(name=name, primary_key="n_nationkey")])
+    engine = TransferEngine(spark, cfg)
+
+    def no_count(*_args, **_kw):
+        raise AssertionError("count_rows pre-scan ran")
+
+    monkeypatch.setattr(engine.source, "count_rows", no_count)
+    results = engine.run()
+    rows = spark.read.parquet(f"{SF_SMOKE}/{name}.parquet").count()
+    assert results[name]["rows"] == rows
+    snap = engine.stats.snapshot()[name]
+    assert (snap["processed"], snap["total"]) == (rows, rows)
+
+
+def test_single_shot_sink_without_counts_takes_source_count(spark, tmp_path, monkeypatch):
+    """A sink that cannot count its writes (upsert returns -1, as the
+    Mongo and Cassandra sinks do) leaves the denominator to the source."""
+    name = "region"
+    cfg = make_config(tmp_path, [TableMapping(name=name, primary_key="r_regionkey")])
+    engine = TransferEngine(spark, cfg)
+    monkeypatch.setattr(engine.sink, "upsert", lambda *_a: -1)
+    engine.run()
+    rows = spark.read.parquet(f"{SF_SMOKE}/{name}.parquet").count()
+    snap = engine.stats.snapshot()[name]
+    assert (snap["processed"], snap["total"]) == (0, rows)
 
 
 def test_chunked_transfer_matches_single_shot(spark, tmp_path):

@@ -115,6 +115,8 @@ def test_append_auto_compaction_bounds_read_plan(spark, tmp_path):
         # the invariant the compaction exists for
         assert len(man["data_dirs"]) <= 3, (v, man["data_dirs"])
         compactions += bool(man.get("compaction"))
+        # a compaction rewrites its parent too, but adds only the batch
+        assert man["n_new_rows"] == len(b), (v, man)
         got = {tuple(r) for r in store.read(v).collect()}
         assert got == expected_rows, f"version {v} content drifted"
     assert compactions >= 2  # 9 versions at bound 3 must have compacted
