@@ -30,7 +30,6 @@ from __future__ import annotations
 
 import math
 import threading
-import time
 from concurrent.futures import ThreadPoolExecutor, as_completed
 from typing import Any
 
@@ -134,18 +133,19 @@ class TransferEngine:
             # postgresql.go:312-337) without a pre-scan: the sink counts
             # the rows it writes on the write itself, and single-shot
             # progress only ever jumps from 0 to done, so the rows written
-            # (those above any resume watermark) are the denominator.
-            started = time.monotonic()
+            # (those above any resume watermark) are the denominator. The
+            # table is registered first, so a failed write still lists it.
+            self.stats.init_table(name, 0)
             rows = self.sink.upsert(df, table, key_columns)
             if rows >= 0:
-                self.stats.init_table(name, rows, started=started)
+                self.stats.set_total(name, rows)
                 self.stats.add_processed(name, rows)
                 self.limiter.acquire(rows)
             else:
                 # a sink that cannot count its writes: the source's own
                 # count (server-side for JDBC) is the denominator
-                self.stats.init_table(
-                    name, self.source.count_rows(df, table, pk, watermark), started=started
+                self.stats.set_total(
+                    name, self.source.count_rows(df, table, pk, watermark)
                 )
         self.store.mark_complete(name)  # mysql.go:374-377
         return {"rows": rows, "resumed_from": watermark}

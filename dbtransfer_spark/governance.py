@@ -75,14 +75,15 @@ class MigrationStats:
         self._lock = threading.Lock()
         self.tables: dict[str, TableStats] = {}
 
-    def init_table(self, table: str, total_rows: int, started: float | None = None) -> None:
-        """``started``: the ``time.monotonic()`` the table's transfer began,
-        when the denominator is only known once it ends."""
-        stats = TableStats(total_rows=total_rows)
-        if started is not None:
-            stats.start_time = started
+    def init_table(self, table: str, total_rows: int) -> None:
         with self._lock:
-            self.tables[table] = stats
+            self.tables[table] = TableStats(total_rows=total_rows)
+
+    def set_total(self, table: str, total_rows: int) -> None:
+        """The denominator of a table whose row count is only known once
+        its transfer ends; keeps the start time ``init_table`` set."""
+        with self._lock:
+            self.tables.setdefault(table, TableStats()).total_rows = total_rows
 
     def add_processed(self, table: str, rows: int) -> None:
         with self._lock:

@@ -14,7 +14,8 @@ Two ways the metric can fail to arrive, both handled by the reader:
 - The action can finish without running the observed plan at all: when
   adaptive execution proves a join empty, it drops the join's other
   side, cached frames included. The metric then arrives empty, and the
-  reader counts the frame with a job of its own.
+  reader counts the observed frame with a job of its own; a caller that
+  persisted that frame fills its cache with this count.
 """
 
 from __future__ import annotations
@@ -30,14 +31,12 @@ from pyspark.sql import functions as F
 OBSERVATION_TIMEOUT_S = 120.0
 
 
-def observe_count(
-    df: DataFrame, metric: str, timeout_s: float = OBSERVATION_TIMEOUT_S
-) -> tuple[DataFrame, Callable[[], int]]:
+def observe_count(df: DataFrame, metric: str) -> tuple[DataFrame, Callable[[], int]]:
     """``df`` with a row-count Observation attached, and its reader.
 
     Call the reader after an action over the returned frame: it returns
-    the rows that action saw, waiting at most ``timeout_s`` seconds for
-    the metric to arrive. ``metric`` names the count in the timeout
+    the rows that action saw, waiting at most ``OBSERVATION_TIMEOUT_S``
+    seconds for the metric to arrive. ``metric`` names the count in the timeout
     error. The action must run in ``df``'s session, where the
     Observation is registered: a plan led by a frame of another session
     (a join onto a frame the caller read itself, inside foreachBatch's
@@ -46,6 +45,7 @@ def observe_count(
     observed = df.observe(obs, F.count(F.lit(1)).cast("bigint").alias("n"))
 
     def read() -> int:
+        timeout_s = OBSERVATION_TIMEOUT_S
         future = obs._jo.future()
         if not future.isCompleted():
             jvm = obs._jvm
@@ -66,7 +66,9 @@ def observe_count(
                 ) from None
         row = obs._jo.getRow()
         if row.size() == 0:  # the action skipped the observed plan
-            return df.count()
+            # count the returned frame, not ``df``: only its plan matches
+            # the cache of a caller that persisted it
+            return observed.count()
         return int(row.getLong(0))
 
     return observed, read

@@ -241,8 +241,9 @@ def incremental_release(
         drops = near_dup_probe(batch_sigs, sig_corpus, id_col, threshold).persist()
         drops.count()
         # the probe job materialized batch/batch_sigs, so the batch-size
-        # metric is available without its own count action (the reader
-        # counts the cache itself when an empty probe skipped the batch)
+        # metric is available without its own count action (when an empty
+        # probe skipped the batch, the reader counts the persisted batch,
+        # which fills the cache the commit write then reads)
         n_batch = n_batch_observed()
         kept = batch.join(drops, id_col, "left_anti")
         kept_sigs = batch_sigs.join(drops, id_col, "left_anti")

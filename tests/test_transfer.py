@@ -182,6 +182,24 @@ def test_single_shot_sink_without_counts_takes_source_count(spark, tmp_path, mon
     assert (snap["processed"], snap["total"]) == (0, rows)
 
 
+def test_single_shot_failed_write_still_lists_the_table(spark, tmp_path, monkeypatch):
+    """A table whose upsert raises is still in the stats, with nothing
+    processed, so the CLI's final stats name every failed table."""
+    name = "region"
+    cfg = make_config(tmp_path, [TableMapping(name=name, primary_key="r_regionkey")])
+    engine = TransferEngine(spark, cfg)
+
+    def failing_upsert(*_args):
+        raise RuntimeError("sink down")
+
+    monkeypatch.setattr(engine.sink, "upsert", failing_upsert)
+    results = engine.run()
+    assert results[name] == {"error": "sink down"}
+    snap = engine.stats.snapshot()[name]
+    assert (snap["processed"], snap["total"]) == (0, 0)
+    assert not engine.store.is_complete(name)
+
+
 def test_chunked_transfer_matches_single_shot(spark, tmp_path):
     tables = [TableMapping(name="orders", primary_key="o_orderkey")]
     cfg = make_config(tmp_path, tables)
