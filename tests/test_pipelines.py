@@ -151,3 +151,25 @@ def test_compacting_release_counts_only_the_batch(spark, tmp_path):
     assert 0 <= r["n_dropped"] <= r["n_batch"]
     assert (r["n_batch"], r["n_kept"], r["n_dropped"]) == (2, 1, 1)
     assert store.read(r["version"]).count() == size + r["n_kept"]
+
+
+def test_release_without_candidates_computes_the_batch_once(spark, store):
+    """A batch with no near-dup candidates leaves the probe empty, so
+    adaptive execution skips the batch and its row-count metric arrives
+    empty. The count that replaces it must fill the batch cache the
+    commit write reads, not compute the batch a second time."""
+    from pyspark.sql import functions as F
+
+    incremental_release(spark, store, _docs(spark, [(1, BASE)]))
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def keep(_id):
+        evaluated.add(1)
+        return True
+
+    novel = [(400 + i, " ".join(f"n{i}x{j}" for j in range(60))) for i in range(3)]
+    batch = _docs(spark, novel).filter(F.udf(keep, "boolean")("doc_id"))
+    r = incremental_release(spark, store, batch)
+    assert (r["n_batch"], r["n_kept"], r["n_dropped"]) == (3, 3, 0)
+    assert store.read(r["version"]).count() == 4
+    assert evaluated.value == len(novel)
