@@ -8,6 +8,8 @@ reference (per table, serial batches)          this engine
 -----------------------------------          ------------------------------
 existence probe (mysql.go:202-207)           Source.table_exists
 PK detect (mysql.go:210-220)                 Source.detect_primary_key
+source/target column schema                  one parquet footer read on the
+                                               driver, no Spark job (read_files)
 checkpoint load/skip (mysql.go:222-229)      CheckpointStore.is_complete
 COUNT(*) denominator (mysql.go:243-249)      rows counted on the upsert write
 DDL clone+apply (mysql.go:254-274)           Sink.ensure_schema

@@ -18,17 +18,25 @@ The rows written are counted on the write itself: a COUNT Observation on
 the ``new`` branch of the merge (``dbtransfer_spark.observe``), so an
 upsert is one job wave with no separate count job, and its return value
 is the engine's progress denominator. The merged output keeps the
-incoming frame's column order.
+incoming frame's column order, and puts the new rows first: Spark's file
+writer always writes partition 0, so that partition carries data and a
+merge never leaves a zero-row part file for the next merge to scan.
+
+Schemas come from one parquet footer read on the driver
+(:func:`read_files`), not from Spark's schema-inference job, so a merge
+upsert runs two Spark jobs: the anti-join's key broadcast and the write.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from dbtransfer_spark.config import TableMapping
 from dbtransfer_spark.observe import observe_count
@@ -43,7 +51,7 @@ class ParquetSource(Source):
         return os.path.join(self.cfg.database, f"{name}.{self.EXT}")
 
     def read(self, table: TableMapping) -> DataFrame:
-        return self.spark.read.format(self.FORMAT).load(self._path(table.name))
+        return read_files(self.spark, self.FORMAT, self._path(table.name))
 
     def detect_primary_key(self, table: TableMapping) -> list[str]:
         if table.primary_key:
@@ -85,7 +93,7 @@ class ParquetSink(Sink):
             return n_new()
         # read in df's session, so the merge runs where the Observation
         # is registered (foreachBatch hands over a cloned session's frame)
-        existing = df.sparkSession.read.format(self.FORMAT).load(target)
+        existing = read_files(df.sparkSession, self.FORMAT, target)
         if self.partition_by:
             # Rewrite only affected partitions (dynamic overwrite). The
             # merged batch is staged to a scratch dir first: Spark's file
@@ -100,7 +108,7 @@ class ParquetSink(Sink):
             merged.write.mode("overwrite").format(self.FORMAT).save(tmp)
             try:
                 (
-                    self.spark.read.format(self.FORMAT).load(tmp)
+                    read_files(self.spark, self.FORMAT, tmp)
                     .write.mode("overwrite")
                     .option("partitionOverwriteMode", "dynamic")
                     .partitionBy(*self.partition_by)
@@ -124,12 +132,84 @@ class ParquetSink(Sink):
 def _merge(
     existing: DataFrame, df: DataFrame, new: DataFrame, key_columns: list[str]
 ) -> DataFrame:
-    """Rows of ``existing`` whose key ``df`` lacks, plus ``new`` (``df``
-    with its count observed), in ``df``'s column order: the anti-join
-    moves the key columns first, and ``unionByName`` keeps its left
-    side's order."""
+    """``new`` (``df`` with its count observed), then the rows of
+    ``existing`` whose key ``df`` lacks, in ``df``'s column order.
+
+    The new rows come first so that partition 0, which Spark's file
+    writer writes even when it is empty, carries data: with the target
+    side first, a batch that replaces every key left a zero-row file."""
     kept = existing.join(df.select(*key_columns), key_columns, "left_anti")
-    return kept.select(*df.columns).unionByName(new)
+    return new.unionByName(kept.select(*df.columns))
+
+
+def read_files(spark: SparkSession, fmt: str, path: str) -> DataFrame:
+    """``spark.read.format(fmt).load(path)``, minus Spark's schema job
+    where it can be skipped.
+
+    Spark infers a parquet schema with a one-task job that reads one
+    footer. For a local parquet file or flat directory, with schema
+    merging off, that footer is read here on the driver and converted
+    by Spark's own code, so the schema is exactly the one Spark would
+    infer. Every other read (ORC, remote or globbed paths, partitioned
+    directories, summary files, merged schemas) is Spark's own."""
+    schema = _footer_schema(spark, path) if fmt == "parquet" else None
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.format(fmt).load(path)
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    state = spark._jsparkSession.sessionState()
+    jconf = state.conf()
+    first = None if jconf.isParquetSchemaMergingEnabled() else _first_data_file(path)
+    if first is None:
+        return None
+    jvm = spark._jvm
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    hpath = jvm.org.apache.hadoop.fs.Path(os.path.abspath(first))
+    meta = pq.ParquetFooterReader.readFooter(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hpath, state.newHadoopConf()),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    schema = pq.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(hpath, meta),
+        pq.ParquetToSparkSchemaConverter(jconf),
+    )
+    return StructType.fromJson(json.loads(schema.asNullable().json()))
+
+
+def _first_data_file(path: str) -> str | None:
+    """The file Spark's non-merging inference takes the schema from: the
+    path itself, or a flat directory's name-sorted first data file. None
+    when the choice needs Spark's own listing: a URI or glob, a missing
+    path, a subdirectory (``k=v`` partitions), a summary file, or no
+    data file at all."""
+    if any(c in path for c in "{}[]*?\\"):
+        return None
+    if os.path.isfile(path):
+        return path
+    if not os.path.isdir(path):
+        return None
+    data = []
+    with os.scandir(path) as entries:
+        for e in entries:
+            if e.name.startswith(("_metadata", "_common_metadata")):
+                return None
+            if _hidden(e.name):
+                continue
+            if e.is_dir():
+                return None
+            data.append(e.name)
+    return os.path.join(path, min(data)) if data else None
+
+
+def _hidden(name: str) -> bool:
+    """Spark's listing skips this name (HadoopFSUtils.shouldFilterOutPathName,
+    summary files aside): ``_SUCCESS``, ``_temporary``, ``.crc`` files."""
+    return (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
 
 
 class OrcSource(ParquetSource):

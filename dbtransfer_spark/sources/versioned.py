@@ -234,6 +234,11 @@ class VersionedDatasetStore:
                 raise FileNotFoundError(f"no committed version under {self.base}")
         man = self.manifest(version)
         paths = [os.path.join(self.ddir, d) for d in man["data_dirs"]]
+        # Spark's schema inference, on purpose: a prototype that routed
+        # this read through sources.parquet.read_files (a footer read on
+        # the driver, no job) made the release_incremental benchmark
+        # slower in 3 of 3 alternating pairs (ops/s 0.426/0.538/0.488 ->
+        # 0.308/0.444/0.332), cause not found. Measure before switching.
         return self.spark.read.parquet(*paths)
 
     def diff(self, version_a: int, version_b: int, key_columns: list[str]) -> dict:

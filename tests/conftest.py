@@ -8,6 +8,14 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
 
+def spark_job_ids(spark) -> set[int]:
+    """Ids of the Spark jobs started so far outside any job group."""
+    sc = spark.sparkContext
+    # job starts reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return set(sc.statusTracker().getJobIdsForGroup())
+
+
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
@@ -18,19 +26,21 @@ def spark():
 
 
 @pytest.fixture(scope="session")
-def all_query_plans(spark):
-    """Formatted physical plan of every declared query at SF_SMOKE,
-    compiled once per session — shared by the global plan sweeps
-    (cartesian/BNLJ and unpartitioned-window) so each doesn't pay its
-    own 327-plan compile."""
+def all_queries(spark):
+    """``name -> (schema, formatted physical plan)`` of every declared
+    query at SF_SMOKE, each frame built once per session. The global plan
+    sweeps (cartesian/BNLJ, unpartitioned window, scan budget) and the
+    oracle dtype check all read it, so none pays its own 331-query build.
+    It keeps the schema, not the frame, so the session pins no plans."""
     import __spark_entry__ as entry
 
     from dbtransfer_spark.plans import formatted_plan
 
-    return {
-        name: formatted_plan(fn(spark, SF_SMOKE))
-        for name, fn in entry.queries().items()
-    }
+    out = {}
+    for name, fn in entry.queries().items():
+        df = fn(spark, SF_SMOKE)
+        out[name] = (df.schema, formatted_plan(df))
+    return out
 
 
 @pytest.fixture(scope="session")

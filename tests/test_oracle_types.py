@@ -17,8 +17,6 @@ import re
 
 import pytest
 
-from tests.conftest import SF_SMOKE
-
 # DuckDB types that the driver's pandas conversion mangles or crashes on.
 _FORBIDDEN = re.compile(
     r"HUGEINT|UHUGEINT|\bLIST\b|STRUCT|\bMAP\b|\[\]|UNION", re.I
@@ -87,16 +85,13 @@ def test_no_oracle_emits_driver_hostile_types(oracle_plans):
     )
 
 
-def test_oracle_type_classes_match_spark_dtypes(spark, oracle_plans):
+def test_oracle_type_classes_match_spark_dtypes(all_queries, oracle_plans):
     """Column-by-column: DuckDB class must equal Spark class (after name
     sort, the driver's comparison order). Schema-only — no execution."""
-    import __spark_entry__ as entrymod
-
-    qs = entrymod.queries()
     mismatches = {}
     for name, dcols in oracle_plans.items():
-        sdf = qs[name](spark, SF_SMOKE)
-        scols = sorted((f.name, f.dataType.simpleString()) for f in sdf.schema.fields)
+        schema, _ = all_queries[name]
+        scols = sorted((f.name, f.dataType.simpleString()) for f in schema.fields)
         dcols_sorted = sorted(dcols)
         if [c for c, _ in scols] != [c for c, _ in dcols_sorted]:
             mismatches[name] = f"column names {scols} vs {dcols_sorted}"

@@ -299,12 +299,12 @@ _FIXED_SIDE_CROSSJOINS = {
 }
 
 
-def test_no_query_has_unbounded_cartesian(all_query_plans):
+def test_no_query_has_unbounded_cartesian(all_queries):
     """Sweep every declared query: no CartesianProduct anywhere, and
     nested-loop joins only in the whitelisted fixed-broadcast-side cases —
     the 'no quadratic trap at 100 TB' invariant, enforced globally."""
     offenders = []
-    for name, plan in all_query_plans.items():
+    for name, (_, plan) in all_queries.items():
         if "CartesianProduct" in plan:
             offenders.append((name, "CartesianProduct"))
         if (
@@ -315,7 +315,7 @@ def test_no_query_has_unbounded_cartesian(all_query_plans):
     assert offenders == []
 
 
-def test_no_query_has_row_level_global_window(all_query_plans):
+def test_no_query_has_row_level_global_window(all_queries):
     """Sweep every declared query: unpartitioned (single-reducer) Window
     nodes may appear ONLY in the whitelisted domain-bounded shapes
     (DOMAIN_BOUNDED_GLOBAL_WINDOWS in plans/checks.py — post-aggregate
@@ -331,7 +331,7 @@ def test_no_query_has_row_level_global_window(all_query_plans):
 
     flagged = {
         name
-        for name, plan in all_query_plans.items()
+        for name, (_, plan) in all_queries.items()
         if count_unpartitioned_windows(plan) > 0
     }
     unexpected = flagged - set(DOMAIN_BOUNDED_GLOBAL_WINDOWS)
@@ -660,16 +660,13 @@ _SCAN_BUDGET_EXEMPT = {
 }
 
 
-def test_every_query_within_scan_budget(spark):
+def test_every_query_within_scan_budget(all_queries):
     import re
 
-    import __spark_entry__ as entry
-
     over = {}
-    for name, fn in entry.queries().items():
+    for name, (_, plan) in all_queries.items():
         if name in _SCAN_BUDGET_EXEMPT:
             continue
-        plan = formatted_plan(fn(spark, SF_SMOKE))
         n = len(re.findall(r"\(\d+\) Scan parquet", plan))
         if n > _SCAN_BUDGET:
             over[name] = n

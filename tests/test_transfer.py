@@ -19,7 +19,7 @@ from dbtransfer_spark.config import (
     TableMapping,
 )
 from dbtransfer_spark.engine import TransferEngine
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, spark_job_ids
 
 
 def make_config(tmp_path, tables) -> Config:
@@ -130,25 +130,43 @@ def test_merge_keeps_source_column_order(spark, tmp_path):
     assert out.columns == src.columns
 
 
-def _job_ids(spark) -> set[int]:
-    sc = spark.sparkContext
-    # job starts reach the status tracker through the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    return set(sc.statusTracker().getJobIdsForGroup())
-
-
 def test_single_shot_merge_transfer_job_budget(spark, tmp_path):
-    """A one-table merge-path transfer is one job wave: the merge write
-    counts its own rows, so no count job runs beside it."""
+    """A one-table merge-path transfer is two jobs, the anti-join's key
+    broadcast and the write: the write counts its own rows, and both
+    schemas come from footers read on the driver."""
     name = "supplier"
     cfg = make_config(tmp_path, [TableMapping(name=name, primary_key="s_suppkey")])
     TransferEngine(spark, cfg).run()
     CheckpointStore(cfg.migration.checkpoint_dir).save(name, Checkpoint())
-    before = _job_ids(spark)
+    before = spark_job_ids(spark)
     results = TransferEngine(spark, cfg).run()
-    jobs = _job_ids(spark) - before
+    jobs = spark_job_ids(spark) - before
     assert "error" not in results[name], results[name]
-    assert len(jobs) <= 4, sorted(jobs)
+    assert len(jobs) <= 2, sorted(jobs)
+
+
+def test_chunked_merge_transfer_job_budget(spark, tmp_path, monkeypatch):
+    """A chunked merge-path transfer is the bounds probe plus two jobs
+    per chunk."""
+    name = "orders"
+    cfg = make_config(tmp_path, [TableMapping(name=name, primary_key="o_orderkey")])
+    TransferEngine(spark, cfg, chunk_rows=400).run()
+    CheckpointStore(cfg.migration.checkpoint_dir).save(name, Checkpoint())
+    engine = TransferEngine(spark, cfg, chunk_rows=400)
+    chunks = []
+    upsert = engine.sink.upsert
+
+    def counted_upsert(chunk, *args):
+        chunks.append(chunk)
+        return upsert(chunk, *args)
+
+    monkeypatch.setattr(engine.sink, "upsert", counted_upsert)
+    before = spark_job_ids(spark)
+    results = engine.run()
+    jobs = spark_job_ids(spark) - before
+    assert "error" not in results[name], results[name]
+    assert len(chunks) > 1
+    assert len(jobs) <= 2 + 2 * len(chunks), (len(chunks), sorted(jobs))
 
 
 def test_single_shot_progress_needs_no_count_rows(spark, tmp_path, monkeypatch):
@@ -229,6 +247,74 @@ def test_upsert_overwrites_by_key(spark, tmp_path):
         for r in spark.read.parquet(str(tmp_path / "up" / "region.parquet")).collect()
     }
     assert rows == {1: "a", 2: "B", 3: "c", 4: "d"}
+
+
+def _part_files(target: str) -> dict[str, int]:
+    import os
+
+    import pyarrow.parquet as pq
+
+    return {
+        f: pq.ParquetFile(os.path.join(target, f)).metadata.num_rows
+        for f in sorted(os.listdir(target))
+        if f.endswith(".parquet")
+    }
+
+
+def test_repeated_merge_writes_no_empty_part_file(spark, tmp_path):
+    """Spark writes partition 0 even when it is empty; the merge puts the
+    new rows there, so re-upserting a batch that replaces every key
+    leaves no zero-row file behind."""
+    from dbtransfer_spark.sources.parquet import ParquetSink
+
+    sink = ParquetSink(spark, DBConfig(type="parquet", database=str(tmp_path / "up")))
+    t = TableMapping(name="supplier")
+    batch = spark.read.parquet(f"{SF_SMOKE}/supplier.parquet")
+    for _ in range(3):
+        assert sink.upsert(batch, t, ["s_suppkey"]) == batch.count()
+    target = sink._path("supplier")
+    files = _part_files(target)
+    assert files and all(n > 0 for n in files.values()), files
+    assert sum(files.values()) == batch.count()
+    assert spark.read.parquet(target).exceptAll(batch).count() == 0
+
+
+def test_merge_of_a_column_the_target_lacks_raises(spark, tmp_path):
+    """A frame column the target lacks fails the merge before anything
+    is written, and the target keeps its files."""
+    from pyspark.errors import AnalysisException
+
+    from dbtransfer_spark.sources.parquet import ParquetSink
+
+    sink = ParquetSink(spark, DBConfig(type="parquet", database=str(tmp_path / "up")))
+    t = TableMapping(name="region")
+    sink.upsert(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"), t, ["k"])
+    target = sink._path("region")
+    before = _part_files(target)
+    wider = spark.createDataFrame([(2, "B", 7)], "k int, v string, w int")
+    with pytest.raises(AnalysisException):
+        sink.upsert(wider, t, ["k"])
+    assert _part_files(target) == before
+    rows = {r["k"]: r["v"] for r in spark.read.parquet(target).collect()}
+    assert rows == {1: "a", 2: "b"}
+
+
+def test_merge_drops_a_target_column_the_frame_lacks(spark, tmp_path):
+    """The merged target takes the frame's columns: a target column the
+    frame lacks is dropped."""
+    from dbtransfer_spark.sources.parquet import ParquetSink
+
+    sink = ParquetSink(spark, DBConfig(type="parquet", database=str(tmp_path / "up")))
+    t = TableMapping(name="region")
+    sink.upsert(
+        spark.createDataFrame([(1, "a", 10), (2, "b", 20)], "k int, v string, x int"),
+        t,
+        ["k"],
+    )
+    sink.upsert(spark.createDataFrame([(2, "B")], "k int, v string"), t, ["k"])
+    out = spark.read.parquet(sink._path("region"))
+    assert out.columns == ["k", "v"]
+    assert {r["k"]: r["v"] for r in out.collect()} == {1: "a", 2: "B"}
 
 
 def test_partitioned_upsert_rewrites_only_affected_partitions(spark, tmp_path):
