@@ -14,6 +14,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dbtransfer_spark.session import _default_parallelism
+
 TABLES = (
     "region",
     "nation",
@@ -170,11 +172,6 @@ def ensure_bucketed_basket(
         .saveAsTable(tbl)
     )
     return tbl
-
-
-def _default_parallelism() -> int:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    return max(1, int(cpus)) if cpus else (os.cpu_count() or 4)
 
 
 def create_bucketed_tables(

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from dbtransfer_spark.operators.dedup import minhash_signatures
 from dbtransfer_spark.pipelines import incremental_release, near_dup_against_corpus
 from dbtransfer_spark.sources.versioned import VersionedDatasetStore
 
@@ -73,18 +74,28 @@ def test_incremental_release_flow(spark, store):
     assert store.read(3).count() == 3
 
 
-def test_release_maintains_signature_index(spark, store, monkeypatch):
-    """r6: aligned releases sign ONLY the batch (the O(corpus)
-    re-signing is gone) and the stored index stays bit-equal to a fresh
-    signing of the corpus."""
+def _sig_rows(sigs):
+    return sorted((r["doc_id"], tuple(r["minhash"])) for r in sigs.collect())
+
+
+def _sign_spy(monkeypatch):
+    """Make the pipeline's signer record each frame it signs; returns
+    the record list."""
     import dbtransfer_spark.pipelines as P
 
-    orig = P.minhash_signatures
     signed = []
     monkeypatch.setattr(
         P, "minhash_signatures",
-        lambda df, *a, **k: (signed.append(df), orig(df, *a, **k))[1],
+        lambda df, *a, **k: (signed.append(df), minhash_signatures(df, *a, **k))[1],
     )
+    return signed
+
+
+def test_release_maintains_signature_index(spark, store, monkeypatch):
+    """r6: indexed releases sign ONLY the batch (the O(corpus)
+    re-signing is gone) and the index committed with each version stays
+    bit-equal to a fresh signing of the corpus."""
+    signed = _sign_spy(monkeypatch)
     incremental_release(spark, store, _docs(spark, [(1, BASE), (3, "short doc here")]))
     r2 = incremental_release(
         spark, store,
@@ -94,36 +105,39 @@ def test_release_maintains_signature_index(spark, store, monkeypatch):
     assert r2["n_dropped"] == 1 and r2["n_kept"] == 1
     # one signing per release (the batch); the corpus was never re-signed
     assert len(signed) == 2
-    sig_store = P._sig_store(store)
-    sv = sig_store.latest_version()
-    assert sig_store.manifest(sv)["note"] == P._sig_note(r2["version"])
-    stored = {(r["doc_id"], tuple(r["minhash"])) for r in sig_store.read().collect()}
-    fresh = {
-        (r["doc_id"], tuple(r["minhash"]))
-        for r in orig(store.read(), "doc_id", "text").collect()
-    }
-    assert stored == fresh
+    assert _sig_rows(store.read_index()) == _sig_rows(
+        minhash_signatures(store.read(), "doc_id", "text")
+    )
 
 
-def test_release_self_heals_stale_signature_index(spark, store):
-    """An out-of-band corpus commit desyncs the index; the next release
-    must still judge near-dups correctly (against the TRUE corpus) and
-    re-publish an aligned full signature snapshot."""
-    import dbtransfer_spark.pipelines as P
-
+def test_release_self_heals_stale_signature_index(spark, store, monkeypatch):
+    """An out-of-band corpus commit leaves the latest version without an
+    index; the next release must still judge near-dups correctly
+    (against the TRUE corpus), commit a full index, and the release
+    after it signs only its batch again."""
     incremental_release(spark, store, _docs(spark, [(1, BASE)]))
     other = " ".join(f"q{i}" for i in range(60))
-    store.commit_append(_docs(spark, [(500, other)]), note="out-of-band")
+    v = store.commit_append(_docs(spark, [(500, other)]), note="out-of-band")
+    assert store.read_index(v) is None
+    signed = _sign_spy(monkeypatch)
     r = incremental_release(
         spark, store,
         _docs(spark, [(601, other.replace("q59", "zz")),     # near-dup of 500
                       (602, " ".join(f"y{i}" for i in range(60)))]),
     )
     assert r["n_dropped"] == 1 and r["n_kept"] == 1
-    sig_store = P._sig_store(store)
-    sv = sig_store.latest_version()
-    assert sig_store.manifest(sv)["note"] == P._sig_note(r["version"])
-    assert sig_store.read().count() == store.read().count()
+    assert len(signed) == 2  # the batch, then the corpus once
+    assert _sig_rows(store.read_index()) == _sig_rows(
+        minhash_signatures(store.read(), "doc_id", "text")
+    )
+    r = incremental_release(
+        spark, store, _docs(spark, [(701, " ".join(f"z{i}" for i in range(60)))])
+    )
+    assert r["n_kept"] == 1
+    assert len(signed) == 3  # only the batch
+    assert _sig_rows(store.read_index()) == _sig_rows(
+        minhash_signatures(store.read(), "doc_id", "text")
+    )
 
 
 def test_compacting_release_counts_only_the_batch(spark, tmp_path):
@@ -151,6 +165,10 @@ def test_compacting_release_counts_only_the_batch(spark, tmp_path):
     assert 0 <= r["n_dropped"] <= r["n_batch"]
     assert (r["n_batch"], r["n_kept"], r["n_dropped"]) == (2, 1, 1)
     assert store.read(r["version"]).count() == size + r["n_kept"]
+    assert len(store.manifest(r["version"])["index_dirs"]) == 1
+    assert _sig_rows(store.read_index()) == _sig_rows(
+        minhash_signatures(store.read(), "doc_id", "text")
+    )
 
 
 def test_release_without_candidates_computes_the_batch_once(spark, store):

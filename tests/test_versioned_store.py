@@ -1,9 +1,9 @@
-"""Versioned dataset store: snapshot isolation, time travel, atomic
-latest-pointer swap, diff, and vacuum retention."""
+"""Versioned dataset store: snapshot isolation, time travel, the
+manifest link as the one atomic commit (crashes and a second writer),
+the sidecar index, diff, and vacuum retention."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -47,10 +47,10 @@ def test_diff_reports_adds_and_removes(spark, store):
     assert d == {"added": 2, "removed": 5}     # +{10,11}, -{0..4}
 
 
-def test_crash_before_pointer_swap_leaves_previous_latest(spark, store):
+def test_crash_before_manifest_leaves_previous_latest(spark, store):
     store.commit(_df(spark, range(4)))
-    # simulate a writer that died after writing data but before the swap:
-    # an orphaned data dir + no manifest/pointer update
+    # simulate a writer that died after writing data but before its
+    # manifest: an orphaned data dir + no manifest
     orphan = os.path.join(store.ddir, "v99-deadbeef")
     _df(spark, range(2)).write.parquet(orphan)
     assert store.latest_version() == 1
@@ -75,9 +75,7 @@ def test_vacuum_retention(spark, store):
     assert store.read(3).count() == 3
     with pytest.raises(FileNotFoundError):
         store.manifest(1)
-    # latest pointer survives and still resolves
-    with open(store._latest_path()) as f:
-        assert json.load(f)["version"] == 4
+    assert store.latest_version() == 4
 
 
 def test_commit_append_writes_only_batch_and_shares_parent_dirs(spark, store):
@@ -137,3 +135,132 @@ def test_compaction_preserves_vacuumed_storage_bound(spark, tmp_path):
     # only the dirs the kept manifest references remain on disk
     assert sorted(os.listdir(store.ddir)) == sorted(store.manifest(v)["data_dirs"])
     assert len(os.listdir(store.ddir)) <= 2
+
+
+def _idx(spark, ids):
+    return spark.createDataFrame([(i, f"s{i}") for i in ids], "doc_id long, sig string")
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_index_follows_appends_compacts_and_drops(spark, tmp_path):
+    """An index given with each commit chains like the data dirs and is
+    rewritten beside them on compaction; a commit without one leaves
+    the new version unindexed."""
+    store = VersionedDatasetStore(spark, str(tmp_path), "corpus", max_data_dirs=2)
+    store.commit(_df(spark, [0, 1]), index=_idx(spark, [0, 1]))
+    v2 = store.commit_append(_df(spark, [2]), index=_idx(spark, [2]))
+    m2 = store.manifest(v2)
+    assert m2["index_dirs"][0] == store.manifest(1)["index_dirs"][0]
+    assert len(m2["index_dirs"]) == 2
+    assert _rows(store.read_index()) == _rows(_idx(spark, [0, 1, 2]))
+    v3 = store.commit_append(_df(spark, [3]), index=_idx(spark, [3]))
+    m3 = store.manifest(v3)
+    assert m3["compaction"] and len(m3["data_dirs"]) == len(m3["index_dirs"]) == 1
+    assert _rows(store.read_index(v3)) == _rows(_idx(spark, [0, 1, 2, 3]))
+    # a plain append: the parent's index does not cover the new rows
+    v4 = store.commit_append(_df(spark, [4]))
+    assert "index_dirs" not in store.manifest(v4)
+    assert store.read_index(v4) is None
+    assert store.read(v4).count() == 5
+    assert _rows(store.read_index(v3)) == _rows(_idx(spark, [0, 1, 2, 3]))
+
+
+def test_index_write_failure_publishes_nothing(spark, store):
+    store.commit(_df(spark, range(3)), index=_idx(spark, range(3)))
+    before = _rows(store.read_index())
+
+    def boom(_):
+        raise RuntimeError("index write failed")
+
+    bad = _idx(spark, [7]).withColumn("sig", F.udf(boom, "string")("doc_id"))
+    with pytest.raises(Exception, match="index write failed"):
+        store.commit_append(_df(spark, [7]), index=bad)
+    # the data write succeeded, yet no version appeared
+    assert store.versions() == [1]
+    assert store.latest_version() == 1
+    assert _rows(store.read_index()) == before
+    assert len(os.listdir(store.ddir)) > 2  # the failed commit's orphans
+    store.vacuum(keep_last=1, grace_seconds=0)
+    m1 = store.manifest(1)
+    assert sorted(os.listdir(store.ddir)) == sorted(m1["data_dirs"] + m1["index_dirs"])
+    assert store.read().count() == 3
+
+
+def test_crash_before_manifest_link_leaves_previous_version(spark, store, monkeypatch):
+    """A writer that dies after writing its temp manifest but before the
+    link leaves only a hidden temp file: no version, nothing visible."""
+    store.commit(_df(spark, range(4)), index=_idx(spark, range(4)))
+    before = _rows(store.read_index())
+
+    class Died(BaseException):
+        pass
+
+    def die(src, dst):
+        raise Died
+
+    real_unlink = os.unlink
+    monkeypatch.setattr(os, "link", die)
+    # the process is gone: nothing cleans the temp manifest up
+    monkeypatch.setattr(
+        os, "unlink", lambda p, *a, **k: None if p.endswith(".tmp") else real_unlink(p, *a, **k)
+    )
+    with pytest.raises(Died):
+        store.commit_append(_df(spark, [9]), index=_idx(spark, [9]))
+    monkeypatch.undo()
+    (tmp,) = [n for n in os.listdir(store.vdir) if n.endswith(".tmp")]
+    assert tmp.startswith(".v00000002.")
+    assert store.versions() == [1]
+    assert store.latest_version() == 1
+    assert store.read().count() == 4
+    assert _rows(store.read_index()) == before
+    assert store.commit_append(_df(spark, [9]), index=_idx(spark, [9])) == 2
+
+
+def test_racing_writer_raises_and_keeps_first_manifest(spark, store, tmp_path, monkeypatch):
+    """Two writers that mint the same version: the second one's publish
+    raises instead of overwriting the first's manifest."""
+    other = VersionedDatasetStore(spark, str(tmp_path), "corpus")
+    store.commit(_df(spark, range(2)))
+    # ``other`` read the latest version before ``store`` committed v2
+    monkeypatch.setattr(other, "latest_version", lambda: 1)
+    store.commit_append(_df(spark, [5]), note="first writer")
+    with open(store._manifest_path(2), "rb") as f:
+        published = f.read()
+    with pytest.raises(FileExistsError):
+        other.commit_append(_df(spark, [6]), note="second writer")
+    with open(store._manifest_path(2), "rb") as f:
+        assert f.read() == published
+    assert store.versions() == [1, 2]
+    assert not [n for n in os.listdir(store.vdir) if n.endswith(".tmp")]
+    assert sorted(r["doc_id"] for r in store.read().collect()) == [0, 1, 5]
+
+
+def test_vacuum_keeps_index_dirs_of_kept_versions(spark, store):
+    store.commit(_df(spark, [0]), index=_idx(spark, [0]))
+    store.commit(_df(spark, [1]), index=_idx(spark, [1]))
+    store.commit_append(_df(spark, [2]), index=_idx(spark, [2]))
+    m1 = store.manifest(1)
+    assert store.vacuum(keep_last=2, grace_seconds=0) == [1]
+    m2, m3 = store.manifest(2), store.manifest(3)
+    kept = set(m2["data_dirs"] + m2["index_dirs"] + m3["data_dirs"] + m3["index_dirs"])
+    assert set(os.listdir(store.ddir)) == kept
+    assert not set(m1["data_dirs"] + m1["index_dirs"]) & kept
+    assert _rows(store.read_index(2)) == _rows(_idx(spark, [1]))
+    assert _rows(store.read_index(3)) == _rows(_idx(spark, [1, 2]))
+
+
+def test_indexed_commit_runs_in_the_callers_job_group(spark, store):
+    """The data and index writes run on pool threads; they must still
+    carry the caller's job group, or cancelling it would miss them."""
+    sc = spark.sparkContext
+    sc.setJobGroup("indexed-commit", "indexed commit")
+    try:
+        store.commit(_df(spark, range(3)), index=_idx(spark, range(3)))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    assert len(sc.statusTracker().getJobIdsForGroup("indexed-commit")) == 2
