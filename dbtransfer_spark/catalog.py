@@ -326,12 +326,16 @@ def compact_small_files(
     right for compaction; use optimize_layout afterwards if key
     clustering is also wanted.
 
-    Staged write + atomic directory swap, same crash contract as the
-    parquet sink. Returns (files_before, files_after)."""
+    Staged write + the sink's directory swap (``sources.parquet.
+    replace_dir``): a compaction stopped at any step of the swap is
+    finished or undone by the next writer's ``recover_dir``, which runs
+    first here too. Returns (files_before, files_after)."""
     import math
-    import shutil
-    import uuid
 
+    from dbtransfer_spark.sources.parquet import recover_dir, replace_dir
+
+    path = path.rstrip("/")
+    recover_dir(path)
     files = [
         os.path.join(dp, f)
         for dp, _, fs in os.walk(path)
@@ -344,10 +348,9 @@ def compact_small_files(
     if n_target >= n_before:
         return n_before, n_before
     df = spark.read.parquet(path)
-    staging = path.rstrip("/") + f".compact-{uuid.uuid4().hex[:8]}"
+    staging = f"{path}.__staging"
     df.coalesce(n_target).write.mode("overwrite").parquet(staging)
-    shutil.rmtree(path)
-    os.rename(staging, path)
+    replace_dir(staging, path)
     n_after = len(
         [f for f in os.listdir(path) if f.startswith("part-")]
     )

@@ -7,10 +7,6 @@ named ``<engine>_<table>.checkpoint`` (mysql.go:550), written atomically
 via tmp-file + fsync + rename (mysql.go:553-575). A checkpoint written by
 the reference tool is found and resumed from, and vice versa.
 
-Trigger policy (mysql.go:332-355 / config.go:71-79): persist when rows
-since last save ≥ ``row_threshold`` OR elapsed ≥ ``interval`` seconds, and
-always at completion with ``complete=true``.
-
 The checkpoint is *driver-side* state: the watermark it records becomes a
 ``pk > watermark`` filter that Catalyst pushes into the source scan (P4-P6
 in SURVEY.md §2.3), so resume costs one pruned scan, not a replay — the same
@@ -23,7 +19,7 @@ from __future__ import annotations
 
 import json
 import os
-import time
+import uuid
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from typing import Any
@@ -76,10 +72,11 @@ class CheckpointStore:
             return None  # corrupt checkpoint == no checkpoint; restart safely
 
     def save(self, table: str, ckpt: Checkpoint) -> None:
-        """Atomic write: tmp + fsync + rename (mysql.go:553-575)."""
+        """Atomic write: tmp + fsync + rename (mysql.go:553-575). Each
+        save has its own temp file, so concurrent saves never share one."""
         ckpt.last_updated = datetime.now(timezone.utc).isoformat()
         path = self._path(table)
-        tmp = f"{path}.tmp"
+        tmp = f"{path}.{uuid.uuid4().hex}.tmp"
         with open(tmp, "w") as fh:
             json.dump(ckpt.to_json(), fh, indent=2)
             fh.flush()
@@ -106,23 +103,3 @@ class CheckpointStore:
             return None
         return ckpt.last_key.get(key)
 
-
-class CheckpointPolicy:
-    """Row-threshold / time-interval trigger (mysql.go:332-355)."""
-
-    def __init__(self, row_threshold: int = 1000, interval_s: float = 1.0):
-        self.row_threshold = row_threshold
-        self.interval_s = interval_s
-        self._rows_since = 0
-        self._last_save = time.monotonic()
-
-    def observe(self, rows: int) -> bool:
-        """Record ``rows`` processed; return True when a save is due."""
-        self._rows_since += rows
-        if self._rows_since >= self.row_threshold:
-            return True
-        return (time.monotonic() - self._last_save) >= self.interval_s
-
-    def saved(self) -> None:
-        self._rows_since = 0
-        self._last_save = time.monotonic()

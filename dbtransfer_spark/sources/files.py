@@ -6,10 +6,12 @@ The reference speaks only database wire protocols; on Spark the native
 DataSource readers give these formats the same first-class treatment:
 schema-on-read with explicit StructType, malformed-record CAPTURE instead
 of job failure (``PERMISSIVE`` + ``columnNameOfCorruptRecord``), and
-pushdown-friendly column pruning. The sinks implement the same
-idempotent merge-by-key upsert contract as the parquet sink
-(SURVEY.md §2.5): anti-join the existing rows on key, union the batch,
-stage to a scratch path, atomic directory swap.
+pushdown-friendly column pruning. The source and sink are the parquet
+ones (``sources/parquet.py``) with a format, an extension and reader/
+writer options: one merge-by-key upsert (SURVEY.md §2.5), staged and
+swapped in by the same recoverable directory swap. The JSONL sink
+writes null fields, so a column that is null in every stored row keeps
+its place in the inferred target schema.
 
 Scale notes: JSONL/CSV are splittable (uncompressed / bzip2), so a
 100 TB dump parallelizes by HDFS block without any driver-side work;
@@ -20,19 +22,15 @@ extra string column, versus a re-read under FAILFAST.
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dbtransfer_spark.config import TableMapping
-from dbtransfer_spark.observe import observe_count
-from dbtransfer_spark.sources.base import Sink, Source
+from dbtransfer_spark.sources.parquet import ParquetSink, ParquetSource, read_files
 
 CORRUPT_COL = "_corrupt_record"
+_CSV_READ = {"header": "true", "inferSchema": "true"}
 
 
 def read_jsonl(
@@ -49,17 +47,7 @@ def read_jsonl(
     the raw line preserved, instead of failing the job or silently
     dropping (Spark's default PERMISSIVE without the column loses the
     original line)."""
-    full = schema
-    if capture_corrupt and CORRUPT_COL not in schema.fieldNames():
-        full = T.StructType(
-            list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
-        )
-    return (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .json(path)
-    )
+    return _read_permissive(spark, "json", path, schema, capture_corrupt)
 
 
 def read_csv(
@@ -72,18 +60,28 @@ def read_csv(
 ) -> DataFrame:
     """Schema-on-read CSV with malformed-row capture (same contract as
     :func:`read_jsonl`)."""
-    full = schema
+    return _read_permissive(
+        spark, "csv", path, schema, capture_corrupt, header=str(header).lower(), sep=sep
+    )
+
+
+def _read_permissive(
+    spark: SparkSession,
+    fmt: str,
+    path: str,
+    schema: T.StructType,
+    capture_corrupt: bool = True,
+    **options: str,
+) -> DataFrame:
     if capture_corrupt and CORRUPT_COL not in schema.fieldNames():
-        full = T.StructType(
+        schema = T.StructType(
             list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
         )
     return (
-        spark.read.schema(full)
-        .option("header", str(header).lower())
-        .option("sep", sep)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .csv(path)
+        spark.read.schema(schema)
+        .format(fmt)
+        .options(mode="PERMISSIVE", columnNameOfCorruptRecord=CORRUPT_COL, **options)
+        .load(path)
     )
 
 
@@ -107,125 +105,44 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     return clean, bad
 
 
-def _infer_schema_from_sample(spark: SparkSession, path: str, fmt: str):
-    """Fixture-scale fallback when no schema is configured: infer from
-    the file. Only reached in tests/CLI smoke paths — the scale path
-    always configures an explicit schema."""
-    if fmt == "jsonl":
-        return spark.read.json(path).schema
-    return spark.read.option("header", "true").option(
-        "inferSchema", "true"
-    ).csv(path).schema
-
-
-class _FileSource(Source):
-    FMT = "jsonl"
-    EXT = "jsonl"
-
-    def _path(self, name: str) -> str:
-        return os.path.join(self.cfg.database, f"{name}.{self.EXT}")
-
-    def _schema(self, table: TableMapping):
-        return _infer_schema_from_sample(
-            self.spark, self._path(table.name), self.FMT
-        )
+class _FileSource(ParquetSource):
+    """Reads with malformed-row capture; ``read`` is the clean half of
+    :meth:`read_with_quarantine`. The schema is inferred from the file,
+    which suits fixtures and CLI smoke runs; the scale path passes an
+    explicit schema to :func:`read_jsonl` / :func:`read_csv`."""
 
     def read(self, table: TableMapping) -> DataFrame:
-        path = self._path(table.name)
-        schema = self._schema(table)
-        if self.FMT == "jsonl":
-            df = read_jsonl(self.spark, path, schema)
-        else:
-            df = read_csv(self.spark, path, schema)
-        clean, _ = split_corrupt(df)
-        return clean
+        return self.read_with_quarantine(table)[0]
 
     def read_with_quarantine(
         self, table: TableMapping
     ) -> tuple[DataFrame, DataFrame]:
         path = self._path(table.name)
-        schema = self._schema(table)
-        if self.FMT == "jsonl":
-            df = read_jsonl(self.spark, path, schema)
-        else:
-            df = read_csv(self.spark, path, schema)
-        return split_corrupt(df)
-
-    def detect_primary_key(self, table: TableMapping) -> list[str]:
-        if table.primary_key:
-            return [c.strip() for c in table.primary_key.split(",")]
-        from dbtransfer_spark.catalog import PRIMARY_KEYS
-
-        if table.name in PRIMARY_KEYS:
-            return list(PRIMARY_KEYS[table.name])
-        return [self.read(table).columns[0]]
-
-    def table_exists(self, table: TableMapping) -> bool:
-        return os.path.exists(self._path(table.name))
+        schema = read_files(self.spark, self.FORMAT, path, self.READ_OPTIONS).schema
+        return split_corrupt(
+            _read_permissive(self.spark, self.FORMAT, path, schema, **self.READ_OPTIONS)
+        )
 
 
 class JsonlSource(_FileSource):
-    FMT = "jsonl"
+    FORMAT = "json"
     EXT = "jsonl"
 
 
 class CsvSource(_FileSource):
-    FMT = "csv"
+    FORMAT = "csv"
     EXT = "csv"
+    READ_OPTIONS = _CSV_READ
 
 
-class _FileSink(Sink):
-    FMT = "json"
+class JsonlSink(ParquetSink):
+    FORMAT = "json"
     EXT = "jsonl"
-
-    def _path(self, name: str) -> str:
-        return os.path.join(self.cfg.database, f"{name}.{self.EXT}")
-
-    def _write(self, df: DataFrame, path: str) -> None:
-        w = df.write.mode("overwrite")
-        if self.FMT == "csv":
-            w = w.option("header", "true")
-        getattr(w, "json" if self.FMT == "json" else "csv")(path)
-
-    def _read(self, spark: SparkSession, path: str) -> DataFrame:
-        if self.FMT == "json":
-            return spark.read.json(path)
-        return (
-            spark.read.option("header", "true")
-            .option("inferSchema", "true")
-            .csv(path)
-        )
-
-    def upsert(
-        self, df: DataFrame, table: TableMapping, key_columns: list[str]
-    ) -> int:
-        target = self._path(table.effective_target)
-        os.makedirs(self.cfg.database, exist_ok=True)
-        # the row count rides the write, observed on the new rows' branch
-        new, n_new = observe_count(df, f"rows upserted into {target}")
-        if not os.path.exists(target):
-            self._write(new, target)
-            return n_new()
-        # in df's session, where the Observation is registered
-        existing = self._read(df.sparkSession, target)
-        kept = existing.join(
-            df.select(*key_columns).distinct(), key_columns, "left_anti"
-        )
-        merged = kept.select(*existing.columns).unionByName(
-            new.select(*existing.columns), allowMissingColumns=True
-        )
-        staging = target + f".staging-{uuid.uuid4().hex[:8]}"
-        self._write(merged, staging)
-        shutil.rmtree(target)
-        os.rename(staging, target)
-        return n_new()
+    WRITE_OPTIONS = {"ignoreNullFields": "false"}
 
 
-class JsonlSink(_FileSink):
-    FMT = "json"
-    EXT = "jsonl"
-
-
-class CsvSink(_FileSink):
-    FMT = "csv"
+class CsvSink(ParquetSink):
+    FORMAT = "csv"
     EXT = "csv"
+    READ_OPTIONS = _CSV_READ
+    WRITE_OPTIONS = {"header": "true"}

@@ -7,12 +7,25 @@ the same *idempotent upsert* contract as the reference's DB writers
 
     merged = target ⟕anti⟖ new  ∪  new        (new rows win on key clash)
 
+``ParquetSink.upsert`` is the one upsert of every file sink: ORC, JSONL
+and CSV (``sources/files.py``) subclass it and set only the format, the
+extension and their reader/writer options.
+
+An unpartitioned merge is written to ``<target>.__staging`` and swapped
+in by :func:`replace_dir`. Every writer first runs :func:`recover_dir`,
+which undoes a swap that stopped at any step, so a retried batch always
+merges into the full table (the idempotence the engine's retries rely
+on). The store is single-writer per table, so the sibling names are
+fixed.
+
 Scale path (100 TB): full-rewrite MERGE is O(target); when the destination
-is partitioned (``partition_by``), we use dynamic partition overwrite so
-only partitions actually touched by the incoming batch are rewritten —
-the parquet equivalent of the reference writing only the rows in the batch
-(mysql.go:455-476). Combined with a PK-range chunked transfer this bounds
-each commit's write amplification.
+is partitioned (``partition_by``), one dynamic partition overwrite
+rewrites only the partitions the incoming batch touches — the parquet
+equivalent of the reference writing only the rows in the batch
+(mysql.go:455-476). It reads and replaces the target in the same write:
+Spark's overwrite-while-reading guard applies only to static overwrite,
+and dynamic overwrite commits through its own staging directory. That
+commit is Spark's, and not atomic across partitions.
 
 The rows written are counted on the write itself: a COUNT Observation on
 the ``new`` branch of the merge (``dbtransfer_spark.observe``), so an
@@ -32,7 +45,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,15 +55,20 @@ from dbtransfer_spark.observe import observe_count
 from dbtransfer_spark.sources.base import Sink, Source
 
 
-class ParquetSource(Source):
+class _FileTable:
+    """A table is the file or directory ``<database>/<name>.<EXT>``."""
+
     FORMAT = "parquet"  # any self-describing splittable columnar format
     EXT = "parquet"
+    READ_OPTIONS: dict[str, str] = {}
 
     def _path(self, name: str) -> str:
         return os.path.join(self.cfg.database, f"{name}.{self.EXT}")
 
+
+class ParquetSource(_FileTable, Source):
     def read(self, table: TableMapping) -> DataFrame:
-        return read_files(self.spark, self.FORMAT, self._path(table.name))
+        return read_files(self.spark, self.FORMAT, self._path(table.name), self.READ_OPTIONS)
 
     def detect_primary_key(self, table: TableMapping) -> list[str]:
         if table.primary_key:
@@ -68,65 +85,71 @@ class ParquetSource(Source):
         return os.path.exists(self._path(table.name))
 
 
-class ParquetSink(Sink):
-    FORMAT = "parquet"
-    EXT = "parquet"
+class ParquetSink(_FileTable, Sink):
+    WRITE_OPTIONS: dict[str, str] = {}
 
     def __init__(self, spark, cfg, partition_by: list[str] | None = None):
         super().__init__(spark, cfg)
         self.partition_by = partition_by or []
 
-    def _path(self, name: str) -> str:
-        return os.path.join(self.cfg.database, f"{name}.{self.EXT}")
-
     def upsert(self, df: DataFrame, table: TableMapping, key_columns: list[str]) -> int:
         target = self._path(table.effective_target)
         os.makedirs(self.cfg.database, exist_ok=True)
+        recover_dir(target)
         # The row count rides the write: observed on the branch that
         # carries the new rows, never on the anti-join's key side.
         new, n_new = observe_count(df, f"rows upserted into {target}")
-        if not os.path.exists(target):
-            writer = new.write.mode("overwrite")
+        merged, exists = new, os.path.exists(target)
+        if exists:
+            # read in df's session, so the merge runs where the Observation
+            # is registered (foreachBatch hands over a cloned session's frame)
+            existing = read_files(df.sparkSession, self.FORMAT, target, self.READ_OPTIONS)
             if self.partition_by:
-                writer = writer.partitionBy(*self.partition_by)
-            writer.format(self.FORMAT).save(target)
-            return n_new()
-        # read in df's session, so the merge runs where the Observation
-        # is registered (foreachBatch hands over a cloned session's frame)
-        existing = read_files(df.sparkSession, self.FORMAT, target)
+                parts = df.select(*self.partition_by).distinct()
+                existing = existing.join(F.broadcast(parts), self.partition_by, "left_semi")
+            merged = _merge(existing, df, new, key_columns)
+        writer = merged.write.mode("overwrite").format(self.FORMAT).options(**self.WRITE_OPTIONS)
         if self.partition_by:
-            # Rewrite only affected partitions (dynamic overwrite). The
-            # merged batch is staged to a scratch dir first: Spark's file
-            # sink refuses to overwrite a path that one of its own inputs
-            # is lazily reading from ('Cannot overwrite a path that is
-            # also being read from'), so the dynamic-overwrite pass reads
-            # the staged copy, never `target` itself.
-            parts = df.select(*self.partition_by).distinct()
-            affected = existing.join(F.broadcast(parts), self.partition_by, "left_semi")
-            merged = _merge(affected, df, new, key_columns)
-            tmp = f"{target}.__staging_{uuid.uuid4().hex[:8]}"
-            merged.write.mode("overwrite").format(self.FORMAT).save(tmp)
-            try:
-                (
-                    read_files(self.spark, self.FORMAT, tmp)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy(*self.partition_by)
-                    .format(self.FORMAT)
-                    .save(target)
-                )
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
-            return n_new()
-        merged = _merge(existing, df, new, key_columns)
-        # Cannot overwrite a path while lazily reading it: stage then swap.
-        tmp = f"{target}.__staging_{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").format(self.FORMAT).save(tmp)
-        old = f"{target}.__old_{uuid.uuid4().hex[:8]}"
-        os.replace(target, old) if os.path.isfile(target) else shutil.move(target, old)
-        shutil.move(tmp, target)
-        shutil.rmtree(old, ignore_errors=True)
+            writer = writer.partitionBy(*self.partition_by)
+        if exists and self.partition_by:
+            # rewrites only the partitions the batch touches
+            writer.option("partitionOverwriteMode", "dynamic").save(target)
+        else:
+            writer.save(f"{target}.__staging")
+            replace_dir(f"{target}.__staging", target)
         return n_new()
+
+
+def replace_dir(staging: str, target: str) -> None:
+    """Put ``staging`` in ``target``'s place: rename ``target`` to
+    ``<target>.__old``, rename ``staging`` to ``target``, remove the old
+    copy. A stop between any two steps is undone by :func:`recover_dir`."""
+    old = f"{target}.__old"
+    if os.path.exists(target):
+        os.rename(target, old)
+    os.rename(staging, target)
+    _remove(old)
+
+
+def recover_dir(target: str) -> None:
+    """Finish or undo a :func:`replace_dir` that stopped part way, before
+    a writer looks at ``target``: with no ``target``, the old copy goes
+    back; with both, the old copy goes. A leftover staging dir is never
+    the table, so it is always removed."""
+    old = f"{target}.__old"
+    if os.path.exists(old):
+        if os.path.exists(target):
+            _remove(old)
+        else:
+            os.rename(old, target)
+    _remove(f"{target}.__staging")
+
+
+def _remove(path: str) -> None:
+    if os.path.isdir(path):
+        shutil.rmtree(path)
+    elif os.path.exists(path):
+        os.remove(path)
 
 
 def _merge(
@@ -142,9 +165,11 @@ def _merge(
     return new.unionByName(kept.select(*df.columns))
 
 
-def read_files(spark: SparkSession, fmt: str, path: str) -> DataFrame:
-    """``spark.read.format(fmt).load(path)``, minus Spark's schema job
-    where it can be skipped.
+def read_files(
+    spark: SparkSession, fmt: str, path: str, options: dict[str, str] | None = None
+) -> DataFrame:
+    """``spark.read.format(fmt).options(**options).load(path)``, minus
+    Spark's schema job where it can be skipped.
 
     Spark infers a parquet schema with a one-task job that reads one
     footer. For a local parquet file or flat directory, with schema
@@ -154,7 +179,7 @@ def read_files(spark: SparkSession, fmt: str, path: str) -> DataFrame:
     directories, summary files, merged schemas) is Spark's own."""
     schema = _footer_schema(spark, path) if fmt == "parquet" else None
     reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.format(fmt).load(path)
+    return reader.format(fmt).options(**(options or {})).load(path)
 
 
 def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
@@ -224,8 +249,7 @@ class OrcSource(ParquetSource):
 
 
 class OrcSink(ParquetSink):
-    """ORC sink with the identical idempotent merge-by-key upsert and
-    dynamic-partition-overwrite scale path as the parquet sink."""
+    """ORC sink: the parquet sink's upsert, written as ORC."""
 
     FORMAT = "orc"
     EXT = "orc"

@@ -64,11 +64,11 @@ enforces it: ``os.link`` refuses an existing name, so a second writer
 that minted the same version raises ``FileExistsError`` and leaves the
 first one's manifest untouched — Delta/Iceberg's put-if-absent rule.
 Readers are unaffected (snapshot isolation). A crash leaves at most an
-orphan directory or a hidden temp manifest, never a visible version.
-``vacuum`` skips unreferenced directories younger than
-``grace_seconds`` so a cleanup running beside an in-flight commit
-(data is written before its manifest exists) cannot clobber it — the
-standard orphan-cleanup guard.
+orphan directory or a hidden temp manifest, never a visible version;
+``vacuum`` reclaims both. It skips those younger than ``grace_seconds``
+so a cleanup running beside an in-flight commit (data is written before
+its manifest exists) cannot clobber it — the standard orphan-cleanup
+guard.
 """
 
 from __future__ import annotations
@@ -336,7 +336,9 @@ class VersionedDatasetStore:
         the grace window a vacuum running beside an in-flight commit
         would delete the half-published data dir (the same
         orphan-retention rule as Delta's ``VACUUM ... RETAIN``). Pass
-        ``grace_seconds=0`` only when no writer can be active."""
+        ``grace_seconds=0`` only when no writer can be active. Hidden
+        temp manifests (``.v*.tmp``, left by a writer that died before
+        its link) older than the grace window are deleted too."""
         vs = self.versions()
         keep = set(vs[-max(keep_last, 1):])
         dropped = [v for v in vs if v not in keep]
@@ -347,14 +349,22 @@ class VersionedDatasetStore:
         for v in dropped:
             os.remove(self._manifest_path(v))
         cutoff = time.time() - grace_seconds
-        for name in os.listdir(self.ddir):
-            if name in kept_dirs:
-                continue
-            path = os.path.join(self.ddir, name)
+        orphans = [
+            os.path.join(self.ddir, n) for n in os.listdir(self.ddir) if n not in kept_dirs
+        ]
+        orphans += [
+            os.path.join(self.vdir, n)
+            for n in os.listdir(self.vdir)
+            if n.startswith(".v") and n.endswith(".tmp")
+        ]
+        for path in orphans:
             try:
                 if os.path.getmtime(path) > cutoff:
-                    continue  # possibly an in-flight commit's data
+                    continue  # possibly an in-flight commit's data or manifest
+                if os.path.isdir(path):
+                    shutil.rmtree(path, ignore_errors=True)
+                else:
+                    os.remove(path)
             except OSError:
                 continue
-            shutil.rmtree(path, ignore_errors=True)
         return dropped

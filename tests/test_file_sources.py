@@ -114,6 +114,18 @@ def test_jsonl_sink_upsert_is_idempotent_and_merges(spark, tmp_path):
     assert again == got
 
 
+def test_jsonl_sink_keeps_a_column_null_in_every_stored_row(spark, tmp_path):
+    """A column null in every stored row stays in the target's inferred
+    schema, so a later batch's values for it are merged, not dropped."""
+    sink = fsrc.JsonlSink(spark, DBConfig(type="jsonl", database=str(tmp_path)))
+    tm = TableMapping(name="t")
+    schema = "id long, note string"
+    sink.upsert(spark.createDataFrame([(1, None), (2, None)], schema), tm, ["id"])
+    sink.upsert(spark.createDataFrame([(2, "set"), (3, "new")], schema), tm, ["id"])
+    got = {(r["id"], r["note"]) for r in spark.read.json(str(tmp_path / "t.jsonl")).collect()}
+    assert got == {(1, None), (2, "set"), (3, "new")}
+
+
 def test_engine_transfers_orc_roundtrip(spark, tmp_path):
     """ORC source → engine → ORC sink, then an overlapping second batch:
     the merge-by-key upsert contract must hold format-independently."""

@@ -656,10 +656,11 @@ def test_versioned_store_matches_model(spark, tmp_path_factory, ops):
 
 # ---------------------------------------------------------------------------
 # File-sink upsert ≡ dict model, for any batch sequence (overlaps, updates,
-# replays) and both columnar formats
+# replays) and every file format
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.parametrize("fmt", ["parquet", "orc", "jsonl", "csv"])
 @given(
     batches=st.lists(
         st.lists(
@@ -670,23 +671,22 @@ def test_versioned_store_matches_model(spark, tmp_path_factory, ops):
         min_size=1,
         max_size=5,
     ),
-    fmt=st.sampled_from(["parquet", "orc"]),
 )
 @settings(
     max_examples=10,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-def test_columnar_sink_upsert_matches_model(spark, tmp_path_factory, batches, fmt):
+def test_columnar_sink_upsert_matches_model(spark, tmp_path_factory, fmt, batches):
     """Any sequence of overlapping upsert batches: the sink must equal a
     last-write-wins dict (within a batch, duplicate keys may keep either
     row — the model tracks the admissible set)."""
     from dbtransfer_spark.config import DBConfig, TableMapping
-    from dbtransfer_spark.sources.parquet import OrcSink, ParquetSink
+    from dbtransfer_spark.sources.base import get_sink
+    from dbtransfer_spark.sources.parquet import read_files
 
     d = str(tmp_path_factory.mktemp("sink"))
-    sink_cls = ParquetSink if fmt == "parquet" else OrcSink
-    sink = sink_cls(spark, DBConfig(type=fmt, database=d))
+    sink = get_sink(spark, DBConfig(type=fmt, database=d))
     tm = TableMapping(name="t")
     model: dict[int, set[int]] = {}
     for batch in batches:
@@ -698,7 +698,7 @@ def test_columnar_sink_upsert_matches_model(spark, tmp_path_factory, batches, fm
         model.update(per_key)   # batch replaces key-wise
         got = {
             r["id"]: r["v"]
-            for r in sink.spark.read.format(fmt).load(f"{d}/t.{fmt}").collect()
+            for r in read_files(spark, sink.FORMAT, sink._path("t"), sink.READ_OPTIONS).collect()
         }
         assert set(got) == set(model)
         for k, v in got.items():

@@ -279,32 +279,55 @@ def test_repeated_merge_writes_no_empty_part_file(spark, tmp_path):
     assert spark.read.parquet(target).exceptAll(batch).count() == 0
 
 
-def test_merge_of_a_column_the_target_lacks_raises(spark, tmp_path):
+FILE_FORMATS = ["parquet", "orc", "jsonl", "csv"]
+
+
+def _file_sink(spark, database, fmt):
+    from dbtransfer_spark.sources.base import get_sink
+
+    return get_sink(spark, DBConfig(type=fmt, database=str(database)))
+
+
+def _read_back(spark, sink, name):
+    fmt, options = {
+        "parquet": ("parquet", {}),
+        "orc": ("orc", {}),
+        "jsonl": ("json", {}),
+        "csv": ("csv", {"header": "true", "inferSchema": "true"}),
+    }[sink.cfg.type]
+    return spark.read.format(fmt).options(**options).load(sink._path(name))
+
+
+def _file_sizes(target: str) -> dict[str, int]:
+    import os
+
+    return {f: os.path.getsize(os.path.join(target, f)) for f in sorted(os.listdir(target))}
+
+
+@pytest.mark.parametrize("fmt", FILE_FORMATS)
+def test_merge_of_a_column_the_target_lacks_raises(spark, tmp_path, fmt):
     """A frame column the target lacks fails the merge before anything
     is written, and the target keeps its files."""
     from pyspark.errors import AnalysisException
 
-    from dbtransfer_spark.sources.parquet import ParquetSink
-
-    sink = ParquetSink(spark, DBConfig(type="parquet", database=str(tmp_path / "up")))
+    sink = _file_sink(spark, tmp_path / "up", fmt)
     t = TableMapping(name="region")
     sink.upsert(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"), t, ["k"])
     target = sink._path("region")
-    before = _part_files(target)
+    before = _file_sizes(target)
     wider = spark.createDataFrame([(2, "B", 7)], "k int, v string, w int")
     with pytest.raises(AnalysisException):
         sink.upsert(wider, t, ["k"])
-    assert _part_files(target) == before
-    rows = {r["k"]: r["v"] for r in spark.read.parquet(target).collect()}
+    assert _file_sizes(target) == before
+    rows = {r["k"]: r["v"] for r in _read_back(spark, sink, "region").collect()}
     assert rows == {1: "a", 2: "b"}
 
 
-def test_merge_drops_a_target_column_the_frame_lacks(spark, tmp_path):
+@pytest.mark.parametrize("fmt", FILE_FORMATS)
+def test_merge_drops_a_target_column_the_frame_lacks(spark, tmp_path, fmt):
     """The merged target takes the frame's columns: a target column the
     frame lacks is dropped."""
-    from dbtransfer_spark.sources.parquet import ParquetSink
-
-    sink = ParquetSink(spark, DBConfig(type="parquet", database=str(tmp_path / "up")))
+    sink = _file_sink(spark, tmp_path / "up", fmt)
     t = TableMapping(name="region")
     sink.upsert(
         spark.createDataFrame([(1, "a", 10), (2, "b", 20)], "k int, v string, x int"),
@@ -312,9 +335,84 @@ def test_merge_drops_a_target_column_the_frame_lacks(spark, tmp_path):
         ["k"],
     )
     sink.upsert(spark.createDataFrame([(2, "B")], "k int, v string"), t, ["k"])
-    out = spark.read.parquet(sink._path("region"))
+    out = _read_back(spark, sink, "region")
     assert out.columns == ["k", "v"]
     assert {r["k"]: r["v"] for r in out.collect()} == {1: "a", 2: "B"}
+
+
+class _Crash(BaseException):
+    """A process kill: no ``except Exception`` handler stops it."""
+
+
+def _crash_at_swap_step(monkeypatch, root, step):
+    """Raise ``_Crash`` at the ``step``-th rename or tree removal under
+    ``root``: 0 moves the target aside, 1 moves the staging dir in, 2
+    removes the old copy."""
+    import os
+    import shutil
+
+    seen = []
+
+    def hook(real):
+        def op(path, *args, **kw):
+            if str(path).startswith(str(root)):
+                seen.append(path)
+                if len(seen) - 1 == step:
+                    raise _Crash(path)
+            return real(path, *args, **kw)
+
+        return op
+
+    monkeypatch.setattr(os, "rename", hook(os.rename))
+    monkeypatch.setattr(shutil, "rmtree", hook(shutil.rmtree))
+
+
+def _keyed(spark, keys):
+    return spark.createDataFrame([(k, f"v{k}") for k in keys], "k long, v string")
+
+
+@pytest.mark.parametrize("step", [0, 1, 2])
+@pytest.mark.parametrize("fmt", FILE_FORMATS)
+def test_upsert_retried_after_a_crash_in_the_swap_keeps_every_row(
+    spark, tmp_path, monkeypatch, fmt, step
+):
+    """The idempotent-retry contract: a merge killed at any step of its
+    directory swap, then retried, leaves the whole table and no sibling."""
+    import os
+
+    sink = _file_sink(spark, tmp_path, fmt)
+    t = TableMapping(name="t")
+    sink.upsert(_keyed(spark, range(100)), t, ["k"])
+    batch = _keyed(spark, range(95, 105))
+    _crash_at_swap_step(monkeypatch, tmp_path, step)
+    with pytest.raises(_Crash):
+        sink.upsert(batch, t, ["k"])
+    monkeypatch.undo()
+    sink.upsert(batch, t, ["k"])
+    out = _read_back(spark, sink, "t")
+    assert out.count() == 105
+    assert out.filter("v = concat('v', k)").count() == 105
+    assert os.listdir(tmp_path) == [os.path.basename(sink._path("t"))]
+
+
+@pytest.mark.parametrize("step", [0, 1, 2])
+def test_compaction_retried_after_a_crash_in_the_swap_keeps_every_row(
+    spark, tmp_path, monkeypatch, step
+):
+    import os
+
+    from dbtransfer_spark.catalog import compact_small_files
+
+    path = str(tmp_path / "t.parquet")
+    _keyed(spark, range(105)).repartition(8).write.parquet(path)
+    _crash_at_swap_step(monkeypatch, tmp_path, step)
+    with pytest.raises(_Crash):
+        compact_small_files(spark, path)
+    monkeypatch.undo()
+    compact_small_files(spark, path)
+    assert spark.read.parquet(path).count() == 105
+    assert len([f for f in os.listdir(path) if f.startswith("part-")]) == 1
+    assert os.listdir(tmp_path) == ["t.parquet"]
 
 
 def test_partitioned_upsert_rewrites_only_affected_partitions(spark, tmp_path):

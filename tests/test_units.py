@@ -5,12 +5,13 @@ checkpoint store semantics, config defaults parity, CLI autodetect."""
 from __future__ import annotations
 
 import json
+import os
 import threading
 
 import pytest
 from pyspark.sql import types as T
 
-from dbtransfer_spark.checkpoint import Checkpoint, CheckpointPolicy, CheckpointStore
+from dbtransfer_spark.checkpoint import Checkpoint, CheckpointStore
 from dbtransfer_spark.cli import autodetect_type
 from dbtransfer_spark.config import Config, load_config
 from dbtransfer_spark.governance import RateLimiter
@@ -196,12 +197,36 @@ def test_checkpoint_corrupt_file_is_fresh_start(tmp_path):
     assert store.load("t") is None
 
 
-def test_checkpoint_policy_triggers():
-    pol = CheckpointPolicy(row_threshold=100, interval_s=9999)
-    assert not pol.observe(50)
-    assert pol.observe(50)  # hits row threshold
-    pol.saved()
-    assert not pol.observe(1)
+def test_concurrent_checkpoint_saves_use_their_own_temp_files(tmp_path, monkeypatch):
+    """Two saves of one table, both between their temp write and their
+    rename: with a shared temp file the second rename finds it gone."""
+    from dbtransfer_spark import checkpoint
+
+    store = CheckpointStore(str(tmp_path), engine="parquet")
+    both_written = threading.Barrier(2, timeout=30)
+    real_dump = json.dump
+
+    def dump(obj, fh, **kw):
+        real_dump(obj, fh, **kw)
+        both_written.wait()
+
+    monkeypatch.setattr(checkpoint.json, "dump", dump)
+    errors = []
+
+    def save(value):
+        try:
+            store.save("t", Checkpoint(last_key={"id": value}))
+        except Exception as e:  # collected for the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=save, args=(v,)) for v in ("1", "2")]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert errors == []
+    assert store.watermark("t", "id") in {"1", "2"}
+    assert os.listdir(tmp_path) == ["parquet_t.checkpoint"]
 
 
 # -- rate limiter (R3) ------------------------------------------------------

@@ -219,6 +219,24 @@ def test_crash_before_manifest_link_leaves_previous_version(spark, store, monkey
     assert store.commit_append(_df(spark, [9]), index=_idx(spark, [9])) == 2
 
 
+def test_vacuum_reclaims_a_dead_writers_temp_manifest(spark, store):
+    """A temp manifest older than the grace window is a dead writer's and
+    vacuum deletes it; a younger one may be in flight and stays."""
+    import time
+
+    store.commit(_df(spark, range(2)))
+    dead = os.path.join(store.vdir, ".v00000002.dead.tmp")
+    live = os.path.join(store.vdir, ".v00000002.live.tmp")
+    for path in (dead, live):
+        with open(path, "w") as f:
+            f.write("{}")
+    an_hour_ago = time.time() - 3600
+    os.utime(dead, (an_hour_ago, an_hour_ago))
+    store.vacuum(keep_last=1, grace_seconds=60)
+    assert sorted(os.listdir(store.vdir)) == [".v00000002.live.tmp", "v00000001.json"]
+    assert store.read().count() == 2
+
+
 def test_racing_writer_raises_and_keeps_first_manifest(spark, store, tmp_path, monkeypatch):
     """Two writers that mint the same version: the second one's publish
     raises instead of overwriting the first's manifest."""
