@@ -486,42 +486,44 @@ def minhash_lsh_pairs(
     )
 
 
+def minhash_agreement(mh_a: str, mh_b: str) -> Column:
+    """Estimated Jaccard of two signature columns: the fraction of equal
+    positions, rounded to 4 places."""
+    est = F.size(
+        F.filter(F.zip_with(mh_a, mh_b, lambda x, y: x == y), lambda v: v)
+    ).cast("double") / F.size(F.col(mh_a))
+    return F.round(est, 4)
+
+
 def minhash_jaccard_estimate(
     sigs: DataFrame,
     pairs: DataFrame,
     id_col: str,
     carry: tuple[str, ...] = (),
-    sigs_b: DataFrame | None = None,
 ) -> DataFrame:
     """Estimated Jaccard = fraction of equal signature positions.
 
     ``carry`` columns from ``sigs`` ride through the two estimate joins as
     ``{c}_a`` / ``{c}_b`` — the estimate must join the signature frame on
     both sides anyway, so attaching e.g. the clique ``ids`` array here is
-    free, while recovering it later costs two more shuffle joins.
-
-    ``sigs_b`` (r14): asymmetric callers whose pair sides come from
-    DISJOINT roles (release probe: id_a = new batch, id_b = corpus) pass
-    the b-side frame here so each join probes only its own side instead
-    of a union of both."""
+    free, while recovering it later costs two more shuffle joins."""
     sa = sigs.select(
         F.col(id_col).alias("id_a"),
         F.col("minhash").alias("mh_a"),
         *[F.col(c).alias(f"{c}_a") for c in carry],
     )
-    sb = (sigs if sigs_b is None else sigs_b).select(
+    sb = sigs.select(
         F.col(id_col).alias("id_b"),
         F.col("minhash").alias("mh_b"),
         *[F.col(c).alias(f"{c}_b") for c in carry],
     )
-    est = F.size(
-        F.filter(F.zip_with("mh_a", "mh_b", lambda x, y: x == y), lambda v: v)
-    ).cast("double") / F.size(F.col("mh_a"))
     carried = [f"{c}_{s}" for c in carry for s in ("a", "b")]
     return (
         pairs.join(sa, "id_a")
         .join(sb, "id_b")
-        .select("id_a", "id_b", F.round(est, 4).alias("est_jaccard"), *carried)
+        .select(
+            "id_a", "id_b", minhash_agreement("mh_a", "mh_b").alias("est_jaccard"), *carried
+        )
     )
 
 

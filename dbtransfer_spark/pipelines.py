@@ -18,8 +18,10 @@ from pyspark.sql import functions as F
 
 from dbtransfer_spark.operators.dedup import (
     exact_dedup,
-    minhash_jaccard_estimate,
+    minhash_agreement,
     minhash_signatures,
+    shingle_arrays,
+    signatures_from_shingles,
 )
 from dbtransfer_spark.observe import observe_count
 from dbtransfer_spark.sources.versioned import VersionedDatasetStore
@@ -27,9 +29,10 @@ from dbtransfer_spark.sources.versioned import VersionedDatasetStore
 _BANDS, _ROWS_PER_BAND = 8, 4
 
 
-def _banded(sigs: DataFrame, prefix: str, id_col: str = "doc_id") -> DataFrame:
+def _banded(sigs: DataFrame, prefix: str, id_col: str, *keep: str) -> DataFrame:
     """Explode a signature frame into (band, band-slice hash) bucket keys
     — the standard LSH candidate-generation side of a banded equi-join.
+    ``keep`` columns ride along on every band row.
 
     One parsed SQL string instead of ``_BANDS`` py4j-built struct/hash
     expression trees (r14, guide §5 — the driver should do almost no
@@ -44,13 +47,12 @@ def _banded(sigs: DataFrame, prefix: str, id_col: str = "doc_id") -> DataFrame:
         for i in range(_BANDS)
     )
     return sigs.selectExpr(
-        f"{id_col} AS {prefix}_id", f"explode(array({bands_sql})) AS bb"
-    ).select(f"{prefix}_id", "bb.band", "bb.bucket")
+        f"{id_col} AS {prefix}_id", *keep, f"explode(array({bands_sql})) AS bb"
+    ).select(f"{prefix}_id", *keep, "bb.band", "bb.bucket")
 
 
-def _sign_corpus(corpus: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Persisted MinHash signatures of a whole corpus (consumed twice by
-    the probe: banding + estimate rejoin).
+def _spread(corpus: DataFrame) -> DataFrame:
+    """``corpus`` over at least cluster width partitions, for signing.
 
     The corpus usually arrives from the versioned store, whose batch
     commits are sized ~1M rows/file — a small corpus can therefore be a
@@ -61,7 +63,15 @@ def _sign_corpus(corpus: DataFrame, id_col: str, text_col: str) -> DataFrame:
     sc_par = corpus.sparkSession.sparkContext.defaultParallelism
     if corpus.rdd.getNumPartitions() < sc_par:
         corpus = corpus.repartition(sc_par)
-    return minhash_signatures(corpus, id_col, text_col).persist()
+    return corpus
+
+
+def _signed(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """``docs`` with its MinHash signature appended as ``minhash``: the
+    id first, then the other columns in their order."""
+    carry = tuple(c for c in docs.columns if c != id_col)
+    shingled = shingle_arrays(docs, id_col, text_col, carry=carry)
+    return signatures_from_shingles(shingled, id_col, carry=carry)
 
 
 def near_dup_against_corpus(
@@ -75,13 +85,14 @@ def near_dup_against_corpus(
     LSH candidates (batch×corpus only) refined by the signature Jaccard
     estimate. Returns the distinct new-doc ids to DROP.
 
-    Scale: |batch|·bands bucket probes against the corpus index — the
-    asymmetric join of dedup_incremental_new_vs_corpus (dedup.py), reused
-    verbatim; candidate refinement touches only bucket-colliding pairs."""
-    # signatures are consumed twice each (banding + estimate rejoin):
-    # persist so the shingle/hash pass runs once per side
-    sig_new = minhash_signatures(new_docs, id_col, text_col).persist()
-    sig_corpus = _sign_corpus(corpus, id_col, text_col)
+    Scale: |batch|·bands bucket probes against the corpus signatures —
+    the asymmetric join of dedup_incremental_new_vs_corpus (dedup.py),
+    reused verbatim; candidate refinement touches only bucket-colliding
+    pairs."""
+    # the corpus signatures are consumed twice (banding + estimate
+    # rejoin): persist so the shingle/hash pass runs once
+    sig_corpus = minhash_signatures(_spread(corpus), id_col, text_col).persist()
+    sig_new = minhash_signatures(new_docs, id_col, text_col)
     return near_dup_probe(sig_new, sig_corpus, id_col, threshold)
 
 
@@ -92,35 +103,25 @@ def near_dup_probe(
     threshold: float = 0.5,
 ) -> DataFrame:
     """The signature-level probe behind :func:`near_dup_against_corpus`,
-    split out so callers holding a PRE-BUILT corpus signature index
-    (the index the release pipeline commits with each corpus version)
-    skip the O(corpus) re-signing entirely — at 100 TB that pass, not
-    the banded join, is what made per-release cost O(corpus).
+    split out so callers holding PRE-BUILT corpus signatures (the
+    ``minhash`` column of every release the pipeline commits) skip the
+    O(corpus) re-signing entirely — at 100 TB that pass, not the banded
+    join, is what made per-release cost O(corpus). Both frames need
+    ``id_col`` and ``minhash``; other columns are ignored.
 
-    INPUT CONTRACT (r14 ADVICE): a doc_id names ONE document — if an id
-    ever appeared on both sides with different text, the sided estimate
-    below would pin id_a to the batch signature where the pre-r14 union
-    form let it match either side. The release pipeline guarantees this
-    (batch ids are exact-deduped and the store append drops near-dups);
-    external callers must uphold it."""
-    cand = (
-        _banded(sig_new, "new", id_col)
-        .join(_banded(sig_corpus, "corp", id_col), ["band", "bucket"])
-        .select(F.col("new_id").alias("id_a"), F.col("corp_id").alias("id_b"))
-        .distinct()
+    One rejoin: the batch's band rows carry its signature, the corpus
+    band rows only ids, and the candidates join the corpus signature
+    once by corpus id. A pair sharing several bands is estimated once
+    per shared band; the final distinct collapses the repeats."""
+    corpus_sigs = sig_corpus.select(
+        F.col(id_col).alias("corp_id"), F.col("minhash").alias("mh_corp")
     )
-    # Sided estimate (r14, guide §2.3 — shuffle fewer bytes): id_a only
-    # ever names a NEW-side doc and id_b a CORPUS doc, so the estimate
-    # joins each candidate side against ITS OWN signature frame instead
-    # of the old new∪corpus union (which shipped both frames into both
-    # probe joins, and double-matched ids present on both sides — extra
-    # rows the final distinct then had to collapse). Same drop set: a
-    # doc_id names one document, so the double-matched rows carried the
-    # identical signature/estimate.
-    est = minhash_jaccard_estimate(sig_new, cand, id_col, sigs_b=sig_corpus)
     return (
-        est.filter(F.col("est_jaccard") >= threshold)
-        .select(F.col("id_a").alias(id_col))
+        _banded(sig_new, "new", id_col, "minhash")
+        .join(_banded(sig_corpus, "corp", id_col), ["band", "bucket"])
+        .join(corpus_sigs, "corp_id")
+        .filter(minhash_agreement("minhash", "mh_corp") >= threshold)
+        .select(F.col("new_id").alias(id_col))
         .distinct()
     )
 
@@ -138,69 +139,59 @@ def incremental_release(
     fingerprint, drop near-dups of the current release, commit
     corpus ∪ survivors as the next version. Returns counts + version.
 
-    Signature index: every release commits the MinHash signatures of
-    what it adds as the version's sidecar index (``store.read_index``),
-    in the same manifest as the data — the two cannot drift apart. A
-    release signs ONLY the batch and probes the stored corpus
-    signatures, so per-release cost is O(batch) + the banded probe,
-    never O(corpus) re-signing (the 100 TB killer). When the latest
-    version has no index (an out-of-band commit, or a store written
-    before indexes existed), the release signs the corpus once and
-    commits the full index with its survivors."""
-    # n_batch rides whichever job first materializes the cached batch
-    # (guide §1.4/§5 — no standalone count action): the seed path still
-    # counts eagerly (its commit needs the number before any other job
-    # has run), but the incremental path reads the metric off the probe
-    # job that materializes batch_sigs anyway, removing one full job
-    # wave per release.
-    batch, n_batch_observed = observe_count(
-        exact_dedup(
-            new_docs.withColumn("__fp", F.md5(F.col(text_col))), ["__fp"], id_col
-        ).drop("__fp"),
+    Signatures in the data: every version stores each doc's MinHash
+    signature as its ``minhash`` column. A release signs ONLY the batch
+    and probes the signatures read from the latest version's files, so
+    per-release cost is O(batch) + the banded probe, never O(corpus)
+    re-signing (the 100 TB killer). When the latest version has no
+    ``minhash`` column (an out-of-band commit), the release signs the
+    corpus once and commits the signed corpus ∪ survivors as a full
+    snapshot, so every later version is signed again."""
+    # n_batch rides whichever job first materializes the signed batch
+    # (guide §1.4/§5 — no standalone count action): the seed commit's
+    # write, or the probe job
+    signed, n_batch_observed = observe_count(
+        _signed(
+            exact_dedup(
+                new_docs.withColumn("__fp", F.md5(F.col(text_col))), ["__fp"], id_col
+            ).drop("__fp"),
+            id_col,
+            text_col,
+        ),
         "incremental_release batch rows",
     )
-    batch = batch.persist()  # counted, probed, anti-joined, committed
-    batch_sigs = sig_corpus = drops = None
+    latest = store.latest_version()
+    if latest is None:
+        v = store.commit(signed, note or "initial release")
+        n_batch = n_batch_observed()
+        return {"version": v, "n_batch": n_batch, "n_kept": n_batch, "n_dropped": 0}
+    signed = signed.persist()  # probed, then committed
+    corpus = store.read(latest)
+    resign = "minhash" not in corpus.columns
+    drops = None
     try:
-        # sign the batch once; probed, anti-joined, committed as the index
-        batch_sigs = minhash_signatures(batch, id_col, text_col).persist()
-        latest = store.latest_version()
-        if latest is None:
-            n_batch = batch.count()
-            v = store.commit(
-                batch, note or "initial release", n_batch, index=batch_sigs
-            )
+        if resign:
+            corpus = _signed(_spread(corpus), id_col, text_col).persist()
+        # persist the (small, ids-only) drop set and count it once: the
+        # commit anti-joins the cached ids instead of re-running the probe
+        drops = near_dup_probe(signed, corpus, id_col, threshold).persist()
+        drops.count()
+        # the probe job materialized the signed batch, so the batch-size
+        # metric is available without its own count action (when an
+        # empty probe skipped it, the reader counts the persisted signed
+        # batch, which fills the cache the commit write then reads)
+        n_batch = n_batch_observed()
+        kept, n_kept_observed = observe_count(
+            signed.join(drops, id_col, "left_anti"), "incremental_release kept rows"
+        )
+        if resign:
+            v = store.commit(corpus.unionByName(kept), note)
         else:
-            sig_corpus = store.read_index(latest)
-            resigned = sig_corpus is None
-            if resigned:
-                sig_corpus = _sign_corpus(store.read(latest), id_col, text_col)
-            # persist the (small, ids-only) drop set: both commit writes
-            # (kept, kept_sigs) anti-join it and would otherwise each re-run
-            # the whole signature probe — and MATERIALIZE it eagerly so the
-            # two overlapped writes read the cached result instead of
-            # racing to compute an unmaterialized persist twice.
-            drops = near_dup_probe(batch_sigs, sig_corpus, id_col, threshold).persist()
-            drops.count()
-            # the probe job materialized batch/batch_sigs, so the batch-size
-            # metric is available without its own count action (when an
-            # empty probe skipped the batch, the reader counts the persisted
-            # batch, which fills the cache the commit write then reads)
-            n_batch = n_batch_observed()
-            kept = batch.join(drops, id_col, "left_anti")
-            kept_sigs = batch_sigs.join(drops, id_col, "left_anti")
             # append-commit: writes ONLY the survivors and references the
             # parent release's data dirs — O(|batch|) per release, never
-            # O(corpus). n_kept rides the commit write as an Observation
-            # metric (no separate count job); n_batch bounds the file
-            # sizing from above.
-            v = store.commit_append(
-                kept,
-                note,
-                n_rows_hint=n_batch,
-                index=sig_corpus.unionByName(kept_sigs) if resigned else kept_sigs,
-            )
-        n_kept = int(store.manifest(v)["n_new_rows"])
+            # O(corpus); n_batch bounds the file sizing from above
+            v = store.commit_append(kept, note, n_rows_hint=n_batch)
+        n_kept = n_kept_observed()
         return {
             "version": v,
             "n_batch": n_batch,
@@ -208,9 +199,9 @@ def incremental_release(
             "n_dropped": n_batch - n_kept,
         }
     finally:
-        # the commits have materialized everything — release the cache so
+        # the commit has materialized everything — release the cache so
         # repeated releases in one session don't accumulate entries (a
-        # stored index was never persisted; unpersisting it is a no-op)
-        for frame in (batch, batch_sigs, sig_corpus, drops):
+        # stored corpus was never persisted; unpersisting it is a no-op)
+        for frame in (signed, corpus, drops):
             if frame is not None:
                 frame.unpersist()

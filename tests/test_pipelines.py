@@ -78,23 +78,31 @@ def _sig_rows(sigs):
     return sorted((r["doc_id"], tuple(r["minhash"])) for r in sigs.collect())
 
 
+def _assert_signed(store, *versions):
+    """Each version's ``minhash`` column equals a fresh signing of it."""
+    for v in versions:
+        data = store.read(v)
+        assert _sig_rows(data.select("doc_id", "minhash")) == _sig_rows(
+            minhash_signatures(data, "doc_id", "text")
+        ), f"version {v}"
+
+
 def _sign_spy(monkeypatch):
     """Make the pipeline's signer record each frame it signs; returns
     the record list."""
     import dbtransfer_spark.pipelines as P
 
-    signed = []
+    signed, sign = [], P._signed
     monkeypatch.setattr(
-        P, "minhash_signatures",
-        lambda df, *a, **k: (signed.append(df), minhash_signatures(df, *a, **k))[1],
+        P, "_signed", lambda df, *a, **k: (signed.append(df), sign(df, *a, **k))[1]
     )
     return signed
 
 
 def test_release_maintains_signature_index(spark, store, monkeypatch):
-    """r6: indexed releases sign ONLY the batch (the O(corpus)
-    re-signing is gone) and the index committed with each version stays
-    bit-equal to a fresh signing of the corpus."""
+    """Releases sign ONLY the batch (the O(corpus) re-signing is gone),
+    and every version stores a signature column bit-equal to a fresh
+    signing of its docs."""
     signed = _sign_spy(monkeypatch)
     incremental_release(spark, store, _docs(spark, [(1, BASE), (3, "short doc here")]))
     r2 = incremental_release(
@@ -105,39 +113,40 @@ def test_release_maintains_signature_index(spark, store, monkeypatch):
     assert r2["n_dropped"] == 1 and r2["n_kept"] == 1
     # one signing per release (the batch); the corpus was never re-signed
     assert len(signed) == 2
-    assert _sig_rows(store.read_index()) == _sig_rows(
-        minhash_signatures(store.read(), "doc_id", "text")
-    )
+    assert store.read().columns == ["doc_id", "text", "minhash"]
+    _assert_signed(store, 1, 2)
 
 
 def test_release_self_heals_stale_signature_index(spark, store, monkeypatch):
-    """An out-of-band corpus commit leaves the latest version without an
-    index; the next release must still judge near-dups correctly
-    (against the TRUE corpus), commit a full index, and the release
-    after it signs only its batch again."""
+    """An out-of-band full commit leaves the latest version unsigned; the
+    next release must still judge near-dups correctly (against the TRUE
+    corpus), publish the signed corpus ∪ survivors as a full snapshot,
+    and the release after it signs only its batch."""
     incremental_release(spark, store, _docs(spark, [(1, BASE)]))
     other = " ".join(f"q{i}" for i in range(60))
-    v = store.commit_append(_docs(spark, [(500, other)]), note="out-of-band")
-    assert store.read_index(v) is None
+    v = store.commit(
+        store.read().select("doc_id", "text").unionByName(_docs(spark, [(500, other)])),
+        note="out-of-band",
+    )
+    assert "minhash" not in store.read(v).columns
     signed = _sign_spy(monkeypatch)
     r = incremental_release(
         spark, store,
         _docs(spark, [(601, other.replace("q59", "zz")),     # near-dup of 500
                       (602, " ".join(f"y{i}" for i in range(60)))]),
     )
-    assert r["n_dropped"] == 1 and r["n_kept"] == 1
+    assert (r["n_batch"], r["n_kept"], r["n_dropped"]) == (2, 1, 1)
     assert len(signed) == 2  # the batch, then the corpus once
-    assert _sig_rows(store.read_index()) == _sig_rows(
-        minhash_signatures(store.read(), "doc_id", "text")
-    )
+    assert len(store.manifest(r["version"])["data_dirs"]) == 1
+    assert sorted(x["doc_id"] for x in store.read().collect()) == [1, 500, 602]
+    healed = r["version"]
     r = incremental_release(
         spark, store, _docs(spark, [(701, " ".join(f"z{i}" for i in range(60)))])
     )
     assert r["n_kept"] == 1
     assert len(signed) == 3  # only the batch
-    assert _sig_rows(store.read_index()) == _sig_rows(
-        minhash_signatures(store.read(), "doc_id", "text")
-    )
+    assert store.manifest(r["version"])["data_dirs"][0] == store.manifest(healed)["data_dirs"][0]
+    _assert_signed(store, 1, healed, r["version"])
 
 
 def test_compacting_release_counts_only_the_batch(spark, tmp_path):
@@ -165,10 +174,28 @@ def test_compacting_release_counts_only_the_batch(spark, tmp_path):
     assert 0 <= r["n_dropped"] <= r["n_batch"]
     assert (r["n_batch"], r["n_kept"], r["n_dropped"]) == (2, 1, 1)
     assert store.read(r["version"]).count() == size + r["n_kept"]
-    assert len(store.manifest(r["version"])["index_dirs"]) == 1
-    assert _sig_rows(store.read_index()) == _sig_rows(
-        minhash_signatures(store.read(), "doc_id", "text")
+    assert len(store.manifest(r["version"])["data_dirs"]) == 1
+    _assert_signed(store, *store.versions())
+
+
+def test_incremental_release_runs_at_most_11_jobs(spark, store):
+    """Pins the job waves of one incremental release (17 at the
+    sidecar-index design): an extra wave fails here loudly."""
+    incremental_release(spark, store, _docs(spark, [(1, BASE), (3, "short doc here")]))
+    batch = _docs(
+        spark,
+        [(101, BASE.replace("w59", "zz")), (102, " ".join(f"x{i}" for i in range(60)))],
     )
+    sc = spark.sparkContext
+    sc.setJobGroup("release", "incremental release")
+    try:
+        r = incremental_release(spark, store, batch)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    assert (r["n_kept"], r["n_dropped"]) == (1, 1)
+    assert len(sc.statusTracker().getJobIdsForGroup("release")) <= 11
 
 
 def test_release_without_candidates_computes_the_batch_once(spark, store):

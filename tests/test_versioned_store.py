@@ -1,6 +1,6 @@
 """Versioned dataset store: snapshot isolation, time travel, the
 manifest link as the one atomic commit (crashes and a second writer),
-the sidecar index, diff, and vacuum retention."""
+the recorded schema and row counts, diff, and vacuum retention."""
 
 from __future__ import annotations
 
@@ -137,63 +137,82 @@ def test_compaction_preserves_vacuumed_storage_bound(spark, tmp_path):
     assert len(os.listdir(store.ddir)) <= 2
 
 
-def _idx(spark, ids):
-    return spark.createDataFrame([(i, f"s{i}") for i in ids], "doc_id long, sig string")
-
-
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_index_follows_appends_compacts_and_drops(spark, tmp_path):
-    """An index given with each commit chains like the data dirs and is
-    rewritten beside them on compaction; a commit without one leaves
-    the new version unindexed."""
+def test_append_of_a_column_the_parent_lacks_raises(spark, store):
+    store.commit(_df(spark, [0, 1]))
+    wider = _df(spark, [2]).withColumn("minhash", F.array(F.lit(1).cast("long")))
+    with pytest.raises(ValueError, match="full snapshot"):
+        store.commit_append(wider)
+    assert store.versions() == [1]
+    assert _rows(store.read()) == _rows(_df(spark, [0, 1]))
+
+
+def test_append_without_a_column_of_the_parent_raises(spark, store):
+    wide = _df(spark, [0, 1]).withColumn("minhash", F.array(F.col("doc_id")))
+    store.commit(wide)
+    with pytest.raises(ValueError, match="full snapshot"):
+        store.commit_append(_df(spark, [2]))
+    with pytest.raises(ValueError, match="full snapshot"):  # same names, another type
+        store.commit_append(_df(spark, [2]).withColumn("minhash", F.array(F.lit("x"))))
+    assert store.versions() == [1]
+    # a full snapshot may change the schema; appends then follow it
+    store.commit(_df(spark, [2]))
+    store.commit_append(_df(spark, [3]))
+    assert _rows(store.read()) == _rows(_df(spark, [2, 3]))
+
+
+def test_manifest_records_schema_and_total_rows(spark, tmp_path):
     store = VersionedDatasetStore(spark, str(tmp_path), "corpus", max_data_dirs=2)
-    store.commit(_df(spark, [0, 1]), index=_idx(spark, [0, 1]))
-    v2 = store.commit_append(_df(spark, [2]), index=_idx(spark, [2]))
-    m2 = store.manifest(v2)
-    assert m2["index_dirs"][0] == store.manifest(1)["index_dirs"][0]
-    assert len(m2["index_dirs"]) == 2
-    assert _rows(store.read_index()) == _rows(_idx(spark, [0, 1, 2]))
-    v3 = store.commit_append(_df(spark, [3]), index=_idx(spark, [3]))
-    m3 = store.manifest(v3)
-    assert m3["compaction"] and len(m3["data_dirs"]) == len(m3["index_dirs"]) == 1
-    assert _rows(store.read_index(v3)) == _rows(_idx(spark, [0, 1, 2, 3]))
-    # a plain append: the parent's index does not cover the new rows
-    v4 = store.commit_append(_df(spark, [4]))
-    assert "index_dirs" not in store.manifest(v4)
-    assert store.read_index(v4) is None
-    assert store.read(v4).count() == 5
-    assert _rows(store.read_index(v3)) == _rows(_idx(spark, [0, 1, 2, 3]))
+    store.commit(_df(spark, range(4)))
+    store.commit_append(_df(spark, [10, 11]))
+    v3 = store.commit_append(_df(spark, [12]))  # compacts
+    totals = [(store.manifest(v)["n_new_rows"], store.manifest(v)["n_rows"]) for v in (1, 2, 3)]
+    assert totals == [(4, 4), (2, 6), (1, 7)]
+    assert store.manifest(v3)["compaction"]
+    assert store.read(v3).schema.simpleString() == "struct<doc_id:bigint,text:string>"
+    assert store.read(v3).count() == 7
 
 
-def test_index_write_failure_publishes_nothing(spark, store):
-    store.commit(_df(spark, range(3)), index=_idx(spark, range(3)))
-    before = _rows(store.read_index())
+def test_compaction_of_small_dirs_writes_one_file(spark, tmp_path):
+    store = VersionedDatasetStore(spark, str(tmp_path), "corpus", max_data_dirs=3)
+    store.commit(_df(spark, range(8)).repartition(4))
+    for k in (1, 2):
+        store.commit_append(_df(spark, range(10 * k, 10 * k + 4)).repartition(3))
+    v = store.commit_append(_df(spark, [99]).repartition(2))
+    man = store.manifest(v)
+    assert man["compaction"] and len(man["data_dirs"]) == 1
+    parts = [
+        n for n in os.listdir(os.path.join(store.ddir, man["data_dirs"][0]))
+        if n.endswith(".parquet")
+    ]
+    assert len(parts) == 1
+    assert store.read(v).count() == man["n_rows"] == 17
+
+
+def test_write_failure_publishes_nothing(spark, store):
+    store.commit(_df(spark, range(3)))
 
     def boom(_):
-        raise RuntimeError("index write failed")
+        raise RuntimeError("data write failed")
 
-    bad = _idx(spark, [7]).withColumn("sig", F.udf(boom, "string")("doc_id"))
-    with pytest.raises(Exception, match="index write failed"):
-        store.commit_append(_df(spark, [7]), index=bad)
-    # the data write succeeded, yet no version appeared
+    bad = _df(spark, [7]).withColumn("text", F.udf(boom, "string")("doc_id"))
+    with pytest.raises(Exception, match="data write failed"):
+        store.commit_append(bad)
     assert store.versions() == [1]
     assert store.latest_version() == 1
-    assert _rows(store.read_index()) == before
-    assert len(os.listdir(store.ddir)) > 2  # the failed commit's orphans
+    assert len(os.listdir(store.ddir)) == 2  # the failed commit's orphan
     store.vacuum(keep_last=1, grace_seconds=0)
-    m1 = store.manifest(1)
-    assert sorted(os.listdir(store.ddir)) == sorted(m1["data_dirs"] + m1["index_dirs"])
-    assert store.read().count() == 3
+    assert os.listdir(store.ddir) == store.manifest(1)["data_dirs"]
+    assert _rows(store.read()) == _rows(_df(spark, range(3)))
 
 
 def test_crash_before_manifest_link_leaves_previous_version(spark, store, monkeypatch):
     """A writer that dies after writing its temp manifest but before the
     link leaves only a hidden temp file: no version, nothing visible."""
-    store.commit(_df(spark, range(4)), index=_idx(spark, range(4)))
-    before = _rows(store.read_index())
+    store.commit(_df(spark, range(4)))
 
     class Died(BaseException):
         pass
@@ -208,15 +227,14 @@ def test_crash_before_manifest_link_leaves_previous_version(spark, store, monkey
         os, "unlink", lambda p, *a, **k: None if p.endswith(".tmp") else real_unlink(p, *a, **k)
     )
     with pytest.raises(Died):
-        store.commit_append(_df(spark, [9]), index=_idx(spark, [9]))
+        store.commit_append(_df(spark, [9]))
     monkeypatch.undo()
     (tmp,) = [n for n in os.listdir(store.vdir) if n.endswith(".tmp")]
     assert tmp.startswith(".v00000002.")
     assert store.versions() == [1]
     assert store.latest_version() == 1
     assert store.read().count() == 4
-    assert _rows(store.read_index()) == before
-    assert store.commit_append(_df(spark, [9]), index=_idx(spark, [9])) == 2
+    assert store.commit_append(_df(spark, [9])) == 2
 
 
 def test_vacuum_reclaims_a_dead_writers_temp_manifest(spark, store):
@@ -256,29 +274,29 @@ def test_racing_writer_raises_and_keeps_first_manifest(spark, store, tmp_path, m
     assert sorted(r["doc_id"] for r in store.read().collect()) == [0, 1, 5]
 
 
-def test_vacuum_keeps_index_dirs_of_kept_versions(spark, store):
-    store.commit(_df(spark, [0]), index=_idx(spark, [0]))
-    store.commit(_df(spark, [1]), index=_idx(spark, [1]))
-    store.commit_append(_df(spark, [2]), index=_idx(spark, [2]))
+def test_vacuum_keeps_the_dirs_of_kept_versions(spark, store):
+    store.commit(_df(spark, [0]))
+    store.commit(_df(spark, [1]))
+    store.commit_append(_df(spark, [2]))
     m1 = store.manifest(1)
     assert store.vacuum(keep_last=2, grace_seconds=0) == [1]
     m2, m3 = store.manifest(2), store.manifest(3)
-    kept = set(m2["data_dirs"] + m2["index_dirs"] + m3["data_dirs"] + m3["index_dirs"])
+    kept = set(m2["data_dirs"] + m3["data_dirs"])
     assert set(os.listdir(store.ddir)) == kept
-    assert not set(m1["data_dirs"] + m1["index_dirs"]) & kept
-    assert _rows(store.read_index(2)) == _rows(_idx(spark, [1]))
-    assert _rows(store.read_index(3)) == _rows(_idx(spark, [1, 2]))
+    assert not set(m1["data_dirs"]) & kept
+    assert _rows(store.read(2)) == _rows(_df(spark, [1]))
+    assert _rows(store.read(3)) == _rows(_df(spark, [1, 2]))
 
 
-def test_indexed_commit_runs_in_the_callers_job_group(spark, store):
-    """The data and index writes run on pool threads; they must still
-    carry the caller's job group, or cancelling it would miss them."""
+def test_commit_is_one_job_in_the_callers_job_group(spark, store):
+    """A commit is one write, and it runs in the caller's job group, so
+    cancelling the group stops it."""
     sc = spark.sparkContext
-    sc.setJobGroup("indexed-commit", "indexed commit")
+    sc.setJobGroup("commit", "commit")
     try:
-        store.commit(_df(spark, range(3)), index=_idx(spark, range(3)))
+        store.commit(_df(spark, range(3)))
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
     sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    assert len(sc.statusTracker().getJobIdsForGroup("indexed-commit")) == 2
+    assert len(sc.statusTracker().getJobIdsForGroup("commit")) == 1

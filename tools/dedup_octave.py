@@ -72,8 +72,8 @@ FAMILY = [
     "semdedup_cluster_prune",
     "hard_negative_mining",
     # not a queries() entry: the end-to-end versioned release pipeline
-    # (bench.py wrapper) — proves the signature index committed with
-    # each corpus version doesn't share the per-doc banding defect
+    # (bench.py wrapper) — proves the signatures stored in each corpus
+    # version don't share the per-doc banding defect
     # (r10 VERDICT #1)
     "incremental_release",
     # contract timeouts LAST: a cancelled 120 s job group leaves
