@@ -174,40 +174,6 @@ def ensure_bucketed_basket(
     return tbl
 
 
-def create_bucketed_tables(
-    spark: SparkSession,
-    sf_dir: str,
-    specs: dict[str, tuple[list[str], int]],
-    prefix: str = "bkt",
-) -> dict[str, str]:
-    """Write tables bucketed (+ sorted) on their join keys as managed
-    tables, so every future equi-join between co-bucketed tables runs
-    shuffle-free (Spark matches bucket specs and drops both Exchanges —
-    and with sortBy, both Sorts).
-
-    This is the 100 TB co-location strategy for *repeated* joins: pay one
-    shuffle at ingest, then every orders⋈lineitem-style join reads
-    co-located buckets. Bucket count is a layout decision — at 100 TB pick
-    buckets so each is a few hundred MB; locally the default 8 keeps file
-    counts sane. Idempotent per (name, keys, buckets) via overwrite.
-
-    Returns {source_table: bucketed_table_name}.
-    """
-    out: dict[str, str] = {}
-    for name, (keys, n_buckets) in specs.items():
-        tbl = f"{prefix}_{name}"
-        (
-            load_table(spark, sf_dir, name)
-            .write.mode("overwrite")
-            .bucketBy(n_buckets, *keys)
-            .sortBy(*keys)
-            .format("parquet")
-            .saveAsTable(tbl)
-        )
-        out[name] = tbl
-    return out
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     ns_cols = _nanos_timestamp_columns(path)
@@ -239,75 +205,6 @@ def register_views(
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
     return dfs
-
-
-def zorder_value(ranges: dict[str, tuple[int, int]], bits: int | None = None):
-    """Z-order (Morton) key: min/max-normalize each integer column to a
-    common ``bits``-wide domain, then interleave the bits — pure builtin
-    arithmetic (HOF sum over bit positions), no UDF. Rows close in
-    z-value are close in EVERY interleaved dimension, so
-    range-partitioning + sorting by z gives parquet files whose min/max
-    stats are tight in all dimensions at once — multi-column row-group
-    pruning, where a single-key sort only prunes its leading column.
-
-    The normalization step is load-bearing: interleaving RAW values
-    weights each column by its magnitude, so a 13-bit key swamps an
-    11-bit key (4× the top-bit weight) and range splits never constrain
-    the narrower column — measured exactly that way on the fixture
-    before normalizing. ``ranges`` maps column → (min, max), a 2-scalar
-    metadata probe per column.
-
-    ``bits`` defaults to ``63 // len(ranges)`` so the highest interleaved
-    bit index (bits*k - 1) stays below the BIGINT sign bit; an explicit
-    ``bits`` that would shift into bit 63 raises instead of silently
-    corrupting the Morton order (r4 ADVICE low, catalog.py:206)."""
-    k = len(ranges)
-    if bits is None:
-        bits = 63 // k
-    if bits * k > 63:
-        raise ValueError(
-            f"zorder_value: bits={bits} over {k} columns shifts into the "
-            f"BIGINT sign bit (max index {bits * k - 1} > 62); use bits <= {63 // k}"
-        )
-    terms = []
-    top = (1 << bits) - 1
-    for j, (c, (lo, hi)) in enumerate(ranges.items()):
-        span = max(hi - lo, 1)
-        norm = f"CAST((CAST(`{c}` AS DOUBLE) - {lo}) * {top} / {span} AS BIGINT)"
-        terms.append(
-            f"aggregate(sequence(0, {bits - 1}), 0L,"
-            f" (acc, i) -> acc + shiftleft(({norm} >> i) & 1, i * {k} + {j}))"
-        )
-    return F.expr(" + ".join(terms))
-
-
-def zorder_layout(
-    spark: SparkSession,
-    sf_dir: str,
-    dst: str,
-    name: str,
-    cols: list[str],
-    n_parts: int | None = None,
-) -> str:
-    """Rewrite one table into a z-ordered layout on ``cols`` (see
-    zorder_value). Same maintenance-job shape as optimize_layout, keyed
-    on the Morton value instead of the primary key."""
-    n = n_parts or _default_parallelism()
-    src = load_table(spark, sf_dir, name)
-    bounds = src.agg(
-        *[F.min(c).alias(f"lo_{c}") for c in cols],
-        *[F.max(c).alias(f"hi_{c}") for c in cols],
-    ).collect()[0]
-    ranges = {c: (bounds[f"lo_{c}"], bounds[f"hi_{c}"]) for c in cols}
-    df = src.withColumn("__z", zorder_value(ranges))
-    (
-        df.repartitionByRange(n, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(dst)
-    )
-    return dst
 
 
 def compact_small_files(

@@ -15,8 +15,7 @@ groups them by evaluation strategy so a whole suite costs at most:
   dimension).
 
 That cost model is the point at 100 TB: N row-level expectations are
-free beyond the first, and nothing materializes violating rows unless
-asked (``violating_rows`` returns the filter for drill-down).
+free beyond the first, and nothing materializes violating rows.
 """
 
 from __future__ import annotations
@@ -188,11 +187,3 @@ def evaluate(df: DataFrame, expectations: list[Expectation]) -> DataFrame:
         "constraint_name", "kind", "violations", "total",
         (F.col("violations") == 0).alias("passed"),
     )
-
-
-def violating_rows(df: DataFrame, e: Expectation) -> DataFrame:
-    """Drill-down: the rows violating a row-level expectation."""
-    pred = e.row_violation()
-    if pred is None:
-        raise ValueError(f"{e.kind} has no row-level violation filter")
-    return df.filter(pred)

@@ -18,19 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbtransfer_spark.catalog import load_table
-
-QUERIES = {}
-ORACLE = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
+from dbtransfer_spark.registry import register
 
 
 def asof_join(

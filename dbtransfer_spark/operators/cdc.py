@@ -19,19 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbtransfer_spark.catalog import load_table
-
-QUERIES = {}
-ORACLE = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
+from dbtransfer_spark.registry import register
 
 
 @register(
@@ -196,8 +184,7 @@ def fuzzy_part_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     cliques — the same documented contract as setjoin_prefix_jaccard's
     pair listing; clique-safe consumers take dedup_clusters). At 100 TB
     the blocking key must stay high-cardinality relative to n; the
-    pre-flight is the same bucket-histogram count as
-    similarity.banded_candidate_estimate (Σ c·(c−1)/2 over block
+    pre-flight is a bucket-histogram count (Σ c·(c−1)/2 over block
     keys) before materializing the join."""
     part = load_table(spark, sf_dir, "part")
     rows = part.select(
@@ -704,8 +691,8 @@ def fellegi_sunter_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     divides/logs ppm integers driver-side.
 
     Scale: ONE blocked self-equi-join (candidates bounded by
-    sum of block-size squared — the pre-flight `banded_candidate_estimate`
-    prices it), then a 3x literal-array unpivot of the agreement bits and
+    sum of block-size squared — a block-histogram count prices it),
+    then a 3x literal-array unpivot of the agreement bits and
     one partial-aggregated groupBy(field). The 1-row match/unmatch totals
     broadcast onto the 3-row field frame."""
     part = load_table(spark, sf_dir, "part")

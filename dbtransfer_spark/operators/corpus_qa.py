@@ -23,20 +23,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbtransfer_spark.catalog import load_table
+from dbtransfer_spark.registry import register
 from dbtransfer_spark.textutil import alnum, normalized_text
-
-QUERIES = {}
-ORACLE = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------

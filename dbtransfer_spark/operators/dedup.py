@@ -21,20 +21,8 @@ from pyspark.sql import functions as F
 
 from dbtransfer_spark.catalog import load_table
 from dbtransfer_spark.operators.iterative import cut_lineage, free_local_checkpoint
+from dbtransfer_spark.registry import ORACLE, register
 from dbtransfer_spark.textutil import alnum_lower, normalized_text
-
-QUERIES = {}
-ORACLE = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------
@@ -773,14 +761,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     4 × 15-bit chunks (any equal chunk → candidate; guarantees recall for
     Hamming distance ≤ 3), then exact Hamming filter ≤ 8. Same
     band-bucket-join shape as MinHash-LSH — no all-pairs. Uses the
-    md5-derived token hash so DuckDB replays signatures exactly;
-    dedup_simhash_fast is the xxhash64/64-bit production variant."""
-    return _simhash_impl(spark, sf_dir, bits=60, portable_hash=True)
-
-
-def dedup_simhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit xxhash64 variant (production/bench path)."""
-    return _simhash_impl(spark, sf_dir, bits=64, portable_hash=False)
+    md5-derived token hash so DuckDB replays signatures exactly."""
+    return _simhash_impl(spark, sf_dir)
 
 
 def _hamming_profile_oracle(bits: int = 60, chunks: int = 4,
@@ -929,8 +911,7 @@ def simhash_hamming_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash_impl(
-    spark: SparkSession, sf_dir: str, bits: int, portable_hash: bool,
-    n_chunks: int = 4, max_hamming: int = 8,
+    spark: SparkSession, sf_dir: str, n_chunks: int = 4, max_hamming: int = 8,
 ) -> DataFrame:
     """DISTINCT-FIRST candidate generation (the blanket SCALE.md rule,
     r9 rewrite): duplicate documents share a signature, so the former
@@ -955,6 +936,7 @@ def _simhash_impl(
     a.th < b.th join excludes equal keys) and double-match the
     id-expansion joins. An 8-byte bigint also shuffles cheaper than a
     32-char digest in the candidate join."""
+    bits = 60  # the md5-derived token hash DuckDB replays
     chunk_bits = bits // n_chunks
     mask = (1 << chunk_bits) - 1
     df = load_table(spark, sf_dir, "documents")
@@ -964,7 +946,7 @@ def _simhash_impl(
         .withColumn("th", F.element_at("ids", 1))
         .persist()  # signature pass + two id-expansion joins + within-pairs
     )
-    sigs = simhash(dt, "th", "text", bits=bits, portable_hash=portable_hash)
+    sigs = simhash(dt, "th", "text", bits=bits, portable_hash=True)
     chunks = sigs.select(
         "th",
         "simhash",

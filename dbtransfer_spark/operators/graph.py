@@ -20,19 +20,7 @@ from dbtransfer_spark.operators.shared_frames import (
     copurchase_pairs,
     part_supplier_edges,
 )
-
-QUERIES = {}
-ORACLE = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
+from dbtransfer_spark.registry import register
 
 
 @register(

@@ -18,19 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbtransfer_spark.catalog import load_table
-
-QUERIES = {}
-ORACLE = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
+from dbtransfer_spark.registry import register
 
 
 def salted_join(
@@ -305,47 +293,3 @@ def join_cardinality_preflight(spark: SparkSession, sf_dir: str) -> DataFrame:
             "matched_keys",
         )
     )
-
-
-def plan_join_strategy(
-    left_rows: int,
-    right_rows: int,
-    join_rows: int,
-    max_key_pairs: int,
-    right_bytes_per_row: int = 100,
-    broadcast_threshold_bytes: int = 64 * 1024 * 1024,
-    skew_ratio: float = 0.2,
-    salt_factor_cap: int = 64,
-) -> dict:
-    """Pre-flight join-strategy advisor: turns the numbers
-    ``join_cardinality_preflight`` and ``join_key_skew_profile`` compute
-    into the decision a planner (or a human at 100 TB) actually makes —
-    BEFORE paying for a misplanned shuffle.
-
-    Rules, in order:
-    - broadcast: the smaller side fits the broadcast threshold
-      (estimated bytes), so no shuffle at all;
-    - salted sort-merge: one key contributes more than ``skew_ratio`` of
-      the join output (max_key_pairs / join_rows) — a plain sort-merge
-      would stall on that key's partition; salt factor sized so the
-      hottest key's share splits to roughly the mean partition's;
-    - sort-merge: the default shuffle join otherwise.
-
-    Pure arithmetic (no Spark session) so it is unit-testable and
-    callable from driver-side planning code; AQE's runtime skew split
-    remains the safety net when the pre-flight was skipped."""
-    small_rows = min(left_rows, right_rows)
-    if small_rows * right_bytes_per_row <= broadcast_threshold_bytes:
-        return {"strategy": "broadcast", "build_side_rows": small_rows}
-    hot_share = (max_key_pairs / join_rows) if join_rows else 0.0
-    if hot_share > skew_ratio:
-        salt = min(
-            salt_factor_cap,
-            max(2, int(hot_share / max(skew_ratio, 1e-9)) + 1),
-        )
-        return {
-            "strategy": "salted_sort_merge",
-            "hot_share": round(hot_share, 4),
-            "salt_factor": salt,
-        }
-    return {"strategy": "sort_merge", "hot_share": round(hot_share, 4)}

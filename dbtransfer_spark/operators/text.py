@@ -17,20 +17,8 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from dbtransfer_spark.catalog import load_table
+from dbtransfer_spark.registry import register
 from dbtransfer_spark.textutil import alnum, normalized_text
-
-QUERIES = {}
-ORACLE = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 # BPE-ish pre-tokenizer: word pieces or single non-space punctuation.

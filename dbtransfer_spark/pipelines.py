@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 from dbtransfer_spark.operators.dedup import (
     exact_dedup,
     minhash_agreement,
-    minhash_signatures,
     shingle_arrays,
     signatures_from_shingles,
 )
@@ -74,40 +73,19 @@ def _signed(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return signatures_from_shingles(shingled, id_col, carry=carry)
 
 
-def near_dup_against_corpus(
-    new_docs: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-) -> DataFrame:
-    """New-batch docs judged near-duplicate of ANY corpus doc: banded
-    LSH candidates (batch×corpus only) refined by the signature Jaccard
-    estimate. Returns the distinct new-doc ids to DROP.
-
-    Scale: |batch|·bands bucket probes against the corpus signatures —
-    the asymmetric join of dedup_incremental_new_vs_corpus (dedup.py),
-    reused verbatim; candidate refinement touches only bucket-colliding
-    pairs."""
-    # the corpus signatures are consumed twice (banding + estimate
-    # rejoin): persist so the shingle/hash pass runs once
-    sig_corpus = minhash_signatures(_spread(corpus), id_col, text_col).persist()
-    sig_new = minhash_signatures(new_docs, id_col, text_col)
-    return near_dup_probe(sig_new, sig_corpus, id_col, threshold)
-
-
 def near_dup_probe(
     sig_new: DataFrame,
     sig_corpus: DataFrame,
     id_col: str = "doc_id",
     threshold: float = 0.5,
 ) -> DataFrame:
-    """The signature-level probe behind :func:`near_dup_against_corpus`,
-    split out so callers holding PRE-BUILT corpus signatures (the
-    ``minhash`` column of every release the pipeline commits) skip the
-    O(corpus) re-signing entirely — at 100 TB that pass, not the banded
-    join, is what made per-release cost O(corpus). Both frames need
-    ``id_col`` and ``minhash``; other columns are ignored.
+    """Batch ids judged near-duplicate of ANY corpus doc: banded LSH
+    candidates (batch×corpus only, never corpus×corpus) refined by the
+    signature Jaccard estimate. It takes PRE-BUILT signatures (the
+    ``minhash`` column of every release the pipeline commits), so a
+    release skips the O(corpus) re-signing — at 100 TB that pass, not
+    the banded join, is what made per-release cost O(corpus). Both frames
+    need ``id_col`` and ``minhash``; other columns are ignored.
 
     One rejoin: the batch's band rows carry its signature, the corpus
     band rows only ids, and the candidates join the corpus signature

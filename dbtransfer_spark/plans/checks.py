@@ -23,13 +23,6 @@ def formatted_plan(df: DataFrame) -> str:
     return buf.getvalue()
 
 
-def simple_plan(df: DataFrame) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain()
-    return buf.getvalue()
-
-
 def pushed_filters(df: DataFrame) -> str:
     """Concatenated PushedFilters entries from all scans."""
     plan = formatted_plan(df)

@@ -4,7 +4,7 @@ The reference's only dataflow is scan → pushdown transform → upsert
 (SURVEY.md §0); every relational operator beyond that (§2.9: joins,
 aggregations, windows, set ops, sorts, limits) comes from Catalyst and is
 exposed here as a named query, each paired with an ANSI-SQL oracle string
-(see ``ORACLE``) so the driver can hash-compare against DuckDB.
+(``registry.ORACLE``) so the driver can hash-compare against DuckDB.
 
 Conventions:
 - Every computed column is aliased identically in the DataFrame code and
@@ -19,17 +19,11 @@ shuffles are, and why the plan survives 100 TB.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbtransfer_spark.catalog import load_table
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-QUERIES: dict[str, QueryFn] = {}
-ORACLE: dict[str, str] = {}
+from dbtransfer_spark.registry import register
 
 
 def _parse_bytes(s: str) -> int:
@@ -77,13 +71,6 @@ def dsum(col, scale: int = 2):
     double. Shuffle order and double-rounding quirks can no longer flip a
     digit — required for cross-engine hash-stable aggregates."""
     return F.round(F.sum(col.cast("decimal(30,10)")), scale).cast("double")
-
-
-def davg(col, scale: int = 4):
-    """Order-independent mean: exact decimal sum / count."""
-    return F.round(
-        F.sum(col.cast("decimal(30,10)")).cast("double") / F.count(F.lit(1)), scale
-    )
 
 
 def exact_histogram_percentiles(
@@ -192,16 +179,6 @@ def _split_double_sql(expr: str) -> str:
         f"(CAST(CAST(({expr}) AS HUGEINT) // {s} AS DOUBLE) * {s}e0"
         f" + CAST(CAST(({expr}) AS HUGEINT) % {s} AS DOUBLE))"
     )
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------
@@ -6005,8 +5982,8 @@ def event_order_inversions(spark: SparkSession, sf_dir: str) -> DataFrame:
     lower bound any watermark delay must clear, and late_ppm tells you
     what dropping shorter delays would cost. Per event type, because
     different types ride different producer paths. Direct input to the
-    streaming module's withWatermark choices (deduped_event_stream,
-    purchases_after_view_stream).
+    streaming module's withWatermark choices (windowed_stream,
+    sessionized_stream).
 
     Scale: ONE user-partitioned running-max window ordered by the
     unique arrival sequence (ROWS to 1 PRECEDING — the strictly-prior

@@ -43,21 +43,6 @@ _PG_TYPES: dict[type, str] = {
     T.StringType: "TEXT",
 }
 
-_CQL_TYPES: dict[type, str] = {
-    T.ByteType: "tinyint",
-    T.ShortType: "smallint",
-    T.IntegerType: "int",
-    T.LongType: "bigint",
-    T.FloatType: "float",
-    T.DoubleType: "double",
-    T.BooleanType: "boolean",
-    T.DateType: "date",
-    T.TimestampType: "timestamp",
-    T.BinaryType: "blob",
-    T.StringType: "text",
-}
-
-
 def _mysql_type(dt: T.DataType, is_key: bool) -> str:
     if isinstance(dt, T.DecimalType):
         return f"DECIMAL({dt.precision},{dt.scale})"
@@ -80,21 +65,6 @@ def _pg_type(dt: T.DataType, is_key: bool) -> str:
     return _PG_TYPES.get(type(dt), "TEXT")
 
 
-def _cql_type(dt: T.DataType) -> str:
-    if isinstance(dt, T.DecimalType):
-        return "decimal"
-    if isinstance(dt, T.ArrayType):
-        return f"list<{_cql_type(dt.elementType)}>"
-    if isinstance(dt, T.MapType):
-        return f"map<{_cql_type(dt.keyType)}, {_cql_type(dt.valueType)}>"
-    if isinstance(dt, T.StructType):
-        # UDT analog (cassandra.go:341-382): caller must CREATE TYPE first;
-        # here we emit a frozen tuple-ish fallback.
-        inner = ", ".join(_cql_type(f.dataType) for f in dt.fields)
-        return f"frozen<tuple<{inner}>>"
-    return _CQL_TYPES.get(type(dt), "text")
-
-
 def mysql_create_table(table: str, schema: T.StructType, key_columns: list[str]) -> str:
     cols = [
         f"  `{f.name}` {_mysql_type(f.dataType, f.name in key_columns)}"
@@ -115,24 +85,3 @@ def postgres_create_table(table: str, schema: T.StructType, key_columns: list[st
     if key_columns:
         cols.append("  PRIMARY KEY (" + ", ".join(f'"{c}"' for c in key_columns) + ")")
     return f'CREATE TABLE IF NOT EXISTS "{table}" (\n' + ",\n".join(cols) + "\n)"
-
-
-def cassandra_create_table(
-    table: str,
-    schema: T.StructType,
-    partition_keys: list[str],
-    clustering_keys: list[str] | None = None,
-    default_ttl: int | None = None,
-) -> str:
-    """PRIMARY KEY ((pk...), clustering...) shape per cassandra.go:942-963;
-    ``default_time_to_live`` preserved per cassandra.go:966-977."""
-    clustering_keys = clustering_keys or []
-    cols = [f"  {f.name} {_cql_type(f.dataType)}" for f in schema.fields]
-    pk = "(" + ", ".join(partition_keys) + ")"
-    if clustering_keys:
-        pk += ", " + ", ".join(clustering_keys)
-    cols.append(f"  PRIMARY KEY ({pk})")
-    ddl = f"CREATE TABLE IF NOT EXISTS {table} (\n" + ",\n".join(cols) + "\n)"
-    if default_ttl:
-        ddl += f" WITH default_time_to_live = {default_ttl}"
-    return ddl

@@ -55,53 +55,6 @@ ORDER BY array_position(i.indkey, a.attnum)
 """
 
 
-SQLITE_PK_SQL = 'PRAGMA table_info("{table}")'  # test dialect for the machinery
-
-
-def detect_primary_key_dbapi(
-    connect: Callable[[], Any], dialect: str, table: str
-) -> list[str]:
-    """C1/C2 driver-side PK detection over a DB-API connection.
-
-    Runs the reference's exact catalog SQL (mysql.go:681-737 SHOW KEYS,
-    postgresql.go:672-692 pg_index) and — like mysql.go:698-724, which
-    scans the result header for the ``Column_name`` column instead of
-    assuming its position — resolves columns by name from
-    ``cursor.description``. The ``sqlite`` dialect (PRAGMA table_info, pk
-    ordinal column) exists so this machinery is end-to-end testable in
-    process; composite keys come back in key order.
-    """
-    sql = {
-        "mysql": MYSQL_PK_SQL,
-        "postgresql": POSTGRES_PK_SQL,
-        "sqlite": SQLITE_PK_SQL,
-    }[dialect].format(table=table)
-    conn = connect()
-    try:
-        cur = conn.cursor()
-        cur.execute(sql)
-        rows = cur.fetchall()
-        cols = [d[0].lower() for d in cur.description or []]
-
-        def col(row: tuple, name: str) -> Any:
-            return row[cols.index(name)]
-
-        if dialect == "mysql":
-            # Seq_in_index orders composite keys (mysql.go:726-733).
-            rows = sorted(rows, key=lambda r: col(r, "seq_in_index"))
-            return [col(r, "column_name") for r in rows]
-        if dialect == "sqlite":
-            pk_rows = [r for r in rows if col(r, "pk") > 0]
-            return [col(r, "name") for r in sorted(pk_rows, key=lambda r: col(r, "pk"))]
-        # postgresql (postgresql.go:672-692): rows arrive in index-key
-        # order via the ORDER BY; resolve the attname column by header
-        # name, same defensive treatment as the MySQL branch, so drivers
-        # that add columns (or a SELECT-list change) can't misalign it.
-        return [col(r, "attname") for r in rows]
-    finally:
-        conn.close()
-
-
 def jdbc_url(cfg: DBConfig) -> str:
     host = cfg.hosts[0] if cfg.hosts else "localhost"
     t = (cfg.type or "mysql").lower()

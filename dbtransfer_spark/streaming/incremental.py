@@ -143,336 +143,3 @@ def sessionized_stream(
             "session_value",
         )
     )
-
-
-def stateful_user_totals(
-    spark: SparkSession, source_dir: str, watermark: str = "2 hours"
-) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: per-user
-    lifetime totals (event count + value sum) carried across micro-batches
-    in explicit group state — the escape hatch for aggregations session/
-    tumbling windows can't express (the reference has no analog; this is
-    the Spark-native form of a hand-rolled per-key accumulator loop).
-
-    Each trigger emits the group's refreshed totals (update mode). State
-    is one fixed-width tuple per user — O(distinct keys), watermark-bounded
-    input, no growth with stream length — the 100 TB-safe shape.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    output_schema = "user_id long, n_events long, total_value double"
-    state_schema = "n_events long, total_value double"
-
-    def update(key, pdfs, state: GroupState):
-        n, tot = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            tot += float(pdf["value"].sum())
-        state.update((n, tot))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [tot]}
-        )
-
-    return (
-        read_event_stream(spark, source_dir)
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update, output_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-        )
-    )
-
-
-def last_touch_stream(
-    spark: SparkSession, source_dir: str, watermark: str = "2 hours"
-) -> DataFrame:
-    """Streaming last-touch attribution: per-user state carries the most
-    recent non-purchase event type; each purchase is emitted credited to
-    it (batch twin: operators/windows.attribution_last_touch — the
-    running ignore-nulls window becomes one string of state per user).
-
-    Events are sorted by (ts, event_id) WITHIN each micro-batch before
-    the state walk, so in-order sources replay exactly; out-of-order
-    arrivals across batches get the at-arrival-time attribution (the
-    documented streaming relaxation — exact event-time ordering across
-    batches needs watermark-delayed emission, which this operator trades
-    away for immediacy). State is one short string per user.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    output_schema = "user_id long, touch_type string, value double"
-    state_schema = "touch string"
-
-    def update(key, pdfs, state: GroupState):
-        (touch,) = state.get if state.exists else (None,)
-        out_touch, out_val = [], []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for etype, val in zip(pdf["event_type"], pdf["value"]):
-                if etype == "purchase":
-                    out_touch.append(touch if touch is not None else "none")
-                    out_val.append(float(val))
-                else:
-                    touch = etype
-        state.update((touch,))
-        if out_touch:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(out_touch),
-                    "touch_type": out_touch,
-                    "value": out_val,
-                }
-            )
-
-    return (
-        read_event_stream(spark, source_dir)
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update, output_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
-    )
-
-
-def purchases_after_view_stream(
-    spark: SparkSession, source_dir: str, within: str = "1 hour"
-) -> DataFrame:
-    """Stream-stream interval join: each purchase matched to the views the
-    same user made in the preceding ``within`` window — the streaming
-    attribution join (which ad click led to this conversion).
-
-    Both sides carry watermarks and the join condition bounds event-time
-    distance, so Spark can expire buffered state: a view is held only
-    until the watermark passes view_ts + within, giving O(events in
-    window) state per side instead of unbounded buffering — the only
-    formulation of stream-stream joins that survives an infinite stream."""
-    views = (
-        read_event_stream(spark, source_dir)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "2 hours")
-    )
-    purchases = (
-        read_event_stream(spark, source_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    return purchases.join(
-        views,
-        (F.col("p_user") == F.col("v_user"))
-        & (F.col("view_ts") <= F.col("purchase_ts"))
-        & (F.col("view_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {within}")),
-    ).select(
-        F.col("p_user").alias("user_id"),
-        "purchase_id",
-        "purchase_ts",
-        "view_id",
-        "view_ts",
-    )
-
-
-def deduped_event_stream(
-    spark: SparkSession, source_dir: str, watermark: str = "2 hours"
-) -> DataFrame:
-    """Streaming exact dedup on the event key with watermark-bounded
-    state: ``dropDuplicatesWithinWatermark`` keeps a key in the dedup
-    state only until the watermark passes its event time + the watermark
-    delay, so state is O(events per watermark window), not O(all keys
-    ever seen) — the formulation that survives an infinite stream (plain
-    ``dropDuplicates`` on a stream accumulates state forever).
-
-    The at-least-once upstream (file redelivery, producer retries) turns
-    into exactly-once rows downstream as long as duplicates arrive within
-    the watermark delay — the contract every ingestion pipeline needs."""
-    return (
-        read_event_stream(spark, source_dir)
-        .withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(["event_id"])
-    )
-
-
-def run_stream_to_memory(
-    spark: SparkSession, stream_df: DataFrame, query_name: str, output_mode: str = "complete"
-) -> DataFrame:
-    """Drain a (bounded) stream into an in-memory table and return it as a
-    DataFrame — test/debug harness for the aggregations above."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
-
-
-def enriched_event_stream(
-    spark: SparkSession, source_dir: str, sf_dir: str
-) -> DataFrame:
-    """Stream-static enrichment join: the event stream joined to the
-    (batch) customer dimension on user id — the canonical "decorate the
-    firehose with slowly-changing reference data" pattern. The static
-    side is planned per micro-batch, so a dimension refresh (new parquet
-    files) is picked up without restarting the query; no watermark or
-    state is needed because the static side never buffers.
-
-    Scale: Spark broadcasts the dimension when small; a 100 TB-scale
-    dimension would instead be pre-bucketed on the join key so each
-    micro-batch does a co-located join. Left join keeps events whose
-    user is not (yet) in the dimension — the late-arriving-dimension
-    reality of CDC-fed reference tables."""
-    from dbtransfer_spark.catalog import load_table
-
-    dim = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"),
-        F.col("c_name").alias("user_name"),
-        F.col("c_mktsegment").alias("user_segment"),
-    )
-    return (
-        read_event_stream(spark, source_dir)
-        .join(dim, "user_id", "left")
-        .select("event_id", "ts", "user_id", "event_type", "value",
-                "user_name", "user_segment")
-    )
-
-
-def quality_routed_stream(
-    spark: SparkSession,
-    source_dir: str,
-    accept_dir: str,
-    quarantine_dir: str,
-    checkpoint_dir: str,
-):
-    """Streaming quality routing: documents arrive as parquet drops, the
-    cheap quality gate (length + token count, the text_quality rules)
-    routes each micro-batch to an ACCEPT sink or a QUARANTINE sink — the
-    streaming twin of the file connectors' corrupt-record quarantine, and
-    the shape every continuously-ingesting corpus pipeline runs (reject
-    rows must be kept, not dropped: they are the audit trail for filter
-    tuning).
-
-    One foreachBatch writes both sinks from a persisted batch frame (the
-    gate is evaluated once per batch, not once per sink). foreachBatch
-    itself is only at-least-once: a crash after a sink write but before
-    the checkpoint commit replays the micro-batch. The writes are
-    therefore keyed by batch_id — each replay OVERWRITES its own
-    ``batch_id=N`` subdirectory instead of blind-appending to the root,
-    which upgrades the routing to exactly-once-in-effect across
-    restarts (the standard idempotent-foreachBatch pattern). Readers
-    just read the root; the batch_id partition column doubles as an
-    ingest audit trail. Returns the started StreamingQuery; callers
-    await termination."""
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    )
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    n_tokens = F.size(F.split("text", " ", -1))
-    passes = (F.length("text") >= 20) & (n_tokens >= 5)
-
-    def route(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.withColumn("__pass", passes).persist()
-        try:
-            # mode("overwrite") on the batch-keyed subdir = replay-safe:
-            # re-running batch N replaces exactly batch N's output
-            batch.filter(F.col("__pass")).drop("__pass").write.mode(
-                "overwrite"
-            ).parquet(f"{accept_dir}/batch_id={batch_id}")
-            batch.filter(~F.col("__pass")).drop("__pass").write.mode(
-                "overwrite"
-            ).parquet(f"{quarantine_dir}/batch_id={batch_id}")
-        finally:
-            batch.unpersist()
-
-    return (
-        stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def neardup_gated_stream(
-    spark: SparkSession,
-    source_dir: str,
-    corpus,
-    accept_dir: str,
-    duplicate_dir: str,
-    checkpoint_dir: str,
-    threshold: float = 0.5,
-):
-    """Streaming ingestion gate against an existing corpus: each
-    micro-batch of arriving documents is MinHash-signed once and probed
-    against the static corpus signature index (the same asymmetric
-    batch×corpus banded join as pipelines.near_dup_probe — never
-    corpus×corpus); near-duplicates land in ``duplicate_dir`` (the
-    audit trail), novel docs in ``accept_dir``. This is the continuous
-    twin of pipelines.incremental_release's dedup front half — the
-    shape a crawl firehose runs before anything enters the corpus.
-
-    The corpus side is signed ONCE at stream start and persisted —
-    per-batch cost is O(batch) + the banded probe, exactly the
-    signature-index economics of the batch pipeline. Writes are
-    batch_id-keyed overwrites (idempotent under foreachBatch replay,
-    same contract as quality_routed_stream). ``corpus`` is a DataFrame
-    of (doc_id, text). Returns the started StreamingQuery."""
-    from dbtransfer_spark.operators.dedup import minhash_signatures
-    from dbtransfer_spark.pipelines import near_dup_probe
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    )
-    sig_corpus = minhash_signatures(
-        corpus.select("doc_id", "text"), "doc_id", "text"
-    ).persist()
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-
-    def gate(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.persist()
-        drops = None
-        try:
-            sig_new = minhash_signatures(batch, "doc_id", "text")
-            drops = near_dup_probe(sig_new, sig_corpus, "doc_id", threshold).persist()
-            batch.join(drops, "doc_id", "left_anti").write.mode("overwrite").parquet(
-                f"{accept_dir}/batch_id={batch_id}"
-            )
-            batch.join(drops, "doc_id", "left_semi").write.mode("overwrite").parquet(
-                f"{duplicate_dir}/batch_id={batch_id}"
-            )
-        finally:
-            # release BOTH per-batch persists — a long-running stream must
-            # not accumulate CacheManager entries across micro-batches
-            batch.unpersist()
-            if drops is not None:
-                drops.unpersist()
-
-    return (
-        stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -12,9 +12,9 @@ Scale ground rules applied throughout (see SCALE.md):
 - broadcast hints only on fixed-size dims (nation/region) or behind
   ``broadcast_if_small``'s Catalyst-stats gate;
 - large⋈large joins are left to sort-merge + AQE;
-- aggregates that feed the cross-engine hash gate go through ``dsum`` /
-  ``davg`` (exact DECIMAL(30,10) accumulation) so shuffle order can never
-  flip a digit.
+- aggregates that feed the cross-engine hash gate go through ``dsum``
+  (exact DECIMAL(30,10) accumulation) so shuffle order can never flip a
+  digit.
 """
 
 from __future__ import annotations
@@ -23,20 +23,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbtransfer_spark.catalog import load_table
-from dbtransfer_spark.queries import broadcast_if_small, davg, dsum
-
-QUERIES = {}
-ORACLE = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
+from dbtransfer_spark.queries import broadcast_if_small, dsum
+from dbtransfer_spark.registry import register
 
 
 @register(

@@ -4,6 +4,8 @@ import os
 
 import pytest
 
+import __spark_entry__  # noqa: F401  (importing it registers every query)
+
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 

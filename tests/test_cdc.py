@@ -14,7 +14,7 @@ def _ts(s):
 
 
 def test_scd2_collapses_idempotent_updates_and_builds_intervals(spark):
-    from dbtransfer_spark.operators.cdc import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     rows = [
         (1, _ts("2024-01-01T00:00:00"), 7, "view", 0.0, None),
@@ -44,7 +44,7 @@ def test_scd2_collapses_idempotent_updates_and_builds_intervals(spark):
 
 
 def test_cdc_merge_update_delete_insert_passthrough(spark):
-    from dbtransfer_spark.operators.cdc import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     cust = spark.createDataFrame(
         [(1, "alice", 0, 10.0, "A"), (2, "bob", 0, 20.0, "A"), (3, "carol", 0, 30.0, "A")],
@@ -73,7 +73,7 @@ def test_cdc_merge_update_delete_insert_passthrough(spark):
 
 
 def test_fuzzy_linkage_blocks_and_distances(spark):
-    from dbtransfer_spark.operators.cdc import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     pairs = QUERIES["fuzzy_part_linkage"](spark, SF_SMOKE).collect()
     assert pairs, "smoke fixture should contain same-name part pairs"
@@ -88,7 +88,7 @@ def test_fellegi_sunter_empty_candidate_set_returns_no_rows(spark):
     """r14 ADVICE: with zero candidate pairs the global-agg rewrite used
     to emit 3 all-NULL rows where the pre-r14 groupBy form returned 0
     rows; the stats filter must restore the 0-row degenerate shape."""
-    from dbtransfer_spark.operators.cdc import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     # One part per (brand, size) block → no ka < kb pair anywhere.
     df = spark.createDataFrame(

@@ -125,58 +125,6 @@ def test_upsert_writer_retries_transient_failure(spark, tmp_path):
         assert conn.execute('SELECT count(*) FROM "t"').fetchone() == (2,)
 
 
-def test_detect_primary_key_dbapi_sqlite(tmp_path):
-    """C1/C2 machinery (header-resolved columns, key ordering) exercised
-    end-to-end through a real DB-API connection — composite key comes back
-    in declaration order, non-pk tables come back empty."""
-    from dbtransfer_spark.sources.jdbc import detect_primary_key_dbapi
-
-    db = str(tmp_path / "pk.db")
-    with sqlite3.connect(db) as conn:
-        conn.execute("CREATE TABLE comp (a int, b int, c text, PRIMARY KEY (b, a))")
-        conn.execute("CREATE TABLE nopk (x int)")
-
-    assert detect_primary_key_dbapi(_connect_factory(db), "sqlite", "comp") == ["b", "a"]
-    assert detect_primary_key_dbapi(_connect_factory(db), "sqlite", "nopk") == []
-
-
-def test_detect_primary_key_dbapi_postgres_fake_cursor():
-    """C2 runtime path (postgresql.go:672-692): the PG branch must send
-    the reference's pg_index/indisprimary catalog SQL and resolve the
-    attname column BY HEADER NAME — verified against a pg8000-style fake
-    whose cursor returns an extra leading column, so positional indexing
-    (rows[i][0]) would return the wrong values."""
-    from dbtransfer_spark.sources.jdbc import detect_primary_key_dbapi
-
-    executed: list[str] = []
-
-    class FakeCursor:
-        description = None
-
-        def execute(self, sql):
-            executed.append(sql)
-            # driver adds a leading column; attname is NOT position 0
-            self.description = (("indrelid",), ("attname",))
-
-        def fetchall(self):
-            # index-key order (the SQL's ORDER BY array_position)
-            return [(16385, "o_orderkey"), (16385, "o_custkey")]
-
-    class FakeConn:
-        def cursor(self):
-            return FakeCursor()
-
-        def close(self):
-            pass
-
-    pk = detect_primary_key_dbapi(FakeConn, "postgresql", "orders")
-    assert pk == ["o_orderkey", "o_custkey"]
-    (sql,) = executed
-    assert "pg_index" in sql and "indisprimary" in sql
-    assert "'orders'::regclass" in sql
-    assert "array_position" in sql  # composite keys in key order, not attnum
-
-
 def test_count_rows_nonnumeric_watermark_falls_back_to_df_count():
     # A checkpoint written by the reference tool can hold a varchar/timestamp
     # PK watermark; count_rows must not splice it into SQL (invalid literal +

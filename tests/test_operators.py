@@ -304,7 +304,7 @@ def test_grouped_agg_pandas_udaf_matches_builtin(spark):
 
 
 def test_correlation_matrix_bounds_and_selfconsistency(spark):
-    from dbtransfer_spark.queries import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     rows = QUERIES["correlation_matrix"](spark, SF_SMOKE).collect()
     assert len(rows) == 6
@@ -315,7 +315,7 @@ def test_correlation_matrix_bounds_and_selfconsistency(spark):
 
 
 def test_benford_ppm_sums_to_million(spark):
-    from dbtransfer_spark.queries import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     rows = QUERIES["benford_first_digit"](spark, SF_SMOKE).collect()
     assert {r["digit"] for r in rows} <= set(range(1, 10))
@@ -326,7 +326,7 @@ def test_benford_ppm_sums_to_million(spark):
 
 
 def test_gram_novelty_first_doc_is_fully_novel(spark):
-    from dbtransfer_spark.operators.text import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     rows = QUERIES["gram_novelty_rate"](spark, SF_SMOKE).collect()
     first = rows[0]
@@ -338,7 +338,7 @@ def test_gram_novelty_first_doc_is_fully_novel(spark):
 
 
 def test_source_gini_in_unit_interval(spark):
-    from dbtransfer_spark.operators.corpus_qa import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     rows = QUERIES["source_length_gini"](spark, SF_SMOKE).collect()
     assert len(rows) == 20
@@ -347,7 +347,7 @@ def test_source_gini_in_unit_interval(spark):
 
 
 def test_transition_matrix_probabilities_normalize(spark):
-    from dbtransfer_spark.operators.windows import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     rows = QUERIES["event_transition_matrix"](spark, SF_SMOKE).collect()
     by_prev = {}
@@ -359,7 +359,7 @@ def test_transition_matrix_probabilities_normalize(spark):
 
 
 def test_oov_rate_vocab_covers_common_words(spark):
-    from dbtransfer_spark.operators.text import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     rows = QUERIES["oov_rate"](spark, SF_SMOKE).collect()
     assert all(0 <= r["oov_ppm"] <= 1000000 for r in rows)
@@ -367,7 +367,7 @@ def test_oov_rate_vocab_covers_common_words(spark):
 
 
 def test_embedding_dim_stats_shape(spark):
-    from dbtransfer_spark.operators.similarity import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     rows = QUERIES["embedding_dim_stats"](spark, SF_SMOKE).collect()
     assert len(rows) == 64
@@ -376,7 +376,7 @@ def test_embedding_dim_stats_shape(spark):
 
 
 def test_knn_label_accuracy_invariants(spark):
-    from dbtransfer_spark.operators.similarity import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     rows = QUERIES["knn_label_accuracy"](spark, SF_SMOKE).collect()
     assert sum(r["n_probes"] for r in rows) == 50  # every probe classified once
@@ -385,7 +385,7 @@ def test_knn_label_accuracy_invariants(spark):
         assert 0 <= r["accuracy_ppm"] <= 1_000_000
 
 def test_mad_outliers_bounded_and_nonnegative(spark):
-    from dbtransfer_spark.queries import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     rows = QUERIES["mad_outlier_brand_prices"](spark, SF_SMOKE).collect()
     assert len(rows) == 25  # one row per brand
@@ -398,7 +398,7 @@ def test_mad_outliers_bounded_and_nonnegative(spark):
 
 
 def test_negative_sampling_no_self_pairs_and_bounded(spark):
-    from dbtransfer_spark.operators.corpus_qa import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     df = QUERIES["negative_sampling_ring"](spark, SF_SMOKE)
     rows = df.collect()
@@ -413,7 +413,7 @@ def test_negative_sampling_no_self_pairs_and_bounded(spark):
 
 
 def test_duplicate_block_ratio_bounds(spark):
-    from dbtransfer_spark.operators.dedup import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     rows = QUERIES["duplicate_block_ratio"](spark, SF_SMOKE).collect()
     for r in rows:
@@ -424,7 +424,7 @@ def test_duplicate_block_ratio_bounds(spark):
 
 
 def test_shard_assignment_covers_all_docs(spark):
-    from dbtransfer_spark.operators.corpus_qa import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     rows = QUERIES["shard_assignment"](spark, SF_SMOKE).collect()
     assert all(0 <= r["shard"] < 32 for r in rows)
@@ -439,7 +439,7 @@ def test_shard_assignment_covers_all_docs(spark):
 
 
 def test_unigram_freq_score_band_consistency(spark):
-    from dbtransfer_spark.operators.text import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     rows = QUERIES["unigram_freq_score"](spark, SF_SMOKE).collect()
     for r in rows:
@@ -453,7 +453,7 @@ def test_unigram_freq_score_band_consistency(spark):
 
 
 def test_vocab_coverage_monotone_in_cutoff(spark):
-    from dbtransfer_spark.operators.text import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     rows = QUERIES["vocab_coverage_curve"](spark, SF_SMOKE).collect()
     assert [r["cutoff"] for r in rows] == [100, 1000, 10000]
@@ -465,7 +465,7 @@ def test_vocab_coverage_monotone_in_cutoff(spark):
 
 
 def test_source_length_percentiles_ordered(spark):
-    from dbtransfer_spark.operators.corpus_qa import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     rows = QUERIES["source_length_percentiles"](spark, SF_SMOKE).collect()
     for r in rows:
@@ -474,7 +474,7 @@ def test_source_length_percentiles_ordered(spark):
 
 
 def test_join_key_skew_profile_shape(spark):
-    from dbtransfer_spark.operators.skew import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     rows = QUERIES["join_key_skew_profile"](spark, SF_SMOKE).collect()
     assert len(rows) == 20
@@ -510,7 +510,7 @@ def test_block_containment_detects_partial_copy(spark, tmp_path, monkeypatch):
 
 
 def test_segment_conversion_bounds(spark):
-    from dbtransfer_spark.operators.windows import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     rows = QUERIES["segment_conversion_rates"](spark, SF_SMOKE).collect()
     total_users = sum(r["n_users"] for r in rows)
@@ -521,7 +521,7 @@ def test_segment_conversion_bounds(spark):
 
 
 def test_ab_test_split_is_balanced_and_exhaustive(spark):
-    from dbtransfer_spark.operators.windows import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     r = QUERIES["ab_test_lift"](spark, SF_SMOKE).collect()[0]
     n = r["n_treatment"] + r["n_control"]
@@ -541,7 +541,7 @@ def test_text_ops_handle_unicode(spark, tmp_path):
     """CJK / emoji / combining marks through the text pipeline: char
     counts are code-point based (not bytes), chunking never splits words,
     fingerprints are stable, nothing crashes."""
-    from dbtransfer_spark.operators.text import QUERIES as TQ
+    from dbtransfer_spark.registry import QUERIES as TQ
 
     docs = [
         (1, "数据 处理 引擎 在 大规模 集群 上 运行", "zh", "s"),
@@ -569,85 +569,11 @@ def test_text_ops_handle_unicode(spark, tmp_path):
         first = min(by_doc[i], key=lambda r: r["chunk_idx"])
         assert t.startswith(first["chunk_text"][: len(t)])
 
-    from dbtransfer_spark.operators.text import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     fp1 = {r["doc_id"]: r["fingerprint"] for r in QUERIES["doc_fingerprint"](spark, d).collect()}
     fp2 = {r["doc_id"]: r["fingerprint"] for r in QUERIES["doc_fingerprint"](spark, d).collect()}
     assert fp1 == fp2  # deterministic on unicode input
-
-
-def test_lsh_scale_params_bound_candidate_growth(spark):
-    """VERDICT r5 #5: banding derived from n keeps the banded candidate
-    count O(n) when the corpus doubles (fixed banding would quadruple
-    it). Uniform pseudo-random vectors isolate the bucket-count effect."""
-    import random
-
-    from dbtransfer_spark.operators.similarity import (
-        banded_candidate_estimate,
-        banded_signatures,
-        lsh_scale_params,
-    )
-
-    dim, target = 16, 2.0
-
-    def mk(n):
-        rnd = random.Random(7)
-        return spark.createDataFrame(
-            [(i, [rnd.gauss(0.0, 1.0) for _ in range(dim)]) for i in range(n)],
-            "vec_id long, embedding array<double>",
-        )
-
-    for n in (512, 1024):
-        bits, band_bits, bands = lsh_scale_params(n, bands=2,
-                                                  target_candidates_per_item=target)
-        assert bits == band_bits * bands
-        banded = banded_signatures(mk(n), "vec_id", "embedding",
-                                   bands=bands, band_bits=band_bits, dim=dim)
-        est = banded_candidate_estimate(banded)
-        # pairs/item stays around the target, independent of n (×4 slack
-        # for non-uniform bucket occupancy of real projections)
-        assert est <= 4 * target * n, (n, band_bits, est)
-        # the estimate is exact: it equals the materialized join count
-        a = banded.select(F.col("vec_id").alias("a"), "band", "val")
-        b = banded.select(F.col("vec_id").alias("b"), "band", "val")
-        joined = a.join(b, ["band", "val"]).filter(F.col("a") < F.col("b")).count()
-        assert joined == est
-
-    # rule monotonicity: 100× the corpus demands strictly more band bits
-    assert lsh_scale_params(1024, 2, target)[1] < lsh_scale_params(102400, 2, target)[1]
-    # and the 8-bit floor reproduces the declared-query constants at fixture scale
-    assert lsh_scale_params(600, 2, 64.0) == (16, 8, 2)
-
-
-def test_banded_signatures_match_packed_slicing(spark):
-    """banded_signatures(bands=2, band_bits=8) must bucket identically to
-    slicing the packed 16-bit hyperplane_signatures word — the declared
-    queries' oracle constants stay valid for the per-band path."""
-    import random
-
-    from dbtransfer_spark.operators.similarity import (
-        banded_signatures,
-        hyperplane_signatures,
-    )
-
-    rnd = random.Random(11)
-    df = spark.createDataFrame(
-        [(i, [rnd.gauss(0.0, 1.0) for _ in range(64)]) for i in range(50)],
-        "vec_id long, embedding array<double>",
-    )
-    packed = hyperplane_signatures(df, "vec_id", "embedding", bits=16, dim=64)
-    sliced = {
-        (r["vec_id"], band, (r["sig"] >> (band * 8)) & 0xFF)
-        for r in packed.collect()
-        for band in range(2)
-    }
-    per_band = {
-        (r["vec_id"], r["band"], r["val"])
-        for r in banded_signatures(
-            df, "vec_id", "embedding", bands=2, band_bits=8, dim=64
-        ).collect()
-    }
-    assert per_band == sliced
 
 
 def test_hll_sketch_partials_merge_to_direct_sketch(spark):
@@ -751,7 +677,7 @@ def test_clamped_balance_matches_sequential_fold(spark):
     literal per-day recursion bal_t = max(0, bal_{t-1} + delta_t)."""
     import pyarrow.parquet as pq
 
-    from dbtransfer_spark.queries import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     li = pq.read_table(
         f"{SF_SMOKE}/lineitem.parquet",
@@ -792,7 +718,7 @@ def test_bloom_prefilter_has_no_false_negatives(spark):
     """Bloom soundness: every true dim member must pass the filter —
     n_bloom_pass ≥ n_true_match with n_false_pos the exact surplus,
     and the bit load must be consistent with a non-empty build."""
-    from dbtransfer_spark.queries import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     row = QUERIES["bloom_join_prefilter"](spark, SF_SMOKE).collect()[0]
     assert row.n_true_match > 0

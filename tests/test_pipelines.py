@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 
 from dbtransfer_spark.operators.dedup import minhash_signatures
-from dbtransfer_spark.pipelines import incremental_release, near_dup_against_corpus
+from dbtransfer_spark.pipelines import _signed, incremental_release, near_dup_probe
 from dbtransfer_spark.sources.versioned import VersionedDatasetStore
 
 
@@ -23,7 +23,7 @@ def store(spark, tmp_path):
 BASE = " ".join(f"w{i}" for i in range(60))
 
 
-def test_near_dup_against_corpus_flags_only_dups(spark):
+def test_near_dup_probe_flags_only_dups(spark):
     corpus = _docs(spark, [(1, BASE), (2, " ".join(f"c{i}" for i in range(60)))])
     batch = _docs(
         spark,
@@ -32,8 +32,29 @@ def test_near_dup_against_corpus_flags_only_dups(spark):
             (102, " ".join(f"n{i}" for i in range(60))),  # novel
         ],
     )
-    drops = {r["doc_id"] for r in near_dup_against_corpus(batch, corpus).collect()}
-    assert drops == {101}
+    probe = near_dup_probe(_signed(batch, "doc_id", "text"), _signed(corpus, "doc_id", "text"))
+    assert {r["doc_id"] for r in probe.collect()} == {101}
+
+
+def test_releases_leave_no_cached_frames(spark, store):
+    """A seed, an incremental and a re-signing release each unpersist
+    every frame they cache, so no entry outlives the release."""
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    incremental_release(spark, store, _docs(spark, [(1, BASE)]))
+    r = incremental_release(
+        spark, store,
+        _docs(spark, [(101, BASE.replace("w59", "zz")),
+                      (102, " ".join(f"x{i}" for i in range(60)))]),
+    )
+    assert r["n_dropped"] == 1
+    # an out-of-band commit leaves the latest version unsigned
+    store.commit(store.read().select("doc_id", "text"), note="out-of-band")
+    r = incremental_release(
+        spark, store, _docs(spark, [(201, BASE.replace("w58", "yy"))])
+    )
+    assert (r["n_batch"], r["n_dropped"]) == (1, 1)
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_incremental_release_flow(spark, store):

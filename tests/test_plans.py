@@ -148,38 +148,6 @@ def test_knn_ivf_broadcasts_fixed_sides_only(spark):
     # crossJoin, whose broadcast side is constant in SF.
 
 
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """Co-bucketed + sorted tables join with zero Exchange and zero Sort:
-    the pay-one-shuffle-at-ingest layout for repeated 100 TB joins."""
-    from pyspark.sql import functions as F
-
-    from dbtransfer_spark.catalog import create_bucketed_tables
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        names = create_bucketed_tables(
-            spark,
-            SF_SMOKE,
-            {"orders": (["o_orderkey"], 8), "lineitem": (["l_orderkey"], 8)},
-        )
-        joined = spark.table(names["orders"]).join(
-            spark.table(names["lineitem"]),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        plan = formatted_plan(joined)
-        assert "SortMergeJoin" in plan
-        assert count_exchanges(joined) == 0
-        # Bucket-local sort order satisfies the SMJ requirement too.
-        assert "Sort [" not in plan.split("SortMergeJoin")[0]
-        n = joined.count()
-        assert n == spark.table(names["lineitem"]).count()  # FK join
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        for t in ("bkt_orders", "bkt_lineitem"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
 # Queries whose plan legitimately contains a nested-loop product:
 # - crossJoin against a side CONSTANT in SF (probe-query set, 10-row
 #   centroid table): knn_bruteforce_cosine, knn_ivf_cosine;
@@ -519,7 +487,7 @@ def test_kmeans_assign_uses_in_array_argmin_and_fixed_broadcast(spark):
     and the argmin is computed in-array per point (array_min over
     struct(dist, cluster)) — NO window shuffle anywhere in the plan; a
     task never holds more than its own points."""
-    from dbtransfer_spark.operators.similarity import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     plan = formatted_plan(QUERIES["kmeans_lloyd"](spark, SF_SMOKE))
     tree = plan.split("\n\n")[0]  # simple-tree section; details repeat names
@@ -535,71 +503,19 @@ def test_gap_fill_windows_are_all_partitioned(spark):
     spine explode and both windows parallelize per user)."""
     import re
 
-    from dbtransfer_spark.operators.windows import QUERIES
+    from dbtransfer_spark.registry import QUERIES
 
     plan = formatted_plan(QUERIES["gap_fill_forward"](spark, SF_SMOKE))
     for spec in re.findall(r"windowspecdefinition\(([^)]*)\)", plan):
         assert "user_id" in spec, spec
 
 
-def test_zorder_layout_tightens_both_columns(spark, tmp_path):
-    """Z-order layout must yield parquet files whose min/max ranges are
-    tight in BOTH interleaved dimensions (multi-column row-group
-    pruning), where the PK-sorted layout is tight only in its leading
-    key — measured directly from the written footers."""
-    import pyarrow.parquet as pq
-
-    from dbtransfer_spark.catalog import load_table, zorder_layout
-
-    cols = ["l_orderkey", "l_partkey"]
-    zdir = str(tmp_path / "z")
-    zorder_layout(spark, SF_SMOKE, zdir, "lineitem", cols, n_parts=8)
-
-    pkdir = str(tmp_path / "pk")
-    (
-        load_table(spark, SF_SMOKE, "lineitem")
-        .repartitionByRange(8, "l_orderkey")
-        .sortWithinPartitions("l_orderkey")
-        .write.parquet(pkdir)
-    )
-
-    def footprint(d: str, col: str) -> float:
-        """Σ per-file (max-min) / (n_files × global range): 1.0 = every
-        file spans the whole domain (no pruning), → 1/n = perfect."""
-        import glob
-
-        spans, lo, hi = [], None, None
-        for f in glob.glob(f"{d}/*.parquet"):
-            md = pq.read_metadata(f)
-            names = md.schema.names
-            i = names.index(col)
-            fmin = min(
-                md.row_group(g).column(i).statistics.min
-                for g in range(md.num_row_groups)
-            )
-            fmax = max(
-                md.row_group(g).column(i).statistics.max
-                for g in range(md.num_row_groups)
-            )
-            spans.append(fmax - fmin)
-            lo = fmin if lo is None else min(lo, fmin)
-            hi = fmax if hi is None else max(hi, fmax)
-        return sum(spans) / (len(spans) * (hi - lo))
-
-    # z-order: BOTH columns substantially tighter than "every file spans
-    # everything"; pk layout: leading key tight, second column useless.
-    assert footprint(zdir, "l_orderkey") < 0.75
-    assert footprint(zdir, "l_partkey") < 0.75
-    assert footprint(pkdir, "l_orderkey") < 0.3
-    assert footprint(pkdir, "l_partkey") > 0.9
-
-
 def test_oov_rate_broadcasts_vocab(spark):
     """The ≤1000-row vocab membership probe must be a broadcast join
     (a shuffled join would move the whole token stream twice)."""
-    from dbtransfer_spark.operators import text
+    from dbtransfer_spark.registry import QUERIES
 
-    df = text.QUERIES["oov_rate"](spark, SF_SMOKE)
+    df = QUERIES["oov_rate"](spark, SF_SMOKE)
     assert has_broadcast_join(df)
     plan = formatted_plan(df)
     assert "TakeOrdered" in plan  # vocab selection: heap top-K, no global sort
@@ -608,9 +524,9 @@ def test_oov_rate_broadcasts_vocab(spark):
 def test_incremental_dedup_is_banded_equi_join(spark):
     """New-vs-corpus candidates must come from the (band, bucket)
     equi-join — the asymmetric production shape, never a product."""
-    from dbtransfer_spark.operators import dedup as D
+    from dbtransfer_spark.registry import QUERIES
 
-    df = D.QUERIES["dedup_incremental_new_vs_corpus"](spark, SF_SMOKE)
+    df = QUERIES["dedup_incremental_new_vs_corpus"](spark, SF_SMOKE)
     plan = formatted_plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -619,9 +535,9 @@ def test_incremental_dedup_is_banded_equi_join(spark):
 def test_session_path_topk_take_ordered(spark):
     """Top-10 path selection must be TakeOrdered (per-partition heaps),
     not a global sort of all paths."""
-    from dbtransfer_spark.operators import windows as W
+    from dbtransfer_spark.registry import QUERIES
 
-    df = W.QUERIES["session_path_topk"](spark, SF_SMOKE)
+    df = QUERIES["session_path_topk"](spark, SF_SMOKE)
     assert "TakeOrdered" in formatted_plan(df)
 
 
@@ -630,7 +546,9 @@ def test_correlation_matrix_single_aggregate_no_window(spark):
     second scan of the fact table. r11: the block-bounded cents moments
     add a second exchange, but both exchanges carry only partial rows
     (≤rows/32768 after map-side aggregation), never fact rows."""
-    df = Q.QUERIES["correlation_matrix"](spark, SF_SMOKE)
+    from dbtransfer_spark.registry import QUERIES
+
+    df = QUERIES["correlation_matrix"](spark, SF_SMOKE)
     plan = formatted_plan(df)
     assert "Window" not in plan
     # one scan node (each appears once in the tree and once in details)
@@ -641,9 +559,9 @@ def test_correlation_matrix_single_aggregate_no_window(spark):
 
 def test_event_type_user_overlap_broadcasts_size_table(spark):
     """The ≤|types|-row size tables must broadcast onto the pair rows."""
-    from dbtransfer_spark.operators import windows as W
+    from dbtransfer_spark.registry import QUERIES
 
-    df = W.QUERIES["event_type_user_overlap"](spark, SF_SMOKE)
+    df = QUERIES["event_type_user_overlap"](spark, SF_SMOKE)
     assert has_broadcast_join(df)
 
 
@@ -732,8 +650,7 @@ def test_r7s2_operator_plan_shapes(spark):
     """Round-7 session-2 operators' scale contracts, plan-asserted."""
     import re
 
-    import dbtransfer_spark.queries as Q2
-    from dbtransfer_spark.operators import text as T
+    from dbtransfer_spark.registry import QUERIES
 
     # item_cf_cosine2_topk: candidate generation must carry NO
     # fact-to-fact join — r14: pair counts come from the session-shared
@@ -745,7 +662,7 @@ def test_r7s2_operator_plan_shapes(spark):
     # earlier query in the session), its InMemoryRelation inlines the
     # cached build's Final/Initial plans, whose display-only scan lines
     # would inflate a naive tree.count("Scan parquet").
-    plan = formatted_plan(Q2.QUERIES["item_cf_cosine2_topk"](spark, SF_SMOKE))
+    plan = formatted_plan(QUERIES["item_cf_cosine2_topk"](spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) <= 4, plan
     assert "SortMergeJoin" not in plan, plan
     assert "CartesianProduct" not in plan
@@ -753,21 +670,21 @@ def test_r7s2_operator_plan_shapes(spark):
     # column_domain_overlap: the staged domain frame serves every
     # consumer — static plan shows cached scans, one parquet scan per
     # profiled column entry only
-    plan = formatted_plan(Q2.QUERIES["column_domain_overlap"](spark, SF_SMOKE))
+    plan = formatted_plan(QUERIES["column_domain_overlap"](spark, SF_SMOKE))
     assert "InMemoryTableScan" in plan, "domain frame must be staged"
     n_scans = len(re.findall(r"\(\d+\) Scan parquet", plan))
     assert n_scans <= 12, n_scans
 
     # watermark_cost_curve: ALL four thresholds ride ONE window pass —
     # exactly one Window node, one scan
-    plan = formatted_plan(Q2.QUERIES["watermark_cost_curve"](spark, SF_SMOKE))
+    plan = formatted_plan(QUERIES["watermark_cost_curve"](spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Window", plan)) == 1, plan
     tree = plan.split("\n\n")[0]
     assert tree.count("Scan parquet") == 1, tree
 
     # predicate_selectivity_audit: one scan computes all eight counts
     plan = formatted_plan(
-        Q2.QUERIES["predicate_selectivity_audit"](spark, SF_SMOKE)
+        QUERIES["predicate_selectivity_audit"](spark, SF_SMOKE)
     )
     tree = plan.split("\n\n")[0]
     assert tree.count("Scan parquet") == 1, tree
@@ -775,15 +692,13 @@ def test_r7s2_operator_plan_shapes(spark):
 
     # snapshot_table_diff: exactly one join (the full-outer key join),
     # collapsing into a single-row aggregate — no second pass
-    from dbtransfer_spark.operators import cdc as C
-
-    plan = formatted_plan(C.QUERIES["snapshot_table_diff"](spark, SF_SMOKE))
+    plan = formatted_plan(QUERIES["snapshot_table_diff"](spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) SortMergeJoin", plan)) == 1, plan
     assert "FullOuter" in plan, plan
 
     # token_id_encode_checksum: the vocab side must BROADCAST onto the
     # token stream (256 rows), never shuffle the fact side for the join
-    df = T.QUERIES["token_id_encode_checksum"](spark, SF_SMOKE)
+    df = QUERIES["token_id_encode_checksum"](spark, SF_SMOKE)
     assert has_broadcast_join(df)
 
     # weighted_median_by_flag (r13 histogram rewrite): one partial-
@@ -791,7 +706,7 @@ def test_r7s2_operator_plan_shapes(spark):
     # window frames share ONE exchange on the flag partitioning (no
     # second shuffle for the totals window), plus the final 3-row sort —
     # and the windows run over |distinct cents| rows, never fact rows
-    df = Q2.QUERIES["weighted_median_by_flag"](spark, SF_SMOKE)
+    df = QUERIES["weighted_median_by_flag"](spark, SF_SMOKE)
     assert count_exchanges(df) <= 3, formatted_plan(df)
     plan = formatted_plan(df)
     # both window nodes stacked on ONE sort+exchange (no re-shuffle)
@@ -904,7 +819,7 @@ def test_approx_sketches_exact_reference_is_histogram_percentile(spark):
     demonstrated sketch — and every join broadcasts."""
     import re
 
-    from dbtransfer_spark.functions.library import QUERIES as LIBQ
+    from dbtransfer_spark.registry import QUERIES as LIBQ
 
     df = LIBQ["approx_sketches"](spark, SF_SMOKE)
     plan = formatted_plan(df)

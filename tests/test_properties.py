@@ -300,10 +300,10 @@ WHERE p_brand = 'Brand#13' AND p_size <= 15
 
 
 def _correlated_sql(qname: str) -> str:
-    from dbtransfer_spark import tpch
+    from dbtransfer_spark.registry import ORACLE
 
     # q4/q21/q22's registered oracles ARE the literal correlated forms.
-    return _Q17_CORRELATED if qname == "q17_small_quantity_revenue" else tpch.ORACLE[qname]
+    return _Q17_CORRELATED if qname == "q17_small_quantity_revenue" else ORACLE[qname]
 
 
 def _assert_rows_equal(got: list[tuple], want: list[tuple], ctx: str) -> None:
@@ -339,11 +339,11 @@ def _assert_rows_equal(got: list[tuple], want: list[tuple], ctx: str) -> None:
 def test_decorrelated_tpch_matches_correlated_sql(spark, qname, tables):
     import shutil
 
-    from dbtransfer_spark import tpch
+    from dbtransfer_spark.registry import QUERIES
 
     tmp = _write_micro_fixture(tables)
     try:
-        got = [tuple(r) for r in tpch.QUERIES[qname](spark, tmp).collect()]
+        got = [tuple(r) for r in QUERIES[qname](spark, tmp).collect()]
         con = duckdb.connect()
         for name in tables:
             con.execute(

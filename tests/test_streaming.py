@@ -18,11 +18,24 @@ from dbtransfer_spark.catalog import load_table
 from dbtransfer_spark.operators import windows as batch_windows
 from dbtransfer_spark.streaming.incremental import (
     incremental_sync,
-    run_stream_to_memory,
     sessionized_stream,
     windowed_stream,
 )
 from tests.conftest import SF_SMOKE
+
+
+def run_stream_to_memory(spark, stream_df, query_name):
+    """Drain a (bounded) stream into an in-memory table and return it as a
+    DataFrame."""
+    q = (
+        stream_df.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return spark.table(query_name)
 
 
 @pytest.fixture(scope="module")
@@ -78,257 +91,6 @@ def test_sessionized_stream_matches_batch(spark, events_dir):
     batch = batch_windows.events_session_30m(spark, SF_SMOKE)
     assert streamed.count() == batch.count()
     assert streamed.exceptAll(batch).count() == 0
-
-
-def test_stateful_user_totals_matches_batch(spark, events_dir):
-    """applyInPandasWithState carries per-user state across micro-batches;
-    after draining, each user's latest emitted totals must equal the batch
-    groupBy aggregate over the same files."""
-    from dbtransfer_spark.streaming.incremental import stateful_user_totals
-
-    streamed = run_stream_to_memory(
-        spark,
-        stateful_user_totals(spark, events_dir),
-        "stateful_totals_test",
-        output_mode="update",
-    )
-    # Update mode emits one row per user per trigger; the final state is
-    # the row with that user's max n_events.
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    final = (
-        streamed.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events", "total_value")
-    )
-    batch = (
-        spark.read.parquet(events_dir)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("total_value"))
-    )
-    f = {r["user_id"]: r for r in final.collect()}
-    b = {r["user_id"]: r for r in batch.collect()}
-    assert set(f) == set(b)
-    for uid in b:
-        assert f[uid]["n_events"] == b[uid]["n_events"]
-        assert f[uid]["total_value"] == pytest.approx(b[uid]["total_value"], rel=1e-9)
-
-
-def test_stream_stream_interval_join_matches_batch(spark, events_dir):
-    """Watermarked stream-stream interval join (purchases × preceding
-    views within 1h) must equal the equivalent batch join once drained."""
-    from dbtransfer_spark.streaming.incremental import purchases_after_view_stream
-
-    streamed = run_stream_to_memory(
-        spark,
-        purchases_after_view_stream(spark, events_dir),
-        "ss_join_test",
-        output_mode="append",
-    )
-    ev = spark.read.parquet(events_dir)
-    views = ev.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("v_user"),
-        F.col("event_id").alias("view_id"),
-        F.col("ts").alias("view_ts"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    batch = purchases.join(
-        views,
-        (F.col("p_user") == F.col("v_user"))
-        & (F.col("view_ts") <= F.col("purchase_ts"))
-        & (F.col("view_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 hour")),
-    ).select(
-        F.col("p_user").alias("user_id"), "purchase_id", "purchase_ts", "view_id", "view_ts"
-    )
-    assert streamed.count() == batch.count()
-    assert streamed.count() > 0  # fixture actually exercises the join
-    assert streamed.exceptAll(batch).count() == 0
-
-
-def test_deduped_stream_drops_redelivered_events(spark, tmp_path):
-    """Source with every file delivered twice (at-least-once upstream):
-    the deduped stream must emit each event_id exactly once and match the
-    batch-distinct result."""
-    from dbtransfer_spark.streaming.incremental import deduped_event_stream
-
-    src_dir = str(tmp_path / "dup_src")
-    ev = load_table(spark, SF_SMOKE, "events").repartition(2)
-    ev.write.parquet(src_dir)
-    ev.write.mode("append").parquet(src_dir)  # full redelivery
-
-    streamed = run_stream_to_memory(
-        spark,
-        deduped_event_stream(spark, src_dir),
-        "dedup_stream_test",
-        output_mode="append",
-    )
-    n_events = ev.count()
-    assert spark.read.parquet(src_dir).count() == 2 * n_events  # source truly duplicated
-    assert streamed.count() == n_events
-    assert streamed.select("event_id").distinct().count() == n_events
-    assert streamed.select(*ev.columns).exceptAll(ev).count() == 0
-
-
-def test_last_touch_stream_matches_batch(spark, events_dir):
-    """Streaming last-touch attribution (per-user state string) must
-    aggregate to the same per-touch totals as the batch window query on
-    the same events."""
-    from dbtransfer_spark.streaming.incremental import last_touch_stream
-
-    streamed = run_stream_to_memory(
-        spark,
-        last_touch_stream(spark, events_dir),
-        "last_touch_test",
-        output_mode="append",
-    )
-    agg = (
-        streamed.groupBy("touch_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_purchases"),
-            F.round(F.sum(F.col("value").cast("decimal(30,10)")), 2)
-            .cast("double")
-            .alias("attributed_value"),
-        )
-    )
-    batch = batch_windows.attribution_last_touch(spark, SF_SMOKE)
-    got = {r["touch_type"]: r for r in agg.collect()}
-    want = {r["touch_type"]: r for r in batch.collect()}
-    assert set(got) == set(want)
-    for t in want:
-        assert got[t]["n_purchases"] == want[t]["n_purchases"]
-        assert got[t]["attributed_value"] == pytest.approx(
-            want[t]["attributed_value"], abs=1e-9
-        )
-
-
-def test_enriched_stream_matches_batch_join(spark, events_dir):
-    from dbtransfer_spark.streaming.incremental import enriched_event_stream
-
-    streamed = run_stream_to_memory(
-        spark,
-        enriched_event_stream(spark, events_dir, SF_SMOKE),
-        "enrich_stream_test",
-        output_mode="append",
-    )
-    dim = load_table(spark, SF_SMOKE, "customer").select(
-        F.col("c_custkey").alias("user_id"),
-        F.col("c_name").alias("user_name"),
-        F.col("c_mktsegment").alias("user_segment"),
-    )
-    batch = (
-        load_table(spark, SF_SMOKE, "events")
-        .join(dim, "user_id", "left")
-        .select("event_id", "ts", "user_id", "event_type", "value",
-                "user_name", "user_segment")
-    )
-    assert streamed.count() == batch.count()
-    assert streamed.exceptAll(batch).count() == 0
-    # events with no matching dimension row survive (left join)
-    n_unmatched = streamed.filter(F.col("user_name").isNull()).count()
-    assert n_unmatched == batch.filter(F.col("user_name").isNull()).count()
-
-
-def test_quality_routed_stream_splits_and_preserves_all_rows(spark, tmp_path):
-    from dbtransfer_spark.streaming.incremental import quality_routed_stream
-
-    src = str(tmp_path / "src")
-    rows = [
-        (1, "a b", "en", "s", 3),                          # too short → quarantine
-        (2, " ".join(f"w{i}" for i in range(30)), "en", "s", 100),  # pass
-        (3, "tiny", "en", "s", 4),                          # quarantine
-        (4, " ".join(f"x{i}" for i in range(10)), "en", "s", 40),   # pass
-    ]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.parquet(src)
-    accept, quarantine = str(tmp_path / "ok"), str(tmp_path / "bad")
-    q = quality_routed_stream(spark, src, accept, quarantine, str(tmp_path / "ckpt"))
-    q.awaitTermination()
-    ok = spark.read.parquet(accept)
-    bad = spark.read.parquet(quarantine)
-    assert {r["doc_id"] for r in ok.collect()} == {2, 4}
-    assert {r["doc_id"] for r in bad.collect()} == {1, 3}
-    # restart with no new data: checkpoint prevents re-processing
-    q2 = quality_routed_stream(spark, src, accept, quarantine, str(tmp_path / "ckpt"))
-    q2.awaitTermination()
-    assert spark.read.parquet(accept).count() == 2
-
-
-def test_quality_routed_stream_replay_is_idempotent(spark, tmp_path):
-    """ADVICE r5: a crash after the sink writes but before the checkpoint
-    commit replays the micro-batch; the batch_id-keyed overwrite must not
-    duplicate rows. Simulated by deleting the commit marker so restart
-    re-runs batch 0 against already-written sinks."""
-    import shutil
-
-    from dbtransfer_spark.streaming.incremental import quality_routed_stream
-
-    src = str(tmp_path / "src")
-    rows = [
-        (1, "a b", "en", "s", 3),
-        (2, " ".join(f"w{i}" for i in range(30)), "en", "s", 100),
-    ]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.parquet(src)
-    accept, quarantine = str(tmp_path / "ok"), str(tmp_path / "bad")
-    ckpt = str(tmp_path / "ckpt")
-    quality_routed_stream(spark, src, accept, quarantine, ckpt).awaitTermination()
-    assert spark.read.parquet(accept).count() == 1
-    # crash-before-commit: sinks written, commit marker gone → replay
-    shutil.rmtree(tmp_path / "ckpt" / "commits")
-    quality_routed_stream(spark, src, accept, quarantine, ckpt).awaitTermination()
-    ok = spark.read.parquet(accept)
-    bad = spark.read.parquet(quarantine)
-    assert [r["doc_id"] for r in ok.collect()] == [2]
-    assert [r["doc_id"] for r in bad.collect()] == [1]
-
-
-def test_neardup_gated_stream_matches_batch_probe(spark, tmp_path):
-    """Batch/stream parity: the streaming gate's accept/duplicate split
-    equals the batch pipeline's near-dup judgement on the same data."""
-    from dbtransfer_spark.pipelines import near_dup_against_corpus
-    from dbtransfer_spark.streaming.incremental import neardup_gated_stream
-
-    base = " ".join(f"w{i}" for i in range(60))
-    corpus = spark.createDataFrame(
-        [(1, base), (2, " ".join(f"c{i}" for i in range(60)))],
-        "doc_id long, text string",
-    )
-    arriving = [
-        (101, base.replace("w59", "zz"), "en", "s", 100),   # near-dup of corpus 1
-        (102, " ".join(f"n{i}" for i in range(60)), "en", "s", 100),  # novel
-    ]
-    src = str(tmp_path / "src")
-    spark.createDataFrame(
-        arriving, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.parquet(src)
-    accept, dups = str(tmp_path / "ok"), str(tmp_path / "dup")
-    q = neardup_gated_stream(
-        spark, src, corpus, accept, dups, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination()
-    got_accept = {r["doc_id"] for r in spark.read.parquet(accept).collect()}
-    got_dups = {r["doc_id"] for r in spark.read.parquet(dups).collect()}
-    batch_df = spark.createDataFrame(
-        [(i, t) for i, t, *_ in arriving], "doc_id long, text string"
-    )
-    expected_drop = {
-        r["doc_id"] for r in near_dup_against_corpus(batch_df, corpus).collect()
-    }
-    assert got_dups == expected_drop == {101}
-    assert got_accept == {102}
-    # restart with no new data: nothing reprocessed
-    q2 = neardup_gated_stream(
-        spark, src, corpus, accept, dups, str(tmp_path / "ckpt")
-    )
-    q2.awaitTermination()
-    assert spark.read.parquet(accept).count() == 1
 
 
 def test_stream_to_jdbc_upsert_exactly_once_effect(spark, tmp_path):

@@ -17,6 +17,10 @@ from git archaeology.
 The workload is FROZEN and identical to bench.py's ``canary_sec``
 component (range → sum through the noop sink; pure CPU, no shuffle, no
 data dependency) — never change it, cross-round ratios depend on it.
+
+The sweep tools also share ``drain_to_idle`` (kill the sweep JVM and wait
+for an idle machine before the fresh-JVM tail) and ``update_scale_md``
+(rewrite their generated section of SCALE.md) from here.
 """
 
 from __future__ import annotations
@@ -143,3 +147,53 @@ def fresh_jvm_qtime(name: str, sf_dir: str, repo_root: str) -> dict | None:
     best["canary_degraded"] = not is_calm(best["fresh_jvm_canary"])
     best["fresh_jvm_attempts"] = attempts
     return best
+
+
+def drain_to_idle(max_wait: float = 300.0, threshold: float = 4.0) -> None:
+    """Cancelled O(n²) straggler tasks can keep spinning in the stopped
+    sweep session's JVM long after spark.stop() returns (local mode:
+    tight-loop task threads shrug off interrupts) — fresh-JVM tail
+    timings taken while they drain measured 5-10× standalone (r12: the
+    octave tail recorded dedup_exact_fingerprint at 10.6 s vs 1.6 s on
+    the drained machine). Kill the gateway JVM outright, then wait for
+    the 1-minute load average to fall below `threshold` before timing
+    anything else."""
+    try:
+        import pyspark
+
+        gw = pyspark.SparkContext._gateway
+        if gw is not None:
+            gw.shutdown()
+            proc = getattr(gw, "proc", None)
+            if proc is not None:
+                proc.terminate()
+            # r12 ADVICE: clear the dangling refs so any later
+            # get_spark() in this process relaunches a fresh JVM instead
+            # of failing on the dead gateway
+            pyspark.SparkContext._gateway = None
+            pyspark.SparkContext._jvm = None
+    except Exception:
+        pass
+    t0 = time.monotonic()
+    while time.monotonic() - t0 < max_wait:
+        try:
+            with open("/proc/loadavg") as f:
+                if float(f.read().split()[0]) < threshold:
+                    return
+        except OSError:
+            return
+        time.sleep(10)
+
+
+def update_scale_md(section: str, begin: str, end: str, heading: str) -> None:
+    """Replace the ``begin``..``end`` section of SCALE.md with ``section``,
+    or append it under ``heading`` when the markers are not there yet."""
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE.md")
+    with open(path) as f:
+        doc = f.read()
+    if begin in doc and end in doc:
+        doc = doc[: doc.index(begin)] + section + doc[doc.index(end) + len(end):]
+    else:
+        doc = doc.rstrip() + f"\n\n## {heading}\n\n" + section + "\n"
+    with open(path, "w") as f:
+        f.write(doc)

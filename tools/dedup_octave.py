@@ -140,42 +140,6 @@ def build_fixture() -> None:
 WARM_RERUN_ABOVE = 5.0
 
 
-def _drain_to_idle(max_wait: float = 300.0, threshold: float = 4.0) -> None:
-    """Cancelled O(n²) straggler tasks can keep spinning in the stopped
-    sweep session's JVM long after spark.stop() returns (local mode:
-    tight-loop task threads shrug off interrupts) — fresh-JVM tail
-    timings taken while they drain measured 5-10× standalone (r12: the
-    octave tail recorded dedup_exact_fingerprint at 10.6 s vs 1.6 s on
-    the drained machine). Kill the gateway JVM outright, then wait for
-    the 1-minute load average to fall below `threshold` before timing
-    anything else."""
-    try:
-        import pyspark
-
-        gw = pyspark.SparkContext._gateway
-        if gw is not None:
-            gw.shutdown()
-            proc = getattr(gw, "proc", None)
-            if proc is not None:
-                proc.terminate()
-            # r12 ADVICE: clear the dangling refs so any later
-            # get_spark() in this process relaunches a fresh JVM instead
-            # of failing on the dead gateway
-            pyspark.SparkContext._gateway = None
-            pyspark.SparkContext._jvm = None
-    except Exception:
-        pass
-    t0 = time.monotonic()
-    while time.monotonic() - t0 < max_wait:
-        try:
-            with open("/proc/loadavg") as f:
-                if float(f.read().split()[0]) < threshold:
-                    return
-        except OSError:
-            return
-        time.sleep(10)
-
-
 def run_family(cap: float) -> dict:
     import __spark_entry__ as entry
 
@@ -252,7 +216,7 @@ def run_family(cap: float) -> dict:
         if v.get("sec", 0) > WARM_RERUN_ABOVE and n not in EXPECTED_TIMEOUTS
     ]
     spark.stop()
-    _drain_to_idle()
+    canary.drain_to_idle()
     for name in tail:
         fresh = canary.fresh_jvm_qtime(name, DST, _REPO_ROOT)
         if fresh is not None:
@@ -306,22 +270,6 @@ def render_section(results: dict, cap: float) -> str:
     return "\n".join(lines)
 
 
-def update_scale_md(section: str) -> None:
-    path = os.path.join(_REPO_ROOT, "SCALE.md")
-    with open(path) as f:
-        doc = f.read()
-    if _BEGIN in doc and _END in doc:
-        head = doc[: doc.index(_BEGIN)]
-        tail = doc[doc.index(_END) + len(_END):]
-        doc = head + section + tail
-    else:
-        doc = doc.rstrip() + (
-            "\n\n## ×100 dedup-clique octave (regenerated per session)\n\n"
-        ) + section + "\n"
-    with open(path, "w") as f:
-        f.write(doc)
-
-
 def main() -> int:
     cap = float(os.environ.get("SPARK_GRAFT_SWEEP_CAP", "120"))
     if "--build" in sys.argv or not os.path.exists(
@@ -333,7 +281,9 @@ def main() -> int:
         json.dump(results, f, indent=1, sort_keys=True)
     section = render_section(results, cap)
     if "--update-scale" in sys.argv:
-        update_scale_md(section)
+        canary.update_scale_md(
+            section, _BEGIN, _END, "×100 dedup-clique octave (regenerated per session)"
+        )
     else:
         print(section)
     bad = [

@@ -22,8 +22,6 @@ JSON dump consumed by PLAN_AUDIT.md regeneration.
 
 from __future__ import annotations
 
-import contextlib
-import io
 import json
 import os
 import re
@@ -31,13 +29,6 @@ import sys
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO_ROOT)
-
-
-def formatted_plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def audit_one(plan: str) -> dict:
@@ -66,6 +57,7 @@ def main() -> int:
     if "--json" in sys.argv:
         out_json = sys.argv[sys.argv.index("--json") + 1]
 
+    from dbtransfer_spark.plans import formatted_plan
     from dbtransfer_spark.session import get_spark
 
     import __spark_entry__ as entry
