@@ -12,11 +12,17 @@ source/target column schema                  one parquet footer read on the
                                                driver, no Spark job (read_files)
 checkpoint load/skip (mysql.go:222-229)      CheckpointStore.is_complete
 COUNT(*) denominator (mysql.go:243-249)      rows counted on the upsert write
-DDL clone+apply (mysql.go:254-274)           Sink.ensure_schema
+DDL clone+apply (mysql.go:254-274)           Sink.ensure_schema (Cassandra reads
+                                               the source catalog)
 batch loop WHERE pk>? LIMIT n                one partitioned job, or PK-range
   (mysql.go:302-368)                           chunks for checkpoint granularity
-per-batch upsert write                       Sink.upsert (idempotent)
-rate limit (mysql.go:324-327)                RateLimiter.acquire per chunk
+per-batch upsert write                       Sink.upsert (idempotent); database
+                                               sinks batch per partition with
+                                               retry and pacing
+rate limit (mysql.go:324-327)                database sinks pace each write's
+                                               partitions to a per-table share;
+                                               RateLimiter.acquire after each
+                                               file-sink write
 checkpoint policy (mysql.go:332-355)         save watermark per chunk
 goroutine-per-table + semaphore              ThreadPoolExecutor(workers) +
   (mysql.go:156-169)                           FAIR scheduler pools
@@ -26,10 +32,16 @@ single-shot mode is one Spark job whose retry unit is the task, relying on
 the idempotent sink — at 100 TB, single-shot is the right default because
 each of the N read partitions already retries independently, which is the
 failure-isolation the reference's 1000-row batches exist to provide.
+
+This is the one runtime for every engine: files, JDBC, MongoDB and
+Cassandra. Like the reference, MongoDB and Cassandra copy only to their
+own type — their frames carry whole documents or rows in one opaque
+column — so any other pairing with them is refused at construction.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import math
 import threading
 from concurrent.futures import ThreadPoolExecutor, as_completed
@@ -41,7 +53,9 @@ from pyspark.sql import functions as F
 from dbtransfer_spark.checkpoint import Checkpoint, CheckpointStore
 from dbtransfer_spark.config import Config, TableMapping
 from dbtransfer_spark.governance import MigrationStats, RateLimiter
-from dbtransfer_spark.sources.base import get_sink, get_source
+from dbtransfer_spark.sources.base import BatchSink, get_sink, get_source
+from dbtransfer_spark.sources.cassandra import CassandraSink, CassandraSource
+from dbtransfer_spark.sources.mongodb import MongoSink, MongoSource
 from dbtransfer_spark.transforms import apply_transforms
 
 
@@ -54,8 +68,17 @@ class TransferEngine:
     ):
         self.spark = spark
         self.config = config
-        self.source = get_source(spark, config.source)
-        self.sink = get_sink(spark, config.destination)
+        migration = config.migration
+        self.source = get_source(spark, config.source, migration)
+        # R3: a database sink paces its writes while they run, and up to
+        # `workers` tables write at once, so each gets an equal share of
+        # the global rows/sec cap.
+        at_once = max(1, min(migration.workers, len(config.source.tables)))
+        share = max(1, migration.rate_limit // at_once) if migration.rate_limit > 0 else 0
+        self.sink = get_sink(
+            spark, config.destination, dataclasses.replace(migration, rate_limit=share)
+        )
+        _check_pair(config, self.source, self.sink)
         self.store = CheckpointStore(
             config.migration.checkpoint_dir, engine=config.source.type
         )
@@ -94,6 +117,10 @@ class TransferEngine:
 
     def _run_table(self, table: TableMapping) -> dict[str, Any]:
         self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", table.name)
+        # A pool thread starts with no active session on the JVM side, and
+        # Spark plans `df.rdd` (the database sinks' foreachPartition) with
+        # the active session's SQL conf; without it, the defaults.
+        self.spark._jvm.SparkSession.setActiveSession(self.spark._jsparkSession)
         name = table.name
         if self.store.is_complete(name):  # mysql.go:222-229
             return {"skipped": True, "reason": "checkpoint complete"}
@@ -102,9 +129,12 @@ class TransferEngine:
 
         key_columns = self.source.detect_primary_key(table)
         df = self.source.read(table)
-        self.sink.ensure_schema(df, table)  # C5/W5
+        self.sink.ensure_schema(df, table, self.source)  # C5/W5
 
-        pk = key_columns[0] if key_columns else None
+        # The watermark and the chunk bounds are value-order positions on
+        # the first key column; a source that does not resume by key
+        # (Cassandra) re-runs the table whole.
+        pk = key_columns[0] if key_columns and self.source.resumes_by_key else None
         # Reference keys last_key by the PK column name (mysql.go:539).
         watermark = self.store.watermark(name, pk) if pk else None
         if watermark is not None and pk is not None:
@@ -139,16 +169,9 @@ class TransferEngine:
             # table is registered first, so a failed write still lists it.
             self.stats.init_table(name, 0)
             rows = self.sink.upsert(df, table, key_columns)
-            if rows >= 0:
-                self.stats.set_total(name, rows)
-                self.stats.add_processed(name, rows)
-                self.limiter.acquire(rows)
-            else:
-                # a sink that cannot count its writes: the source's own
-                # count (server-side for JDBC) is the denominator
-                self.stats.set_total(
-                    name, self.source.count_rows(df, table, pk, watermark)
-                )
+            self.stats.set_total(name, rows)
+            self.stats.add_processed(name, rows)
+            self._pace(rows)
         self.store.mark_complete(name)  # mysql.go:374-377
         return {"rows": rows, "resumed_from": watermark}
 
@@ -174,15 +197,30 @@ class TransferEngine:
             end = start + width - 1
             chunk = df.filter((F.col(pk) >= start) & (F.col(pk) <= end))
             rows = self.sink.upsert(chunk, table, key_columns)
-            if rows < 0:
-                rows = 0
             total += rows
             self.stats.add_processed(name, rows)
-            self.limiter.acquire(rows)  # R3
+            self._pace(rows)
             ckpt = self.store.load(name) or Checkpoint()
             ckpt.last_key[pk] = str(end)  # keyed by PK column (mysql.go:539)
             self.store.save(name, ckpt)  # R5/R7
         return total
+
+    def _pace(self, rows: int) -> None:
+        """R3 for the file sinks, between writes; a database sink has
+        already paced the write itself (``write_partitions``)."""
+        if not isinstance(self.sink, BatchSink):
+            self.limiter.acquire(rows)
+
+
+def _check_pair(config: Config, source, sink) -> None:
+    """Refuse a MongoDB or Cassandra transfer to any other engine type."""
+    for source_cls, sink_cls in ((MongoSource, MongoSink), (CassandraSource, CassandraSink)):
+        if isinstance(source, source_cls) != isinstance(sink, sink_cls):
+            raise ValueError(
+                f"cannot transfer {config.source.type or 'parquet'} to "
+                f"{config.destination.type or 'parquet'}: "
+                "MongoDB and Cassandra copy only to their own type"
+            )
 
 
 def _coerce(df, column: str, value: str):

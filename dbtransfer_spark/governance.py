@@ -8,9 +8,11 @@ would serialize executors, so the cap is factored: the driver divides the
 global rows/sec across the writer's partitions
 (cap_per_partition = rate_limit / num_partitions) and each partition paces
 itself locally — same aggregate ceiling, no cross-executor coordination
-(SURVEY.md §7 hard-part #4). The driver-side limiter below is used for
-chunked (driver-sequenced) transfers; the per-partition pacing lives in the
-foreachPartition writers (sources/jdbc.py).
+(SURVEY.md §7 hard-part #4). A database sink paces while it writes, in
+the partition writer every database sink shares
+(``sources.base.write_partitions``), and the engine splits the cap
+evenly across the tables that write at once. The driver-side limiter
+below paces the file sinks, between their writes.
 
 Stats mirror MigrationStats (migration.go:37-176): totals plus an
 interval-windowed rows/sec.

@@ -689,22 +689,17 @@ def _minhash_lsh_impl(spark: SparkSession, sf_dir: str, portable_hash: bool) -> 
 # ---------------------------------------------------------------------------
 
 
-def simhash(
-    df: DataFrame, id_col: str, text_col: str, bits: int = 64, portable_hash: bool = False
-) -> DataFrame:
+def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 60) -> DataFrame:
     """SimHash over word tokens: per-bit majority vote of token hashes,
     via higher-order functions (no UDF). Hamming-close signatures ⇒
-    similar token multisets. Fast path hashes tokens with xxhash64
-    (64 independent bits); the portable path uses the md5-derived 60-bit
-    hash (use bits=60) so other engines replay signatures exactly."""
+    similar token multisets. Tokens hash with the md5-derived 60-bit hash,
+    so other engines replay signatures exactly (``_simhash_oracle``)."""
+    if bits > 60:
+        raise ValueError("simhash caps at 60 bits (15 hex digits of md5)")
     tokens = F.split(F.col(text_col), " ", -1)
-    if portable_hash:
-        if bits > 60:
-            raise ValueError("portable simhash caps at 60 bits (15 hex digits of md5)")
-        token_hash = lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
-    else:
-        token_hash = lambda t: F.xxhash64(t)
-    hashes = F.transform(tokens, token_hash)
+    hashes = F.transform(
+        tokens, lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
+    )
     # Project token hashes once; the per-bit vote aggregates reuse the
     # materialized array (same CSE reasoning as minhash_signatures).
     hashed = df.select(F.col(id_col), hashes.alias("__th"))
@@ -716,12 +711,11 @@ def simhash(
 
     bit_votes = [F.aggregate("__th", F.lit(0), vote(i)) for i in range(bits)]
     # Assemble the signature with literal shift amounts (shiftleft requires
-    # an int, not a Column); bit 63 is the sign bit → min-long literal.
+    # an int, not a Column).
     sig = F.lit(0).cast("long")
     for i, v in enumerate(bit_votes):
-        bit_val = -(1 << 63) if i == 63 else (1 << i)
         sig = sig.bitwiseOR(
-            F.when(v > 0, F.lit(bit_val).cast("long")).otherwise(F.lit(0).cast("long"))
+            F.when(v > 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
         )
     return hashed.select(F.col(id_col), sig.alias("simhash"))
 
@@ -850,7 +844,7 @@ def simhash_hamming_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()  # signature pass + two multiplicity probes + dup count
     )
-    sigs = simhash(dt, "th", "text", bits=60, portable_hash=True)
+    sigs = simhash(dt, "th", "text")
     chunk_bits = 60 // 4
     mask = (1 << chunk_bits) - 1
     chunked = sigs.select(
@@ -946,7 +940,7 @@ def _simhash_impl(
         .withColumn("th", F.element_at("ids", 1))
         .persist()  # signature pass + two id-expansion joins + within-pairs
     )
-    sigs = simhash(dt, "th", "text", bits=bits, portable_hash=True)
+    sigs = simhash(dt, "th", "text", bits=bits)
     chunks = sigs.select(
         "th",
         "simhash",

@@ -59,6 +59,9 @@ def get_spark(
         # long table scan ahead of every other table's work).
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # The Mongo source is a Python data source; its reader turns the
+        # engine's pushed `_id` comparisons into the wire filter.
+        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions if shuffle_partitions else max(cpus, 8)),

@@ -1,170 +1,182 @@
-"""Cassandra/ScyllaDB source/sink via the Spark Cassandra connector.
+"""Cassandra/ScyllaDB source and sink on the transfer engine.
 
 Reference behavior re-expressed (SURVEY.md §2/§2.7):
-- S4 paged scan with manual token-resume (cassandra.go:576-592, 726-844) →
-  the connector splits the ring into token ranges and reads them in
-  parallel with replica locality — the parallelism the reference's single
-  session lacks. Resume: re-run idempotently (INSERT is an upsert in CQL)
-  or filter on a clustering watermark; token-WHERE resume
-  (cassandra.go:1066-1142) is subsumed by per-range task retries.
-- S5 TTL projection (``TTL(col)`` per non-key column, cassandra.go:531-575)
-  → ``ttl(col)`` columns via the connector's SQL support; write-side TTL
-  via ``spark.cassandra.output.ttl`` — single-TTL-per-row approximation,
-  same as the reference applies one TTL value per INSERT
+- S4 paged scan (cassandra.go:576-592, 726-844): the source is a Python
+  data source with one input partition per table, the reference's one
+  paged session (cassandra.go:645). Key columns cross Spark as typed
+  columns, because the engine's watermark, chunk bounds and upsert key
+  read them; the rest of the projected row crosses as one opaque column.
+- Resume is per table, by an idempotent re-run: CQL INSERT is an upsert.
+- S5 TTL projection (``TTL(col)`` per non-key scalar column,
+  cassandra.go:531-575) is read beside the values; the sink writes one
+  TTL per row, the first eligible column's, as the reference does
   (cassandra.go:677-691).
-- W4 UnloggedBatch writes (cassandra.go:648-700) → connector default
-  batching grouped by partition key, QUORUM consistency (cassandra.go:1170).
-- C6/C7 UDT/UDF metadata migration (cassandra.go:293-443) → driver-side CQL
-  passthrough statements generated here; execution requires a cassandra
-  driver at runtime.
+- W4 (cassandra.go:648-700): the sink writes UNLOGGED batches of
+  ``INSERT ... [USING TTL ?]`` at QUORUM (cassandra.go:1170) through the
+  shared partition writer.
+- C3/C5/C6/C7 (cassandra.go:236-443, 493-528, 900-980): key detection,
+  the DDL clone and the UDT/UDF dependency migration read the source
+  catalog; ``CassandraSink.ensure_schema`` applies them on the
+  destination.
 
-Connector jar not bundled here; option builders are pure and unit-tested.
+cassandra-driver is imported when a transfer first connects.
 """
 
 from __future__ import annotations
 
+import pickle
 import re
+import uuid
+from collections.abc import Callable
+from contextlib import closing
 from typing import Any, Protocol
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
+from pyspark.sql import types as T
+from pyspark.sql.datasource import DataSource, DataSourceReader
 
 from dbtransfer_spark.config import DBConfig, TableMapping
-from dbtransfer_spark.sources.base import Sink, Source
-
-FORMAT = "org.apache.spark.sql.cassandra"
-
-# cassandra.go:384-443: UDFs are copied as metadata, never executed.
-UDT_QUERY = (
-    "SELECT type_name, field_names, field_types FROM system_schema.types "
-    "WHERE keyspace_name = ?"
-)
-UDF_QUERY = (
-    "SELECT function_name, argument_names, argument_types, return_type, "
-    "language, body FROM system_schema.functions WHERE keyspace_name = ?"
-)
-KEY_QUERY = (  # cassandra.go:493-528
-    "SELECT column_name, kind, position FROM system_schema.columns "
-    "WHERE keyspace_name = ? AND table_name = ?"
-)
+from dbtransfer_spark.sources.base import BatchSink, Source, import_driver
 
 # §2.7 write-session contract (cassandra.go:1170-1174 sets QUORUM on the
-# native session; 648-698 flushes UNLOGGED batches). The Spark-path
-# write_options and the driver-side batch path both pin these; a native
-# session adapter must apply them as session.default_consistency_level /
-# BatchStatement(batch_type=UNLOGGED). The write-wire transcript
+# native session; 648-698 flushes UNLOGGED batches). ``DriverSession``
+# applies both; the write-wire transcript
 # (tests/fixtures/cassandra_orders_write_wire.json) asserts them.
 CONSISTENCY = "QUORUM"
 BATCH_TYPE = "UNLOGGED"
 
 
-def read_options(cfg: DBConfig, table: TableMapping) -> dict[str, str]:
-    host = (cfg.hosts[0] if cfg.hosts else "localhost:9042").split(":")[0]
-    return {
-        "keyspace": cfg.keyspace,
-        "table": table.name,
-        "spark.cassandra.connection.host": host,
-        "spark.cassandra.auth.username": cfg.username,
-        "spark.cassandra.auth.password": cfg.password,
-        # §2.7 knobs
-        "spark.cassandra.input.consistency.level": CONSISTENCY,
-        "spark.cassandra.input.fetch.sizeInRows": "1000",  # PageSize(batch) cassandra.go:645
-    }
+class CQLSession(Protocol):
+    """The session surface the engine uses — ``execute`` returns rows as
+    dicts, ``execute_batch`` writes bound ``(statement, params)`` pairs as
+    one batch — injectable so the engine runs without a server."""
+
+    def execute(self, statement: str, parameters: tuple = ()) -> Any: ...
+
+    def execute_batch(self, statements: list[tuple[str, tuple]]) -> Any: ...
+
+    def close(self) -> None: ...
 
 
-def write_options(
-    cfg: DBConfig, table: TableMapping, ttl_seconds: int | None = None
-) -> dict[str, str]:
-    host = (cfg.hosts[0] if cfg.hosts else "localhost:9042").split(":")[0]
-    opts = {
-        "keyspace": cfg.keyspace,
-        "table": table.effective_target,
-        "spark.cassandra.connection.host": host,
-        "spark.cassandra.auth.username": cfg.username,
-        "spark.cassandra.auth.password": cfg.password,
-        "spark.cassandra.output.consistency.level": CONSISTENCY,  # cassandra.go:1170
-        # UnloggedBatch grouped by partition key (cassandra.go:700):
-        "spark.cassandra.output.batch.grouping.key": "partition",
-        "spark.cassandra.output.batch.size.rows": "1000",
-    }
-    if ttl_seconds:
-        # Single-TTL-per-row approximation (cassandra.go:678-691).
-        opts["spark.cassandra.output.ttl"] = str(ttl_seconds)
-    return opts
+class DriverSession:
+    """``CQLSession`` over cassandra-driver: dict rows, QUORUM reads and
+    writes, UNLOGGED batches of prepared statements."""
+
+    def __init__(self, cfg: DBConfig):
+        cluster = import_driver("cassandra.cluster", "cassandra-driver")
+        query = import_driver("cassandra.query", "cassandra-driver")
+        driver = import_driver("cassandra", "cassandra-driver")
+        auth = import_driver("cassandra.auth", "cassandra-driver")
+        hosts = cfg.hosts or ["localhost:9042"]
+        self._consistency = getattr(driver.ConsistencyLevel, CONSISTENCY)
+        self._batch_type = getattr(query.BatchType, BATCH_TYPE)
+        self._batch = query.BatchStatement
+        self._cluster = cluster.Cluster(
+            [h.split(":")[0] for h in hosts],
+            port=int(hosts[0].partition(":")[2] or 9042),
+            auth_provider=(
+                auth.PlainTextAuthProvider(cfg.username, cfg.password)
+                if cfg.username
+                else None
+            ),
+        )
+        self._session = self._cluster.connect()
+        self._session.row_factory = query.dict_factory
+        self._session.default_consistency_level = self._consistency
+        self._prepared: dict[str, Any] = {}
+
+    def execute(self, statement: str, parameters: tuple = ()) -> Any:
+        return self._session.execute(statement, parameters or None)
+
+    def execute_batch(self, statements: list[tuple[str, tuple]]) -> None:
+        batch = self._batch(batch_type=self._batch_type, consistency_level=self._consistency)
+        for stmt, params in statements:
+            if stmt not in self._prepared:
+                self._prepared[stmt] = self._session.prepare(stmt)
+            batch.add(self._prepared[stmt], params)
+        self._session.execute(batch)
+
+    def close(self) -> None:
+        self._cluster.shutdown()
+
+
+def client_factory(cfg: DBConfig) -> Callable[[], CQLSession]:
+    return lambda: DriverSession(cfg)
 
 
 # ---------------------------------------------------------------------------
-# C3: key detection over an injectable session (cassandra.go:493-528)
+# C3/C5: catalog reads (cassandra.go:493-528, 900-980)
 # ---------------------------------------------------------------------------
 
 
-def detect_keys(
-    session: "CQLSession", keyspace: str, table: str
-) -> tuple[list[str], list[str]]:
+def _columns(session: CQLSession, keyspace: str, table: str) -> list[dict]:
+    """The table's ``system_schema.columns`` rows, in catalog order."""
+    return list(
+        session.execute(
+            "SELECT column_name, type, kind, position FROM system_schema.columns "
+            "WHERE keyspace_name = %s AND table_name = %s",
+            (keyspace, table),
+        )
+    )
+
+
+def _keys(columns: list[dict]) -> tuple[list[str], list[str]]:
+    """``(partition_keys, clustering_keys)``, each sorted by position."""
+    kinds: dict[str, list[tuple[int, str]]] = {"partition_key": [], "clustering": []}
+    for d in columns:
+        if d["kind"] in kinds:
+            kinds[d["kind"]].append((d["position"], d["column_name"]))
+    return [c for _, c in sorted(kinds["partition_key"])], [
+        c for _, c in sorted(kinds["clustering"])
+    ]
+
+
+def detect_keys(session: CQLSession, keyspace: str, table: str) -> tuple[list[str], list[str]]:
     """C3 (cassandra.go:493-528 + 1093-1111): read system_schema.columns
     kinds and return ``(partition_keys, clustering_keys)``, each sorted by
     position. Raises if the table declares no keys, like the reference."""
-    partition: list[tuple[int, str]] = []
-    clustering: list[tuple[int, str]] = []
-    for row in session.execute(
-        "SELECT column_name, kind, position FROM system_schema.columns "
-        "WHERE keyspace_name = %s AND table_name = %s",
-        (keyspace, table),
-    ):
-        d = row if isinstance(row, dict) else row._asdict()
-        if d["kind"] == "partition_key":
-            partition.append((d["position"], d["column_name"]))
-        elif d["kind"] == "clustering":
-            clustering.append((d["position"], d["column_name"]))
+    partition, clustering = _keys(_columns(session, keyspace, table))
     if not partition and not clustering:
         raise RuntimeError(f"table {table} has no primary key")
-    return [c for _, c in sorted(partition)], [c for _, c in sorted(clustering)]
+    return partition, clustering
 
 
-# ---------------------------------------------------------------------------
-# C5: CQL DDL reconstruction from the source catalog (cassandra.go:900-980)
-# ---------------------------------------------------------------------------
-
-
-def get_table_schema(session: "CQLSession", keyspace: str, table: str) -> str:
+def get_table_schema(session: CQLSession, keyspace: str, table: str) -> str:
     """Reconstruct ``CREATE TABLE IF NOT EXISTS`` from system_schema —
     columns with source CQL types, ``PRIMARY KEY ((partition...),
     clustering...)``, and ``default_time_to_live`` when set
     (cassandra.go:900-980). Key columns are position-sorted (the reference
     relies on catalog row order, which is alphabetical — position is the
     actual declared key order)."""
-    columns: list[str] = []
-    partition: list[tuple[int, str]] = []
-    clustering: list[tuple[int, str]] = []
-    for row in session.execute(
-        "SELECT column_name, type, kind, position FROM system_schema.columns "
-        "WHERE keyspace_name = %s AND table_name = %s",
-        (keyspace, table),
-    ):
-        d = row if isinstance(row, dict) else row._asdict()
-        columns.append(f"{d['column_name']} {d['type']}")
-        if d["kind"] == "partition_key":
-            partition.append((d["position"], d["column_name"]))
-        elif d["kind"] == "clustering":
-            clustering.append((d["position"], d["column_name"]))
-    if not columns:
+    rows = _columns(session, keyspace, table)
+    if not rows:
         raise RuntimeError(f"no table schema found for table {table}")
+    partition, clustering = _keys(rows)
 
     default_ttl = 0
-    for row in session.execute(
+    for d in session.execute(
         "SELECT default_time_to_live FROM system_schema.tables "
         "WHERE keyspace_name = %s AND table_name = %s",
         (keyspace, table),
     ):
-        d = row if isinstance(row, dict) else row._asdict()
         default_ttl = d.get("default_time_to_live") or 0
 
-    body = ",\n    ".join(columns)
+    body = ",\n    ".join(f"{d['column_name']} {d['type']}" for d in rows)
     if partition:
-        pk = ", ".join(c for _, c in sorted(partition))
-        cl = ", ".join(c for _, c in sorted(clustering))
-        body += f",\n    PRIMARY KEY (({pk}){', ' + cl if cl else ''})"
+        cl = ", ".join(clustering)
+        body += f",\n    PRIMARY KEY (({', '.join(partition)}){', ' + cl if cl else ''})"
     ttl = f" WITH default_time_to_live = {default_ttl}" if default_ttl > 0 else ""
     return f"CREATE TABLE IF NOT EXISTS {table} (\n    {body}\n){ttl}"
+
+
+def table_exists(session: CQLSession, keyspace: str, table: str) -> bool:
+    """S7 existence probe (cassandra.go:246-262)."""
+    rows = session.execute(
+        "SELECT table_name FROM system_schema.tables "
+        "WHERE keyspace_name = %s AND table_name = %s",
+        (keyspace, table),
+    )
+    return bool(list(rows))
 
 
 # ---------------------------------------------------------------------------
@@ -222,14 +234,6 @@ def extract_function_names(expr: str, out: set[str]) -> None:
             out.add(name)
 
 
-class CQLSession(Protocol):
-    """Minimal query surface of a cassandra-driver Session — injectable so
-    dependency migration is testable without a server (the pattern of
-    tests/test_jdbc_writer.py's SQLite-backed writer)."""
-
-    def execute(self, statement: str, parameters: tuple = ()) -> Any: ...
-
-
 def migrate_dependencies(
     source: CQLSession,
     dest: CQLSession,
@@ -249,23 +253,21 @@ def migrate_dependencies(
     # All type definitions first: needed both to recognize UDT names
     # inside nested type expressions and to chase UDT→UDT field edges.
     type_defs: dict[str, tuple[list[str], list[str]]] = {}
-    for row in source.execute(
+    for d in source.execute(
         "SELECT type_name, field_names, field_types FROM system_schema.types "
         "WHERE keyspace_name = %s",
         (source_keyspace,),
     ):
-        d = row if isinstance(row, dict) else row._asdict()
         type_defs[d["type_name"]] = (list(d["field_names"]), list(d["field_types"]))
     known = set(type_defs)
 
     used_types: set[str] = set()
-    for row in source.execute(
+    for d in source.execute(
         "SELECT table_name, column_name, type FROM system_schema.columns "
         "WHERE keyspace_name = %s",
         (source_keyspace,),
     ):
-        col_type = row["type"] if isinstance(row, dict) else row.type
-        used_types |= referenced_udts(col_type, known)
+        used_types |= referenced_udts(d["type"], known)
 
     # Transitive closure over UDT fields (a used UDT whose field is
     # another UDT pulls that one in too — the reference misses these and
@@ -279,12 +281,11 @@ def migrate_dependencies(
                     used_types.add(dep)
                     frontier.append(dep)
 
-    for row in source.execute(
+    for d in source.execute(
         "SELECT options FROM system_schema.indexes WHERE keyspace_name = %s",
         (source_keyspace,),
     ):
-        options = row["options"] if isinstance(row, dict) else row.options
-        expr = (options or {}).get("expression")
+        expr = (d["options"] or {}).get("expression")
         if expr:
             extract_function_names(expr, used_functions)
 
@@ -310,13 +311,12 @@ def migrate_dependencies(
         create_type(name)
 
     created_funcs: set[str] = set()
-    for row in source.execute(
+    for d in source.execute(
         "SELECT function_name, argument_types, return_type, language, body, "
         "called_on_null_input FROM system_schema.functions "
         "WHERE keyspace_name = %s",
         (source_keyspace,),
     ):
-        d = row if isinstance(row, dict) else row._asdict()
         name = d["function_name"]
         if name not in used_functions or name in created_funcs:
             continue
@@ -338,6 +338,11 @@ def migrate_dependencies(
         created_funcs.add(name)
 
     return executed
+
+
+# ---------------------------------------------------------------------------
+# S4/S5: the scan
+# ---------------------------------------------------------------------------
 
 
 def _is_collection(cql_type: str) -> bool:
@@ -363,290 +368,140 @@ def ttl_projection(
     return proj
 
 
-def build_token_where(
-    column_types: dict[str, str],
-    partition_keys: list[str],
-    last_key: dict[str, str],
-) -> str:
-    """P6 resume predicate (cassandra.go:1066-1142): ``token(pk...) >=
-    token(last...)`` with type-aware literal quoting — text/varchar/ascii
-    quoted, blob as ``0x…``, everything else raw. ``partition_keys`` must
-    already be position-sorted (cassandra.go:1103-1111); any missing
-    partition-key value disables resume (returns "", cassandra.go:1129-1131),
-    falling back to an idempotent full re-run."""
-    if not partition_keys or not last_key:
-        return ""
-    literals: list[str] = []
-    for key in partition_keys:
-        if key not in last_key:
-            return ""
-        val = last_key[key]
-        ctype = column_types.get(key, "")
-        if ctype in ("text", "varchar", "ascii"):
-            # CQL escapes a single quote by doubling it — without this, a
-            # value like O'Brien breaks the statement (and is an injection
-            # vector for crafted data). The reference interpolates raw
-            # (cassandra.go:1121); escaping is a strict improvement.
-            escaped = val.replace("'", "''")
-            literals.append(f"'{escaped}'")
-        elif ctype == "blob":
-            literals.append(f"0x{val}")
-        elif ctype in ("timestamp", "date", "time"):
-            # Temporal partition keys need quoted ISO literals in CQL, and
-            # CQL's parser accepts at most millisecond fractions — Python
-            # str(datetime) emits 6-digit microseconds, so truncate.
-            val = re.sub(r"(\.\d{3})\d+", r"\1", val)
-            literals.append(f"'{val}'")
-        else:
-            literals.append(val)
-    return f"token({', '.join(partition_keys)}) >= token({', '.join(literals)})"
+# Spark types of key columns; any other CQL type crosses as its string form.
+_KEY_TYPES = {
+    "bigint": T.LongType(),
+    "counter": T.LongType(),
+    "int": T.IntegerType(),
+    "smallint": T.ShortType(),
+    "tinyint": T.ByteType(),
+    "boolean": T.BooleanType(),
+    "double": T.DoubleType(),
+    "float": T.FloatType(),
+    "blob": T.BinaryType(),
+    "timestamp": T.TimestampType(),
+}
+
+
+def _register(spark, connect: Callable[[], CQLSession]) -> str:
+    """Register a Python data source running one CQL ``SELECT`` through
+    ``connect``; return its format name."""
+    fmt = f"dbtransfer_cassandra_{uuid.uuid4().hex}"
+
+    class Reader(DataSourceReader):
+        def __init__(self, query: str, keys: list[tuple[str, bool]]):
+            self.query = query
+            self.keys = keys  # (column, crosses as its string form)
+
+        def read(self, partition):
+            with closing(connect()) as session:
+                for row in session.execute(self.query):
+                    keys = [
+                        str(row[k]) if as_str and row[k] is not None else row[k]
+                        for k, as_str in self.keys
+                    ]
+                    yield (*keys, pickle.dumps(row))
+
+    class CassandraDataSource(DataSource):
+        @classmethod
+        def name(cls) -> str:
+            return fmt
+
+        def reader(self, schema):
+            keys = [
+                (f.name, isinstance(f.dataType, T.StringType)) for f in schema.fields[:-1]
+            ]
+            return Reader(self.options["query"], keys)
+
+    spark.dataSource.register(CassandraDataSource)
+    return fmt
 
 
 class CassandraSource(Source):
-    def read(self, table: TableMapping) -> DataFrame:
-        return self.spark.read.format(FORMAT).options(**read_options(self.cfg, table)).load()
+    # A stored last_key here is a position in token order: the reference,
+    # and earlier versions of this package, scanned by token(pk). It is no
+    # value-order watermark, so a table resumes by an idempotent re-run.
+    resumes_by_key = False
+
+    def __init__(self, spark, cfg, connect: Callable[[], CQLSession] | None = None):
+        super().__init__(spark, cfg)
+        self.connect = connect or client_factory(cfg)
+        self.format = _register(spark, self.connect)
+
+    def table_exists(self, table: TableMapping) -> bool:
+        with closing(self.connect()) as session:
+            return table_exists(session, self.cfg.keyspace, table.name)
 
     def detect_primary_key(self, table: TableMapping) -> list[str]:
         if table.primary_key:
             return [c.strip() for c in table.primary_key.split(",")]
-        # Runtime path: KEY_QUERY via a cassandra-driver session (C3).
-        raise RuntimeError(
-            "Cassandra PK detection requires a driver session; set "
-            "TableMapping.primary_key or run with cassandra-driver installed"
+        with closing(self.connect()) as session:
+            partition, clustering = detect_keys(session, self.cfg.keyspace, table.name)
+        return partition + clustering
+
+    def read(self, table: TableMapping) -> DataFrame:
+        """The key columns, typed, and ``row``: the projected row (values
+        and ``ttl_*``) pickled. ``row``'s field metadata names the columns
+        and the TTL column the sink's INSERT takes."""
+        with closing(self.connect()) as session:
+            columns = _columns(session, self.cfg.keyspace, table.name)
+        partition, clustering = _keys(columns)
+        keys = partition + clustering
+        types = {d["column_name"]: d["type"] for d in columns}
+        names = list(types)
+        ttl_columns = [c for c in names if c not in keys and not _is_collection(types[c])]
+        query = (
+            f"SELECT {', '.join(ttl_projection(names, keys, types))} "
+            f"FROM {self.cfg.keyspace}.{table.name}"
         )
-
-
-class CassandraSink(Sink):
-    def __init__(self, spark, cfg, ttl_seconds: int | None = None):
-        super().__init__(spark, cfg)
-        self.ttl_seconds = ttl_seconds
-
-    def upsert(self, df: DataFrame, table: TableMapping, key_columns: list[str]) -> int:
-        # CQL INSERT is natively an upsert (SURVEY.md §2.5 W4).
-        (
-            df.write.format(FORMAT)
-            .mode("append")
-            .options(**write_options(self.cfg, table, self.ttl_seconds))
-            .save()
+        meta = {"columns": names, "ttl_column": ttl_columns[0] if ttl_columns else None}
+        schema = T.StructType(
+            [T.StructField(k, _KEY_TYPES.get(types[k], T.StringType())) for k in keys]
+            + [T.StructField("row", T.BinaryType(), metadata=meta)]
         )
-        return -1
+        return self.spark.read.format(self.format).schema(schema).option("query", query).load()
 
 
-# ---------------------------------------------------------------------------
-# S4/S5/W4/P6 runtime path: driver-side paged copy (cassandra.go:453-898)
-# ---------------------------------------------------------------------------
+class CassandraSink(BatchSink):
+    def __init__(self, spark, cfg, connect: Callable[[], CQLSession] | None = None, **batching):
+        super().__init__(spark, cfg, connect or client_factory(cfg), **batching)
 
+    def _target(self, table: TableMapping) -> str:
+        # Qualified with the destination keyspace, where the dependencies
+        # are created: an unqualified name would resolve against the
+        # session's default keyspace, if any, and could land elsewhere.
+        ks = self.cfg.keyspace
+        return f"{ks}.{table.effective_target}" if ks else table.effective_target
 
-class CQLBatchSession(Protocol):
-    """Session surface for the copy loop's destination: single statements
-    plus unlogged batches of bound (statement, params) pairs."""
+    def ensure_schema(self, df: DataFrame, table: TableMapping, source=None) -> None:
+        """migrateTable's schema steps (cassandra.go:264-291): the UDT/UDF
+        dependencies, then the source's DDL with the target name swapped in
+        (cassandra.go:276)."""
+        with closing(source.connect()) as src, closing(self.connect()) as dest:
+            migrate_dependencies(src, dest, source.cfg.keyspace, self.cfg.keyspace)
+            ddl = get_table_schema(src, source.cfg.keyspace, table.name)
+            dest.execute(ddl.replace(table.name, self._target(table), 1))
 
-    def execute(self, statement: str, parameters: tuple = ()) -> Any: ...
-
-    def execute_batch(self, statements: list[tuple[str, tuple]]) -> Any: ...
-
-
-def execute_batch_with_retry(
-    dest: CQLBatchSession,
-    batch: list[tuple[str, tuple]],
-    max_retries: int = 3,
-    retry_delay: float = 5.0,
-    sleep=None,
-) -> None:
-    """executeBatchWithRetry (cassandra.go:887-898): fixed-delay retries,
-    raise after ``max_retries`` failures. Safe because CQL INSERT is an
-    upsert — replays are idempotent."""
-    import time as _time
-
-    sleep = sleep or _time.sleep
-    last_err: Exception | None = None
-    for _ in range(max_retries):
-        try:
-            dest.execute_batch(batch)
-            return
-        except Exception as exc:  # noqa: BLE001 — retry any driver error
-            last_err = exc
-            sleep(retry_delay)
-    raise RuntimeError(f"batch write failed after {max_retries} retries") from last_err
-
-
-def copy_data(
-    source: CQLSession,
-    dest: CQLBatchSession,
-    *,
-    source_keyspace: str,
-    source_name: str,
-    target_name: str,
-    columns: list[tuple[str, str]],
-    partition_keys: list[str],
-    key_columns: list[str],
-    store,
-    stats=None,
-    batch_size: int = 1000,
-    max_retries: int = 3,
-    retry_delay: float = 5.0,
-    rate_limiter=None,
-    sleep=None,
-) -> dict[str, Any]:
-    """copyData (cassandra.go:453-898), driver-side, against injectable
-    sessions. Lifecycle parity:
-
-    - checkpoint skip-complete first (cassandra.go:237-244);
-    - TTL-aware projection over non-key scalar columns (531-575);
-    - resume via ``token(pk) >= token(last)`` WHERE (585-592 + 1066-1142);
-    - paged scan batched into unlogged batches of ``INSERT ... [USING
-      TTL ?]`` — CQL INSERT is an upsert (645-843); the row TTL is the
-      first non-key scalar column's remaining TTL, the reference's own
-      single-TTL-per-row approximation (678-691, SURVEY §7 hard-part #3);
-    - partition-key values (blob hexed) tracked as the checkpoint key
-      (800-830), saved per flushed batch — the driver-loop equivalent of
-      the reference's 1 s background ticker (705-723), strictly more
-      consistent because every saved watermark is post-commit;
-    - retrying batch flush (887-898), final ``complete=true`` (871-884).
-
-    ``columns`` is an ordered ``(name, cql_type)`` list (from
-    system_schema.columns); ``partition_keys`` position-sorted; rows from
-    ``source.execute`` are dicts keyed by the projection aliases
-    (column names + ``ttl_<col>``).
-    """
-    from dbtransfer_spark.checkpoint import Checkpoint
-
-    if store.is_complete(source_name):
-        return {"skipped": True, "reason": "checkpoint complete"}
-
-    names = [c for c, _ in columns]
-    types = dict(columns)
-    proj = ttl_projection(names, key_columns, types)
-    query = f"SELECT {', '.join(proj)} FROM {source_keyspace}.{source_name}"
-
-    ckpt = store.load(source_name)
-    resumed_from = None
-    if ckpt is not None and ckpt.last_key and not ckpt.complete:
-        where = build_token_where(types, partition_keys, ckpt.last_key)
-        if where:
-            query += f" WHERE {where}"
-            resumed_from = dict(ckpt.last_key)
-
-    ttl_cols = [
-        c for c in names if c not in key_columns and not _is_collection(types[c])
-    ]
-    insert = (
-        f"INSERT INTO {target_name} ({', '.join(names)}) "
-        f"VALUES ({', '.join('?' for _ in names)})"
-    )
-    if ttl_cols:
-        insert += " USING TTL ?"
-
-    batch: list[tuple[str, tuple]] = []
-    last_key: dict[str, str] = dict(ckpt.last_key) if ckpt else {}
-    migrated = 0
-
-    def flush() -> None:
-        nonlocal migrated
-        if not batch:
-            return
-        execute_batch_with_retry(
-            dest, list(batch), max_retries=max_retries,
-            retry_delay=retry_delay, sleep=sleep,
+    def batch_writer(self, df: DataFrame, table: TableMapping, key_columns: list[str]):
+        meta = df.schema["row"].metadata
+        names, ttl_column = meta["columns"], meta["ttl_column"]
+        insert = (
+            f"INSERT INTO {self._target(table)} ({', '.join(names)}) "
+            f"VALUES ({', '.join('?' for _ in names)})"
         )
-        migrated += len(batch)
-        if stats is not None:
-            stats.add_processed(source_name, len(batch))
-        if rate_limiter is not None:
-            rate_limiter.acquire(len(batch))
-        if last_key:
-            store.save(source_name, Checkpoint(last_key=dict(last_key), complete=False))
-        batch.clear()
+        if ttl_column:
+            insert += " USING TTL ?"
 
-    for row in source.execute(query):
-        params = [row[c] for c in names]
-        if ttl_cols:
-            # cassandra.go:691: one TTL per row — the first eligible
-            # column's remaining TTL (0/None → no expiry).
-            params.append(row.get(f"ttl_{ttl_cols[0]}") or 0)
-        for pk in partition_keys:
-            v = row[pk]
-            last_key[pk] = v.hex() if isinstance(v, (bytes, bytearray)) else str(v)
-        batch.append((insert, tuple(params)))
-        if len(batch) >= batch_size:
-            flush()
-    flush()
+        def write_batch(session, batch: list[Row]) -> None:
+            statements = []
+            for r in batch:
+                row = pickle.loads(r["row"])
+                params = [row[c] for c in names]
+                if ttl_column:
+                    # cassandra.go:691: one TTL per row — the first eligible
+                    # column's remaining TTL (0/None → no expiry).
+                    params.append(row.get(f"ttl_{ttl_column}") or 0)
+                statements.append((insert, tuple(params)))
+            session.execute_batch(statements)
 
-    store.mark_complete(source_name, last_key or None)
-    return {"rows": migrated, "resumed_from": resumed_from}
-
-
-def table_exists(session: "CQLSession", keyspace: str, table: str) -> bool:
-    """S7 existence probe (cassandra.go:246-262)."""
-    rows = session.execute(
-        "SELECT table_name FROM system_schema.tables "
-        "WHERE keyspace_name = %s AND table_name = %s",
-        (keyspace, table),
-    )
-    return bool(list(rows))
-
-
-def migrate_table(
-    source: CQLSession,
-    dest: CQLBatchSession,
-    *,
-    source_keyspace: str,
-    dest_keyspace: str,
-    source_name: str,
-    target_name: str | None = None,
-    store,
-    stats=None,
-    batch_size: int = 1000,
-    max_retries: int = 3,
-    retry_delay: float = 5.0,
-    rate_limiter=None,
-    sleep=None,
-) -> dict[str, Any]:
-    """Full migrateTable orchestration (cassandra.go:236-291): checkpoint
-    skip → existence probe → UDT/UDF dependency migration → DDL clone on
-    the destination (source name swapped for target, cassandra.go:276) →
-    catalog-driven column/key discovery → ``copy_data``."""
-    target = target_name or source_name
-
-    if store.is_complete(source_name):  # checkpoint first (237-244)
-        return {"skipped": True, "reason": "checkpoint complete"}
-    if not table_exists(source, source_keyspace, source_name):
-        raise RuntimeError(f"source table {source_name} does not exist")
-
-    migrate_dependencies(source, dest, source_keyspace, dest_keyspace)
-
-    # Qualify with the destination keyspace: dependencies above are created
-    # as <dest_keyspace>.<type>, so the table (and copy_data's INSERTs) must
-    # target the same keyspace — an unqualified name would resolve against
-    # the session's default keyspace, if any, and could land elsewhere.
-    qualified_target = f"{dest_keyspace}.{target}"
-    ddl = get_table_schema(source, source_keyspace, source_name)
-    dest.execute(ddl.replace(source_name, qualified_target, 1))  # cassandra.go:274-288
-
-    columns: list[tuple[str, str]] = []
-    for row in source.execute(
-        "SELECT column_name, type FROM system_schema.columns "
-        "WHERE keyspace_name = %s AND table_name = %s",
-        (source_keyspace, source_name),
-    ):
-        d = row if isinstance(row, dict) else row._asdict()
-        columns.append((d["column_name"], d["type"]))
-    partition_keys, clustering_keys = detect_keys(source, source_keyspace, source_name)
-
-    return copy_data(
-        source,
-        dest,
-        source_keyspace=source_keyspace,
-        source_name=source_name,
-        target_name=qualified_target,
-        columns=columns,
-        partition_keys=partition_keys,
-        key_columns=partition_keys + clustering_keys,
-        store=store,
-        stats=stats,
-        batch_size=batch_size,
-        max_retries=max_retries,
-        retry_delay=retry_delay,
-        rate_limiter=rate_limiter,
-        sleep=sleep,
-    )
+        return write_batch

@@ -13,28 +13,27 @@ of being single-connection-bound. Resume is the same watermark predicate
 
 Writes
 ------
-No native Spark MERGE to JDBC (SURVEY.md §7 hard-part #1). The sink runs
-the reference's exact upsert statements from ``foreachPartition`` workers:
-MySQL multi-row ``INSERT ... ON DUPLICATE KEY UPDATE`` (W1,
-mysql.go:417-445) and PostgreSQL ``INSERT ... ON CONFLICT (pk) DO UPDATE``
-(W2, postgresql.go:725-777), batched ``batch_size`` rows per statement with
-retry-with-backoff (R2, mysql.go:448-498). Statements are idempotent, so
-Spark task retries are safe (at-least-once × idempotent = exactly-once
-effect). DB-API drivers are import-gated: statement generation is pure and
-unit-tested; execution requires a driver + server at runtime.
+No native Spark MERGE to JDBC (SURVEY.md §7 hard-part #1). ``JDBCSink`` is
+a ``BatchSink``: the shared partition writer runs the reference's exact
+upsert statements — MySQL multi-row ``INSERT ... ON DUPLICATE KEY UPDATE``
+(W1, mysql.go:417-445) and PostgreSQL ``INSERT ... ON CONFLICT (pk) DO
+UPDATE`` (W2, postgresql.go:725-777) — one statement and one commit per
+``batch_size`` rows, rolled back before a retry (R2, mysql.go:448-498).
+Statements are idempotent, so Spark task retries are safe (at-least-once ×
+idempotent = exactly-once effect). The DB-API driver (PyMySQL, psycopg2)
+is imported when the sink first connects.
 """
 
 from __future__ import annotations
 
-import time
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, Row
 
 from dbtransfer_spark.config import DBConfig, TableMapping
 from dbtransfer_spark.sources import ddl
-from dbtransfer_spark.sources.base import Sink, Source
+from dbtransfer_spark.sources.base import BatchSink, Source, import_driver
 
 # ---------------------------------------------------------------------------
 # Catalog SQL (C1/C2): driver-side PK detection, same queries as reference.
@@ -76,21 +75,13 @@ def read_options(
     upper: int | None,
     num_partitions: int,
     fetch_size: int = 10_000,
-    watermark: int | None = None,
 ) -> dict[str, str]:
-    """Build the partitioned-read option dict (pure; unit-testable).
-
-    ``watermark`` embeds the resume predicate into a pushdown subquery so
-    the source scans only ``pk > watermark`` — keyset resume (P4) at
-    partition granularity.
-    """
-    qualified = f"{cfg.schema}.{table.name}" if cfg.schema else table.name
-    dbtable = qualified
-    if watermark is not None and pk:
-        dbtable = f"(SELECT * FROM {qualified} WHERE {pk} > {watermark}) AS t"
+    """Build the partitioned-read option dict (pure; unit-testable). The
+    engine's ``pk > watermark`` resume filter reaches the range scans
+    through Catalyst's pushdown (P4)."""
     opts = {
         "url": jdbc_url(cfg),
-        "dbtable": dbtable,
+        "dbtable": f"{cfg.schema}.{table.name}" if cfg.schema else table.name,
         "user": cfg.username,
         "password": cfg.password,
         "driver": jdbc_driver(cfg),
@@ -110,8 +101,6 @@ def transform_pushdown_subquery(
     table: str,
     columns: list[str],
     transforms: dict[str, str],
-    watermark_pk: str | None = None,
-    watermark: int | None = None,
 ) -> str:
     """P1 true-pushdown mode: embed the configured transform expressions —
     written in the *source* dialect, exactly as the reference forwards them
@@ -132,10 +121,7 @@ def transform_pushdown_subquery(
         else:
             validate_expression(expr)
             parts.append(f"{expr} AS {col}")
-    q = f"SELECT {', '.join(parts)} FROM {table}"
-    if watermark_pk and watermark is not None:
-        q += f" WHERE {watermark_pk} > {watermark}"
-    return f"({q}) AS t"
+    return f"(SELECT {', '.join(parts)} FROM {table}) AS t"
 
 
 # ---------------------------------------------------------------------------
@@ -157,26 +143,24 @@ def mysql_upsert_sql(table: str, columns: list[str], n_rows: int) -> str:
 
 def postgres_upsert_sql(table: str, columns: list[str], key_columns: list[str], n_rows: int) -> str:
     """INSERT ... ON CONFLICT (pk) DO UPDATE SET col=EXCLUDED.col
-    (postgresql.go:725-777, buildUpdateClause 585-593)."""
+    (postgresql.go:725-777, buildUpdateClause 585-593), with psycopg2's
+    ``%s`` placeholders (the reference's pgx driver numbers them ``$n``)."""
     col_list = ", ".join(f'"{c}"' for c in columns)
-    placeholders = []
-    i = 1
-    for _ in range(n_rows):
-        placeholders.append("(" + ", ".join(f"${j}" for j in range(i, i + len(columns))) + ")")
-        i += len(columns)
+    row = "(" + ", ".join(["%s"] * len(columns)) + ")"
+    values = ", ".join([row] * n_rows)
     conflict = ", ".join(f'"{c}"' for c in key_columns)
     updates = ", ".join(f'"{c}"=EXCLUDED."{c}"' for c in columns if c not in key_columns)
     action = f"DO UPDATE SET {updates}" if updates else "DO NOTHING"
     return (
-        f'INSERT INTO "{table}" ({col_list}) VALUES {", ".join(placeholders)} '
+        f'INSERT INTO "{table}" ({col_list}) VALUES {values} '
         f"ON CONFLICT ({conflict}) {action}"
     )
 
 
 def sqlite_upsert_sql(table: str, columns: list[str], key_columns: list[str], n_rows: int) -> str:
     """SQLite ON CONFLICT upsert — same W2 shape with ? placeholders.
-    Exists so the foreachPartition writer machinery (connection-per-
-    partition, batching, retry, pacing) can be integration-tested against
+    Exists so the shared partition writer (connection-per-partition,
+    batching, retry, pacing) can be integration-tested against
     a real DB-API database without external servers."""
     col_list = ", ".join(f'"{c}"' for c in columns)
     row = "(" + ", ".join(["?"] * len(columns)) + ")"
@@ -187,82 +171,23 @@ def sqlite_upsert_sql(table: str, columns: list[str], key_columns: list[str], n_
     return f'INSERT INTO "{table}" ({col_list}) VALUES {values} ON CONFLICT ({conflict}) {action}'
 
 
-def make_upsert_partition_writer(
-    dialect: str,
-    table: str,
-    columns: list[str],
-    key_columns: list[str],
-    connect: Callable[[], Any],
-    batch_size: int = 1000,
-    max_retries: int = 3,
-    retry_delay: float = 5.0,
-    rows_per_sec: int | None = None,
-    row_counter: Any | None = None,
-) -> Callable[[Iterator[Row]], None]:
-    """Build the ``foreachPartition`` upsert function.
+def client_factory(cfg: DBConfig) -> Callable[[], Any]:
+    """The DB-API connection factory for ``cfg``'s server: PyMySQL for
+    MySQL, psycopg2 for PostgreSQL, imported at the first connect."""
+    host, _, port = (cfg.hosts[0] if cfg.hosts else "localhost").partition(":")
 
-    Each executor partition opens one connection, writes ``batch_size``-row
-    idempotent upsert statements with R2 retry semantics
-    (mysql.go:448-498: max 3 retries, fixed delay), and paces itself to
-    ``rows_per_sec`` — the distributed approximation of the reference's
-    global limiter (R3, migration.go:211-268): global cap ≈ per-partition
-    cap × numPartitions, sized by the caller. ``row_counter`` (a Spark
-    accumulator) receives per-partition written-row counts so the driver
-    can report totals without a second job (mysql.go:319-322 always counts).
-    """
+    def connect() -> Any:
+        if (cfg.type or "mysql").lower() == "mysql":
+            return import_driver("pymysql", "PyMySQL").connect(
+                host=host, port=int(port or 3306), user=cfg.username,
+                password=cfg.password, database=cfg.database,
+            )
+        return import_driver("psycopg2", "psycopg2").connect(
+            host=host, port=int(port or 5432), user=cfg.username,
+            password=cfg.password, dbname=cfg.database,
+        )
 
-    def write_partition(rows: Iterator[Row]) -> None:
-        conn = connect()
-        written = 0
-        try:
-            cur = conn.cursor()
-            batch: list[tuple] = []
-            window_start = time.monotonic()
-            window_rows = 0
-
-            def flush() -> None:
-                nonlocal written
-                if not batch:
-                    return
-                if dialect == "mysql":
-                    sql = mysql_upsert_sql(table, columns, len(batch))
-                elif dialect == "sqlite":
-                    sql = sqlite_upsert_sql(table, columns, key_columns, len(batch))
-                else:
-                    sql = postgres_upsert_sql(table, columns, key_columns, len(batch))
-                flat = [v for row in batch for v in row]
-                attempt = 0
-                while True:
-                    try:
-                        cur.execute(sql, flat)
-                        conn.commit()
-                        written += len(batch)
-                        return
-                    except Exception:
-                        attempt += 1
-                        if attempt > max_retries:
-                            raise
-                        conn.rollback()
-                        time.sleep(retry_delay)
-
-            for row in rows:
-                batch.append(tuple(row[c] for c in columns))
-                if len(batch) >= batch_size:
-                    flush()
-                    window_rows += len(batch)
-                    batch.clear()
-                    if rows_per_sec:
-                        elapsed = time.monotonic() - window_start
-                        expected = window_rows / rows_per_sec
-                        if expected > elapsed:
-                            time.sleep(expected - elapsed)
-            flush()
-        finally:
-            conn.close()
-            if row_counter is not None:
-                row_counter.add(written)
-
-    return write_partition
+    return connect
 
 
 class JDBCSource(Source):
@@ -315,38 +240,6 @@ class JDBCSource(Source):
             )
         return self.spark.read.format("jdbc").options(**opts).load()
 
-    def count_rows(
-        self, table_df: DataFrame, table: TableMapping, pk: str | None, watermark: int | None
-    ) -> int:
-        """S6 server-side COUNT(*) (mysql.go:243-249) — counting the Spark
-        DataFrame would re-execute the whole partitioned read just for a
-        denominator; one scalar query on the source does it for free."""
-        qualified = f"{self.cfg.schema}.{table.name}" if self.cfg.schema else table.name
-        where = ""
-        if pk and watermark is not None:
-            # Only numeric watermarks are interpolated (keyset PKs are
-            # integral here); anything else falls back to counting the
-            # already-filtered DataFrame — never splice a raw string into
-            # SQL (invalid for varchar/timestamp PKs, and an injection
-            # vector for crafted checkpoint contents).
-            try:
-                where = f" WHERE {pk} > {int(str(watermark))}"
-            except ValueError:
-                return table_df.count()
-        probe = (
-            self.spark.read.format("jdbc")
-            .options(
-                url=jdbc_url(self.cfg),
-                query=f"SELECT COUNT(*) AS n FROM {qualified}{where}",
-                user=self.cfg.username,
-                password=self.cfg.password,
-                driver=jdbc_driver(self.cfg),
-            )
-            .load()
-            .collect()
-        )
-        return int(probe[0]["n"]) if probe else 0
-
     def detect_primary_key(self, table: TableMapping) -> list[str]:
         if table.primary_key:
             return [c.strip() for c in table.primary_key.split(",")]
@@ -356,36 +249,30 @@ class JDBCSource(Source):
             if t == "mysql"
             else POSTGRES_PK_SQL.format(table=table.name)
         )
-        try:
-            rows = (
-                self.spark.read.format("jdbc")
-                .options(
-                    url=jdbc_url(self.cfg),
-                    query=query,
-                    user=self.cfg.username,
-                    password=self.cfg.password,
-                    driver=jdbc_driver(self.cfg),
-                )
-                .load()
-                .collect()
+        # A catalog error (no driver, no server) raises: an empty answer
+        # would run the table with no key and no resume watermark.
+        rows = (
+            self.spark.read.format("jdbc")
+            .options(
+                url=jdbc_url(self.cfg),
+                query=query,
+                user=self.cfg.username,
+                password=self.cfg.password,
+                driver=jdbc_driver(self.cfg),
             )
-            if t == "mysql":
-                return [r["Column_name"] for r in rows]
-            return [r[0] for r in rows]
-        except Exception:
-            return []
+            .load()
+            .collect()
+        )
+        if t == "mysql":
+            return [r["Column_name"] for r in rows]
+        return [r[0] for r in rows]
 
 
-class JDBCSink(Sink):
-    def __init__(self, spark, cfg, connect: Callable[[], Any] | None = None, batch_size: int = 1000, rows_per_sec: int | None = None):
-        super().__init__(spark, cfg)
-        self.connect = connect
-        self.batch_size = batch_size
-        self.rows_per_sec = rows_per_sec
+class JDBCSink(BatchSink):
+    def __init__(self, spark, cfg, connect: Callable[[], Any] | None = None, **batching):
+        super().__init__(spark, cfg, connect or client_factory(cfg), **batching)
 
-    def ensure_schema(self, df: DataFrame, table: TableMapping) -> None:
-        if self.connect is None:
-            raise RuntimeError("JDBC sink requires a DB-API connection factory")
+    def ensure_schema(self, df: DataFrame, table: TableMapping, source=None) -> None:
         t = (self.cfg.type or "mysql").lower()
         key_cols = [c.strip() for c in table.primary_key.split(",")] if table.primary_key else []
         stmt = (
@@ -401,32 +288,25 @@ class JDBCSink(Sink):
         finally:
             conn.close()
 
-    def upsert(self, df: DataFrame, table: TableMapping, key_columns: list[str]) -> int:
-        if self.connect is None:
-            raise RuntimeError("JDBC sink requires a DB-API connection factory")
-        t = (self.cfg.type or "mysql").lower()
+    def batch_writer(self, df: DataFrame, table: TableMapping, key_columns: list[str]):
         # sqlite rides through as its own dialect (?-placeholders, ON
         # CONFLICT upsert) so the sink is drivable end-to-end without a
-        # server — everything else MySQL-vs-PG as before
-        dialect = t if t in ("mysql", "sqlite") else "postgresql"
-        n_parts = df.rdd.getNumPartitions() or 1
-        per_part_rate = (
-            max(1, self.rows_per_sec // n_parts) if self.rows_per_sec else None
-        )
-        # Rows written are counted by an accumulator filled from the write
-        # tasks themselves — no extra COUNT(*) job, and the engine's
-        # stats/rate governance engage in single-shot mode
-        # (mysql.go:319-322 always counts rows).
-        acc = self.spark.sparkContext.accumulator(0)
-        writer = make_upsert_partition_writer(
-            dialect,
-            table.effective_target,
-            df.columns,
-            key_columns,
-            self.connect,
-            batch_size=self.batch_size,
-            rows_per_sec=per_part_rate,
-            row_counter=acc,
-        )
-        df.foreachPartition(writer)
-        return int(acc.value)
+        # server — everything else MySQL-vs-PG
+        t = (self.cfg.type or "mysql").lower()
+        target, columns = table.effective_target, df.columns
+
+        def write_batch(conn, batch: list[Row]) -> None:
+            if t == "mysql":
+                sql = mysql_upsert_sql(target, columns, len(batch))
+            elif t == "sqlite":
+                sql = sqlite_upsert_sql(target, columns, key_columns, len(batch))
+            else:
+                sql = postgres_upsert_sql(target, columns, key_columns, len(batch))
+            try:
+                conn.cursor().execute(sql, [v for row in batch for v in row])
+                conn.commit()
+            except Exception:
+                conn.rollback()
+                raise
+
+        return write_batch

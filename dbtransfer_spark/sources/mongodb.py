@@ -1,37 +1,54 @@
-"""MongoDB source/sink via the Spark Mongo connector (v10+).
+"""MongoDB source and sink on the transfer engine.
 
 Reference behavior re-expressed (SURVEY.md §2):
-- S3 cursor scan → ``spark.read.format("mongodb")``; the connector's
-  partitioner splits by ``_id`` ranges — the parallel version of the
-  reference's single ``Find`` cursor (mongodb.go:313-320).
-- P5 resume predicate ``{_id: {$gt: last}}`` (mongodb.go:264-269) →
-  ``df.filter(col("_id") > lit(hex))``; connector pushes it down as an
-  aggregation ``$match`` stage.
-- W3 bulk upsert (unordered BulkWrite of upserting UpdateOne models,
-  mongodb.go:390-431) → writer options ``operationType=update,
-  upsertDocument=true, ordered=false``.
-- Dynamic schema (bson.M, mongodb.go:326-335) → connector schema
-  inference by sampling, or an explicit user schema pinned via
-  ``schema_json`` to avoid inference drift between runs (SURVEY.md §7
-  hard-part #6).
+- S3 cursor scan (mongodb.go:313-320): the source is a Python data source
+  with one input partition per collection, running the reference's single
+  cursor, ``find(filter, batch_size=, no_cursor_timeout=True)``, sorted by
+  ``_id`` so that the engine's watermark is a correct resume point.
+  Concurrency comes from the engine's ``workers``, across collections.
+- P5 resume (mongodb.go:264-269): pushed integral ``_id`` comparisons
+  become the wire filter, so the engine's ``_id > watermark`` resume and
+  its chunked ``_id`` ranges run on the server.
+- Dynamic schema (bson.M, mongodb.go:326-335): each document crosses Spark
+  as ``_id`` plus the whole document pickled into one binary column, so a
+  Mongo→Mongo copy is exact whatever fields each document carries, with no
+  schema inference.
+- W3 bulk upsert (mongodb.go:390-431): the sink writes unordered
+  ``bulk_write`` batches of upserting ``UpdateOne`` models through the
+  shared partition writer.
 
-The connector jar is not bundled in this environment; option-dict builders
-are pure and unit-tested, reads/writes require the jar at runtime.
+pymongo is imported when a transfer first connects.
 """
 
 from __future__ import annotations
 
-import time
-from typing import Any, Callable, Iterable, Protocol
+import pickle
+import uuid
+from collections.abc import Callable
+from contextlib import closing
+from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    GreaterThan,
+    GreaterThanOrEqual,
+    LessThan,
+    LessThanOrEqual,
+)
+from pyspark.sql.types import StringType
 
-from dbtransfer_spark.checkpoint import Checkpoint, CheckpointStore
 from dbtransfer_spark.config import DBConfig, TableMapping
-from dbtransfer_spark.governance import MigrationStats, RateLimiter
-from dbtransfer_spark.sources.base import Sink, Source
+from dbtransfer_spark.sources.base import BatchSink, Source, import_driver
 
-FORMAT = "mongodb"
+# Spark filters on `_id` that the wire filter can carry.
+_WIRE_OPS = {
+    GreaterThan: "$gt",
+    GreaterThanOrEqual: "$gte",
+    LessThan: "$lt",
+    LessThanOrEqual: "$lte",
+}
 
 
 def connection_uri(cfg: DBConfig) -> str:
@@ -41,92 +58,17 @@ def connection_uri(cfg: DBConfig) -> str:
     return f"mongodb://{auth}{host}/?authSource={auth_db}"
 
 
-def read_options(cfg: DBConfig, table: TableMapping) -> dict[str, str]:
-    return {
-        "connection.uri": connection_uri(cfg),
-        "database": cfg.database,
-        "collection": table.name,
-        # Sample-based inference mirrors bson.M schemalessness; override by
-        # passing an explicit schema to the reader for drift-free runs.
-        "sampleSize": "1000",
-        # Server-side batch + no cursor timeout (mongodb.go:314-316).
-        "batchSize": "1000",
-    }
+def client_factory(cfg: DBConfig) -> Callable[[], Any]:
+    def connect() -> Any:
+        return import_driver("pymongo", "pymongo").MongoClient(connection_uri(cfg))
 
-
-def write_options(cfg: DBConfig, table: TableMapping, ordered: bool = False) -> dict[str, str]:
-    return {
-        "connection.uri": connection_uri(cfg),
-        "database": cfg.database,
-        "collection": table.effective_target,
-        # W3: idempotent upsert keyed on _id (mongodb.go:398-412).
-        "operationType": "update",
-        "upsertDocument": "true",
-        "idFieldList": "_id",
-        "ordered": "true" if ordered else "false",  # unordered = parallel server-side
-        "maxBatchSize": "512",
-    }
-
-
-# ---------------------------------------------------------------------------
-# S3/P5/W3/R9 runtime path: driver-side cursor migration (mongodb.go:221-431)
-# ---------------------------------------------------------------------------
-#
-# The Spark-connector path above is the scale route (partitioned reads,
-# parallel writes). This loop is the reference's own single-cursor batch
-# migration, re-expressed against a minimal injectable collection surface so
-# the full lifecycle — checkpoint skip, count, resume filter, cursor
-# batching, unordered bulk upsert with retries, per-batch checkpoint, final
-# complete marker — is executable and tested without a server (the pattern
-# of tests/test_jdbc_writer.py). Useful in production for small collections
-# where a Spark job is overkill, and as the behavioral spec the connector
-# path must match.
-
-
-class MongoCollectionAPI(Protocol):
-    """Minimal pymongo-Collection-shaped surface (duck-typed)."""
-
-    def count_documents(self, filter: dict) -> int: ...
-
-    def find(
-        self,
-        filter: dict,
-        batch_size: int = 1000,
-        no_cursor_timeout: bool = True,
-        sort: list[tuple[str, int]] | None = None,
-    ) -> Iterable[dict]: ...
-
-    def bulk_write(self, models: list, ordered: bool = False) -> Any: ...
+    return connect
 
 
 try:
     from pymongo import UpdateOne as _UpdateOne  # type: ignore[import-not-found]
 except ImportError:  # failed imports aren't cached — probe once, not per batch
     _UpdateOne = None
-
-
-def normalize_document(
-    doc: dict, stable_fields: Iterable[str], extra_field: str = "_extra_json"
-) -> dict:
-    """Schema-drift normalization (SURVEY.md §7 hard-part 6): project a
-    dynamic bson document onto a PINNED field set; any field outside it
-    is folded into one deterministic JSON string column (sorted keys) so
-    every batch of a migration — and every run — produces the SAME
-    destination schema no matter which optional fields the sampled
-    documents happened to carry. Declared-but-absent fields materialize
-    as None (never missing), completing the fixed shape. Lossless: the
-    extras round-trip via json.loads. The reference's bson.M pass-through
-    (mongodb.go:326-335) simply inherits drift; this is the option that
-    closes it."""
-    import json
-
-    stable = list(stable_fields)
-    out = {f: doc.get(f) for f in stable}
-    extras = {k: v for k, v in doc.items() if k not in out}
-    out[extra_field] = (
-        json.dumps(extras, sort_keys=True, default=str) if extras else None
-    )
-    return out
 
 
 def upsert_models(batch: list[dict]) -> list:
@@ -145,175 +87,104 @@ def upsert_models(batch: list[dict]) -> list:
     ]
 
 
-def bulk_upsert_with_retry(
-    coll: MongoCollectionAPI,
-    batch: list[dict],
-    max_retries: int = 3,
-    retry_delay: float = 5.0,
-    sleep: Callable[[float], None] = time.sleep,
-) -> None:
-    """insertBatch (mongodb.go:390-431): unordered BulkWrite, fixed-delay
-    retry, raise after ``max_retries`` failures."""
-    if not batch:
-        return
-    attempt = 0
-    while True:
-        try:
-            coll.bulk_write(upsert_models(batch), ordered=False)
-            return
-        except Exception:
-            attempt += 1
-            if attempt > max_retries:
-                raise
-            sleep(retry_delay)
+def _id_value(value: Any) -> Any:
+    """``_id`` as Spark sees it: a long when integral, else its string
+    form — what the checkpoint stores (mongodb.go:334)."""
+    return value if isinstance(value, int) and not isinstance(value, bool) else str(value)
 
 
-def migrate_collection(
-    source: MongoCollectionAPI,
-    dest: MongoCollectionAPI,
-    name: str,
-    store: CheckpointStore,
-    stats: MigrationStats | None = None,
-    batch_size: int = 1000,
-    max_retries: int = 3,
-    retry_delay: float = 5.0,
-    rate_limiter: RateLimiter | None = None,
-    parse_id: Callable[[str], Any] = str,
-    sleep: Callable[[float], None] = time.sleep,
-    stable_fields: Iterable[str] | None = None,
-) -> dict[str, Any]:
-    """migrateCollection (mongodb.go:221-431), driver-side.
+def _register(spark, connect: Callable[[], Any], database: str) -> str:
+    """Register a Python data source reading ``database`` through
+    ``connect``; return its format name."""
+    fmt = f"dbtransfer_mongodb_{uuid.uuid4().hex}"
 
-    ``stable_fields``: when given, every document is normalized via
-    ``normalize_document`` before the bulk upsert — unknown fields fold
-    into ``_extra_json`` so batches with divergent shapes land under one
-    stable destination schema (SURVEY.md §7 hard-part 6).
+    class Reader(DataSourceReader):
+        def __init__(self, collection: str, batch_size: int, string_id: bool):
+            self.collection = collection
+            self.batch_size = batch_size
+            self.string_id = string_id
+            self.filter: dict = {}
 
-    Lifecycle parity: checkpoint skip-complete (236-242) → total count
-    (245-248) → resume filter ``{_id: {$gt: last}}`` with remaining-count
-    progress rebase (264-293, the Mongo R9) → batched cursor scan
-    (313-335) → unordered bulk upsert with retry (390-431) → per-batch
-    stats/rate-limit/checkpoint (340-360) → final batch + ``complete=true``
-    marker (363-382). ``parse_id`` converts the checkpointed string back to
-    the native ``_id`` type (ObjectIDFromHex in the reference, 308-311).
-    """
-    if store.is_complete(name):
-        return {"skipped": True, "reason": "checkpoint complete"}
+        def pushFilters(self, filters):
+            for f in filters:
+                op = _WIRE_OPS.get(type(f))
+                # only integral ids compare on the server as in Spark: an
+                # ObjectId never matches its hex string
+                if op and f.attribute == ("_id",) and isinstance(f.value, int):
+                    # a repeated operator keeps its tighter bound
+                    bounds = self.filter.setdefault("_id", {})
+                    tighter = max if op in ("$gt", "$gte") else min
+                    bounds[op] = tighter(bounds.get(op, f.value), f.value)
+                else:
+                    yield f
 
-    total = source.count_documents({})
-    last = store.watermark(name, "_id")
-    if last is not None:
-        filt: dict = {"_id": {"$gt": parse_id(last)}}
-        remaining = source.count_documents(filt)
-    else:
-        filt = {}
-        remaining = total
-    if stats is not None:
-        # mongodb.go:286-291: progress denominator is remaining docs.
-        stats.init_table(name, remaining)
+        def read(self, partition):
+            with closing(connect()) as client:
+                cursor = client[database][self.collection].find(
+                    self.filter,
+                    batch_size=self.batch_size,
+                    no_cursor_timeout=True,
+                    sort=[("_id", 1)],
+                )
+                for doc in cursor:
+                    _id = _id_value(doc["_id"])
+                    yield str(_id) if self.string_id else _id, pickle.dumps(doc)
 
-    migrated = 0
-    batch: list[dict] = []
-    last_id: str | None = last
+    class MongoDataSource(DataSource):
+        @classmethod
+        def name(cls) -> str:
+            return fmt
 
-    def flush() -> None:
-        nonlocal migrated, last_id
-        if not batch:
-            return
-        bulk_upsert_with_retry(
-            dest, batch, max_retries=max_retries, retry_delay=retry_delay, sleep=sleep
-        )
-        migrated += len(batch)
-        if stats is not None:
-            stats.add_processed(name, len(batch))
-        if rate_limiter is not None:
-            rate_limiter.acquire(len(batch))
-        if last_id is not None:
-            store.save(name, Checkpoint(last_key={"_id": last_id}, complete=False))
-        batch.clear()
-
-    # Sort by _id: the checkpoint watermark is only a correct resume point
-    # if iteration is monotone in _id. (The reference iterates in natural
-    # order, mongodb.go:313-320 — a crash between checkpoints there can
-    # skip docs whose _id sorts below the watermark; the explicit sort
-    # closes that hole and costs nothing on the _id index.)
-    stable = list(stable_fields) if stable_fields is not None else None
-    if stable is not None and "_id" not in stable:
-        # _id must stay top-level: the resume watermark and the upsert
-        # key both read it, folding it into extras would break resume
-        stable = ["_id", *stable]
-    for doc in source.find(
-        filt, batch_size=batch_size, no_cursor_timeout=True, sort=[("_id", 1)]
-    ):
-        if stable is not None:
-            doc = normalize_document(doc, stable)
-        batch.append(doc)
-        last_id = str(doc["_id"])
-        if len(batch) >= batch_size:
-            flush()
-    flush()
-
-    store.mark_complete(name, {"_id": last_id} if last_id is not None else None)
-    return {"rows": migrated, "resumed_from": last}
-
-
-def run_migration(
-    collections: dict[str, tuple[MongoCollectionAPI, MongoCollectionAPI]],
-    store: CheckpointStore,
-    stats: MigrationStats | None = None,
-    workers: int = 4,
-    batch_size: int = 1000,
-    rate_limit: int | None = None,
-    max_retries: int = 3,
-    retry_delay: float = 5.0,
-    parse_id: Callable[[str], Any] = str,
-    sleep: Callable[[float], None] = time.sleep,
-) -> dict[str, Any]:
-    """Run() parity (mongodb.go:156-202): a ``workers``-bounded pool
-    migrates collections concurrently, every collection's error is
-    collected (one failure doesn't abort the others), and the shared
-    rate limiter caps aggregate rows/sec across all workers (the global
-    limiter of migration.go:211-268). ``collections`` maps name →
-    (source_collection, dest_collection)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    stats = stats if stats is not None else MigrationStats()
-    limiter = RateLimiter(rate_limit) if rate_limit else None
-    results: dict[str, Any] = {}
-    errors: dict[str, str] = {}
-
-    def one(name: str, pair: tuple) -> None:
-        source, dest = pair
-        try:
-            results[name] = migrate_collection(
-                source, dest, name, store, stats,
-                batch_size=batch_size, max_retries=max_retries,
-                retry_delay=retry_delay, rate_limiter=limiter,
-                parse_id=parse_id, sleep=sleep,
+        def reader(self, schema):
+            return Reader(
+                self.options["collection"],
+                int(self.options["batch_size"]),
+                isinstance(schema["_id"].dataType, StringType),
             )
-        except Exception as exc:  # error collection, not propagation
-            errors[name] = str(exc)
 
-    with ThreadPoolExecutor(max_workers=max(1, workers)) as pool:
-        futures = [pool.submit(one, n, p) for n, p in collections.items()]
-        for f in futures:
-            f.result()
-    return {"tables": results, "errors": errors, "stats": stats.snapshot()}
+    spark.dataSource.register(MongoDataSource)
+    return fmt
 
 
 class MongoSource(Source):
-    def read(self, table: TableMapping) -> DataFrame:
-        return self.spark.read.format(FORMAT).options(**read_options(self.cfg, table)).load()
+    def __init__(self, spark, cfg, connect: Callable[[], Any] | None = None, batch_size: int = 1000):
+        super().__init__(spark, cfg)
+        self.connect = connect or client_factory(cfg)
+        self.batch_size = batch_size
+        self.format = _register(spark, self.connect, cfg.database)
+
+    def table_exists(self, table: TableMapping) -> bool:  # S7
+        with closing(self.connect()) as client:
+            return table.name in client[self.cfg.database].list_collection_names()
 
     def detect_primary_key(self, table: TableMapping) -> list[str]:
-        # Mongo PK is always _id (mongodb.go:254-257).
-        return [table.primary_key] if table.primary_key else ["_id"]
+        return ["_id"]  # mongodb.go:254-257
+
+    def read(self, table: TableMapping) -> DataFrame:
+        """``_id`` is a long column when the smallest and the largest
+        ``_id`` are integral — Mongo sorts all numbers together, so every
+        ``_id`` between them is a number — else a string column."""
+        with closing(self.connect()) as client:
+            collection = client[self.cfg.database][table.name]
+            ends = [collection.find_one(sort=[("_id", d)]) for d in (1, -1)]
+        integral = all(doc is None or isinstance(_id_value(doc["_id"]), int) for doc in ends)
+        return (
+            self.spark.read.format(self.format)
+            .schema(f"_id {'long' if integral else 'string'}, doc binary")
+            .options(collection=table.name, batch_size=str(self.batch_size))
+            .load()
+        )
 
 
-class MongoSink(Sink):
-    def upsert(self, df: DataFrame, table: TableMapping, key_columns: list[str]) -> int:
-        opts = write_options(self.cfg, table)
-        if key_columns and key_columns != ["_id"]:
-            opts["idFieldList"] = ",".join(key_columns)
-        df.write.format(FORMAT).mode("append").options(**opts).save()
-        return -1
+class MongoSink(BatchSink):
+    def __init__(self, spark, cfg, connect: Callable[[], Any] | None = None, **batching):
+        super().__init__(spark, cfg, connect or client_factory(cfg), **batching)
+
+    def batch_writer(self, df: DataFrame, table: TableMapping, key_columns: list[str]):
+        database, collection = self.cfg.database, table.effective_target
+
+        def write_batch(client, batch: list[Row]) -> None:
+            docs = [pickle.loads(row["doc"]) for row in batch]
+            client[database][collection].bulk_write(upsert_models(docs), ordered=False)
+
+        return write_batch

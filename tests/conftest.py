@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 import pytest
 
@@ -25,6 +26,26 @@ def spark():
 
     spark = get_spark(app_name="dbtransfer-tests", shuffle_partitions=8)
     yield spark
+
+
+@contextmanager
+def fake_clients():
+    """Every Mongo/Cassandra client opened through a config is a
+    file-backed fake (``tests/fakes.py``) over the directory named by the
+    config's first host."""
+    from dbtransfer_spark.sources import cassandra, mongodb
+    from tests.fakes import FakeCQL, FakeMongo
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(mongodb, "client_factory", lambda cfg: lambda: FakeMongo(cfg.hosts[0]))
+        mp.setattr(cassandra, "client_factory", lambda cfg: lambda: FakeCQL(cfg.hosts[0]))
+        yield
+
+
+@pytest.fixture
+def fakes():
+    with fake_clients():
+        yield
 
 
 @pytest.fixture(scope="session")

@@ -35,7 +35,7 @@ _DIALECTS = {
             r"TIMESTAMP|BYTEA|TEXT|NUMERIC\(\d+,\d+\)|JSONB|"
             r"(SMALLINT|INTEGER|BIGINT|REAL|DOUBLE PRECISION|BOOLEAN|TEXT)\[\]"
         ),
-        "placeholder": re.compile(r"\$\d+"),
+        "placeholder": re.compile(r"%s"),  # psycopg2's paramstyle
     },
 }
 
@@ -224,11 +224,7 @@ def test_ensure_schema_create_then_recreate(spark, dialect):
 def test_upsert_statements_validate_and_apply(spark, dialect):
     """The sink's real multi-row upsert SQL parses under the dialect
     grammar (placeholder style included) and replay is idempotent."""
-    from dbtransfer_spark.sources.jdbc import (
-        make_upsert_partition_writer,
-        mysql_upsert_sql,
-        postgres_upsert_sql,
-    )
+    from dbtransfer_spark.sources.jdbc import mysql_upsert_sql, postgres_upsert_sql
 
     db = DialectDB(dialect)
     cfg = DBConfig(type=dialect, database="d")
@@ -262,16 +258,11 @@ def test_upsert_statements_validate_and_apply(spark, dialect):
     assert len(db.tables["t"]["rows"]) == len(rows)
     assert db.tables["t"]["rows"][(0,)]["label"] == "updated"
 
-    # and the foreachPartition writer emits the same validated dialect
-    writer = make_upsert_partition_writer(
-        "mysql" if dialect == "mysql" else "postgresql",
-        "t",
-        ["k", "label", "score"],
-        ["k"],
-        db.connect,
-        batch_size=4,
-    )
-    writer(iter(df.collect()))
+    # and the sink's batch writer emits the same validated dialect
+    write_batch = sink.batch_writer(df, tm, ["k"])
+    rows = df.collect()
+    for i in range(0, len(rows), 4):
+        write_batch(conn, rows[i : i + 4])
     assert len(db.tables["t"]["rows"]) == len(rows)
     assert db.tables["t"]["rows"][(0,)]["label"] == "name-0"
 

@@ -104,6 +104,7 @@ def test_minhash_short_and_empty_docs(spark):
 
 
 def test_simhash_near_for_similar(spark):
+    # the 60-bit md5-derived signatures every query uses
     base = " ".join(f"w{i}" for i in range(50))
     near = base.replace("w49", "zz")
     far = " ".join(f"v{i}" for i in range(50))

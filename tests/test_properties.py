@@ -3,8 +3,8 @@
 1. Resume-at-any-boundary ≡ full run: a migration interrupted after any
    number of committed batches, then resumed, produces exactly the source
    (at-least-once replay × idempotent upsert = exactly-once effect).
-   Exercised on the pure-Python Mongo runtime loop — hundreds of
-   interrupt points per second, no Spark session needed.
+   Exercised on a Mongo transfer through the engine, against the
+   file-backed fakes.
 2. Transform expressions ≡ DuckDB: any expression from the documented
    transform grammar (README.md:126-142 — UPPER/LOWER/CONCAT/arithmetic/
    IFNULL) evaluates identically in the engine (Catalyst) and DuckDB.
@@ -17,27 +17,9 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from dbtransfer_spark.checkpoint import CheckpointStore
-from dbtransfer_spark.sources.mongodb import migrate_collection
-from tests.conftest import SF_SMOKE
-from tests.test_runtime_paths import FakeMongoCollection, _mongo_docs
-
-
-class InterruptibleDest(FakeMongoCollection):
-    """Dest that hard-fails every bulk_write from the ``fail_from``-th call
-    on — simulating a crash partway through (checkpoint has the last
-    committed batch, later data never landed)."""
-
-    def __init__(self, fail_from: int):
-        super().__init__()
-        self.fail_from = fail_from
-        self.enabled = True
-
-    def bulk_write(self, models, ordered: bool = False):
-        if self.enabled and self.bulk_calls + 1 >= self.fail_from:
-            self.bulk_calls += 1
-            raise RuntimeError("crash")
-        return super().bulk_write(models, ordered)
+from dbtransfer_spark.engine import TransferEngine
+from tests.conftest import SF_SMOKE, fake_clients
+from tests.test_runtime_paths import _mongo_docs, make_config
 
 
 @given(
@@ -47,33 +29,32 @@ class InterruptibleDest(FakeMongoCollection):
 )
 @settings(max_examples=40, deadline=None)
 def test_mongo_resume_any_boundary_equals_full_run(
-    tmp_path_factory, n_docs, batch_size, fail_at_batch
+    spark, tmp_path_factory, n_docs, batch_size, fail_at_batch
 ):
-    tmp = tmp_path_factory.mktemp("ckpt")
-    source = FakeMongoCollection(_mongo_docs(n_docs))
-    dest = InterruptibleDest(fail_from=fail_at_batch)
-    store = CheckpointStore(str(tmp), engine="mongodb")
-
-    kw = dict(
-        batch_size=batch_size, parse_id=int,
-        max_retries=0, retry_delay=0.0, sleep=lambda _s: None,
+    """A Mongo transfer whose destination crashes at bulk write
+    ``fail_at_batch`` and on (the batches before it committed), then runs
+    again, leaves exactly the source; a third run skips."""
+    cfg, src, dst = make_config(
+        tmp_path_factory.mktemp("t"), "mongodb", ["c"],
+        batch_size=batch_size, max_retries=0,
     )
-    try:
-        migrate_collection(source, dest, "c", store, **kw)
-        interrupted = False
-    except RuntimeError:
-        interrupted = True
+    src.put_rows("c", _mongo_docs(n_docs))
+    dst.fail_next("c", 10_000, after=fail_at_batch - 1)
 
-    if interrupted:
-        assert not store.is_complete("c")
-        dest.enabled = False  # crash cleared; resume
-        migrate_collection(source, dest, "c", store, **kw)
+    with fake_clients():
+        first = TransferEngine(spark, cfg).run()["c"]
+        interrupted = "error" in first
+        assert interrupted == (n_docs > (fail_at_batch - 1) * batch_size)
+        if interrupted:
+            assert not TransferEngine(spark, cfg).store.is_complete("c")
+            dst.fail_next("c", 0)  # crash cleared; resume
+            TransferEngine(spark, cfg).run()
 
-    assert dest.docs == source.docs
-    assert store.is_complete("c")
-    # Idempotent rerun after completion is a no-op.
-    res = migrate_collection(source, dest, "c", store, **kw)
-    assert res["skipped"] is True
+        assert dst.rows("c") == src.rows("c")
+        engine = TransferEngine(spark, cfg)
+        assert engine.store.is_complete("c")
+        # Idempotent rerun after completion is a no-op.
+        assert engine.run()["c"]["skipped"] is True
 
 
 # ---------------------------------------------------------------------------

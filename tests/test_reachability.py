@@ -45,10 +45,6 @@ ALLOWED = {
     "count_exchanges": "plan-test helper: the shuffle count",
     "asof_single_scan_input_expectations": "input contract of the single-scan as-of rewrite",
     "gap_fill_forward_input_expectations": "input contract of the gap-fill rewrite",
-    # Mongo and Cassandra driver loops: the one executable spec of that
-    # lifecycle until one transfer runtime replaces them.
-    "run_migration": "Mongo driver loop (migrate_collection and its helpers)",
-    "migrate_table": "Cassandra driver loop (schema clone, copy_data and helpers)",
 }
 
 

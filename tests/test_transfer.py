@@ -187,19 +187,6 @@ def test_single_shot_progress_needs_no_count_rows(spark, tmp_path, monkeypatch):
     assert (snap["processed"], snap["total"]) == (rows, rows)
 
 
-def test_single_shot_sink_without_counts_takes_source_count(spark, tmp_path, monkeypatch):
-    """A sink that cannot count its writes (upsert returns -1, as the
-    Mongo and Cassandra sinks do) leaves the denominator to the source."""
-    name = "region"
-    cfg = make_config(tmp_path, [TableMapping(name=name, primary_key="r_regionkey")])
-    engine = TransferEngine(spark, cfg)
-    monkeypatch.setattr(engine.sink, "upsert", lambda *_a: -1)
-    engine.run()
-    rows = spark.read.parquet(f"{SF_SMOKE}/{name}.parquet").count()
-    snap = engine.stats.snapshot()[name]
-    assert (snap["processed"], snap["total"]) == (0, rows)
-
-
 def test_single_shot_failed_write_still_lists_the_table(spark, tmp_path, monkeypatch):
     """A table whose upsert raises is still in the stats, with nothing
     processed, so the CLI's final stats name every failed table."""

@@ -17,7 +17,7 @@ from dbtransfer_spark.config import Config, load_config
 from dbtransfer_spark.governance import RateLimiter
 from dbtransfer_spark.sources import ddl
 from dbtransfer_spark.sources.jdbc import mysql_upsert_sql, postgres_upsert_sql, read_options
-from dbtransfer_spark.sources.mongodb import connection_uri, write_options
+from dbtransfer_spark.sources.mongodb import connection_uri, upsert_models
 from dbtransfer_spark.transforms import (
     TransformError,
     translate_expression,
@@ -80,7 +80,7 @@ def test_mysql_upsert_sql():
 def test_postgres_upsert_sql():
     sql = postgres_upsert_sql("t", ["id", "name"], ["id"], 2)
     assert sql == (
-        'INSERT INTO "t" ("id", "name") VALUES ($1, $2), ($3, $4) '
+        'INSERT INTO "t" ("id", "name") VALUES (%s, %s), (%s, %s) '
         'ON CONFLICT ("id") DO UPDATE SET "name"=EXCLUDED."name"'
     )
 
@@ -96,11 +96,16 @@ def test_read_options_partitioned_and_watermarked():
     from dbtransfer_spark.config import DBConfig, TableMapping
 
     cfg = DBConfig(type="mysql", hosts=["h:3306"], database="db", username="u", password="p")
-    opts = read_options(cfg, TableMapping(name="t"), "id", 0, 1000, 8, watermark=500)
+    opts = read_options(cfg, TableMapping(name="t"), "id", 0, 1000, 8)
     assert opts["url"] == "jdbc:mysql://h:3306/db"
-    assert opts["dbtable"] == "(SELECT * FROM t WHERE id > 500) AS t"
+    # the table itself: the engine's `id > watermark` resume filter is
+    # pushed into the partitioned range scans by Catalyst
+    assert opts["dbtable"] == "t"
     assert opts["partitionColumn"] == "id"
+    assert (opts["lowerBound"], opts["upperBound"]) == ("0", "1000")
     assert opts["numPartitions"] == "8"
+    cfg.schema = "app"
+    assert read_options(cfg, TableMapping(name="t"), None, None, None, 8)["dbtable"] == "app.t"
 
 
 # -- Mongo options ----------------------------------------------------------
@@ -112,10 +117,10 @@ def test_mongo_uri_and_upsert_options():
     cfg = DBConfig(type="mongodb", hosts=["m:27017"], database="db", username="u", password="p")
     cfg.set_defaults()
     assert connection_uri(cfg) == "mongodb://u:p@m:27017/?authSource=admin"
-    opts = write_options(cfg, TableMapping(name="c"))
-    assert opts["operationType"] == "update"
-    assert opts["upsertDocument"] == "true"
-    assert opts["ordered"] == "false"
+    # W3: each document is an upsert keyed on _id that $sets it whole
+    (model,) = upsert_models([{"_id": 1, "a": [2]}])
+    assert model["filter"] == {"_id": 1} and model["upsert"] is True
+    assert model["update"] == {"$set": {"_id": 1, "a": [2]}}
 
 
 # -- DDL generation (C5) ----------------------------------------------------
@@ -379,8 +384,8 @@ def test_cassandra_udt_udf_migration_end_to_end():
 
 def test_transform_pushdown_subquery():
     """P1 pushdown mode: source-dialect expressions embedded in the JDBC
-    subquery (mysql.go:599-618 SELECT-list shape), composed with the P4
-    keyset resume predicate; dangerous expressions rejected."""
+    subquery (mysql.go:599-618 SELECT-list shape), a derived table the P4
+    keyset resume predicate can filter; dangerous expressions rejected."""
     import sqlite3
 
     from dbtransfer_spark.sources.jdbc import transform_pushdown_subquery
@@ -390,13 +395,8 @@ def test_transform_pushdown_subquery():
         "users",
         ["id", "name", "bal"],
         {"name": "UPPER(name)", "bal": "bal * 100"},
-        watermark_pk="id",
-        watermark=5,
     )
-    assert sub == (
-        "(SELECT id, UPPER(name) AS name, bal * 100 AS bal "
-        "FROM users WHERE id > 5) AS t"
-    )
+    assert sub == "(SELECT id, UPPER(name) AS name, bal * 100 AS bal FROM users) AS t"
 
     # The emitted text is a valid derived table: run it on a real engine.
     with sqlite3.connect(":memory:") as conn:
@@ -405,7 +405,7 @@ def test_transform_pushdown_subquery():
             "INSERT INTO users VALUES (?, ?, ?)",
             [(i, f"n{i}", i * 1.0) for i in range(1, 11)],
         )
-        rows = conn.execute(f"SELECT * FROM {sub} ORDER BY id").fetchall()
+        rows = conn.execute(f"SELECT * FROM {sub} WHERE id > 5 ORDER BY id").fetchall()
     assert rows[0] == (6, "N6", 600.0)
     assert len(rows) == 5
 

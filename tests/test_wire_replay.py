@@ -1,209 +1,131 @@
-"""Recorded-wire-format replay for the Mongo and Cassandra read paths
-(r7 VERDICT #6): the S3/S4 connector lifecycles driven from transcripts
-of the actual wire shapes — Mongo extended-JSON cursor batches with
-schema drift, a CQL statement→rows transcript with the TTL projection
-and token-resume statements recorded verbatim — so connector read,
-schema inference, and watermark pushdown are verified against what a
-live server would really send, without containers.
+"""Recorded-wire-format replay for the Mongo and Cassandra transfers
+(r7 VERDICT #6): ``TransferEngine`` runs against transcripts of the actual
+wire shapes — Mongo extended-JSON cursor documents with schema drift, a
+CQL statement→rows transcript with the TTL projection recorded verbatim —
+so the scan, the watermark pushdown and the writes are verified against
+what a live server would really send and receive, without containers.
 
-The replay layer is STRICT: any statement/filter the connector emits
-that is not in the recording fails the test, which pins the exact wire
-contract (statement text, resume predicate, cursor options). True
-live-service verification remains environment-gated (no containers in
-this sandbox); the Cassandra transcript reads as id-ordered tokens for
-readability, i.e. as recorded from a ByteOrderedPartitioner cluster —
-token ORDER is partitioner-defined, the statement SHAPES are not.
+The replay is STRICT: a SELECT the engine emits that is not in the
+recording fails the transfer, and the write transcripts must be matched
+call for call. True live-service verification remains environment-gated
+(no containers in this sandbox).
 """
 
 from __future__ import annotations
 
-import datetime
 import json
 import os
+import sys
 
-import pytest
-
-from dbtransfer_spark.checkpoint import Checkpoint, CheckpointStore
-from dbtransfer_spark.config import DBConfig, TableMapping
-from dbtransfer_spark.governance import MigrationStats
+from dbtransfer_spark.checkpoint import Checkpoint
+from dbtransfer_spark.config import TableMapping
+from dbtransfer_spark.engine import TransferEngine
 from dbtransfer_spark.sources import cassandra as cass
-from dbtransfer_spark.sources import mongodb as mongo
+from dbtransfer_spark.sources.mongodb import connection_uri
+from tests.fakes import FakeCQL, decode
+from tests.test_runtime_paths import make_config
 
 FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 
 
 # ---------------------------------------------------------------------------
-# Mongo: extended-JSON wire decoding + replay collection
+# Mongo: extended-JSON cursor capture
 # ---------------------------------------------------------------------------
-
-
-def _decode_extjson(v):
-    """Decode the MongoDB extended-JSON (v2) type wrappers a wire capture
-    carries: $numberLong/$numberInt (→ int), $numberDouble (→ float),
-    $date (→ datetime), $oid (→ hex string)."""
-    if isinstance(v, dict):
-        if len(v) == 1:
-            ((k, inner),) = v.items()
-            if k in ("$numberLong", "$numberInt"):
-                return int(inner)
-            if k == "$numberDouble":
-                return float(inner)
-            if k == "$date":
-                return datetime.datetime.fromisoformat(inner.replace("Z", "+00:00"))
-            if k == "$oid":
-                return str(inner)
-        return {k: _decode_extjson(x) for k, x in v.items()}
-    if isinstance(v, list):
-        return [_decode_extjson(x) for x in v]
-    return v
 
 
 def _load_mongo_recording() -> list[dict]:
     with open(os.path.join(FIXTURES, "mongo_orders_wire.jsonl")) as f:
-        return [_decode_extjson(json.loads(line)) for line in f if line.strip()]
+        return [decode(json.loads(line)) for line in f if line.strip()]
 
 
-class ReplayMongoCollection:
-    """Serves a recorded cursor capture. Natural order is the RECORDED
-    order (deliberately not _id order — the capture interleaves inserts),
-    so resume correctness genuinely depends on the connector requesting
-    the _id sort. Asserts the cursor options the reference sets."""
-
-    def __init__(self, docs: list[dict]):
-        self.docs = list(docs)
-        self.find_calls: list[dict] = []
-        self.written: dict = {}
-        self.bulk_calls = 0
-
-    def _match(self, filter: dict) -> list[dict]:
-        if not filter:
-            return list(self.docs)
-        gt = filter["_id"]["$gt"]
-        return [d for d in self.docs if d["_id"] > gt]
-
-    def count_documents(self, filter: dict) -> int:
-        return len(self._match(filter))
-
-    def find(self, filter, batch_size=1000, no_cursor_timeout=True, sort=None):
-        self.find_calls.append(
-            {
-                "filter": filter,
-                "batch_size": batch_size,
-                "no_cursor_timeout": no_cursor_timeout,
-                "sort": sort,
-            }
-        )
-        matched = self._match(filter)
-        if sort:
-            key, direction = sort[0]
-            matched = sorted(matched, key=lambda d: d[key], reverse=direction < 0)
-        return iter(matched)
-
-    def bulk_write(self, models, ordered=False):
-        self.bulk_calls += 1
-        assert ordered is False
-        for m in models:
-            if isinstance(m, dict):
-                self.written[m["filter"]["_id"]] = dict(m["update"]["$set"])
-            else:
-                self.written[m._filter["_id"]] = dict(m._doc["u"]["$set"])
+def _mongo_transfer(tmp_path, **migration):
+    """The capture as the source collection, in its RECORDED order —
+    deliberately not _id order (the capture interleaves inserts), so resume
+    correctness depends on the cursor requesting the _id sort."""
+    cfg, src, dst = make_config(tmp_path, "mongodb", ["orders"], **migration)
+    src.put_rows("orders", _load_mongo_recording())
+    return cfg, src, dst
 
 
-STABLE = ["user", "total", "created"]
-
-
-def test_mongo_wire_replay_full_migration_normalizes_drift(tmp_path):
-    """Full S3 lifecycle over the recorded cursor: every document lands
-    with the SAME pinned field set despite the capture's schema drift
-    (coupon/shipping/note/session appear on some docs only), extras
-    round-trip losslessly, and the cursor was driven with the reference's
-    options (batched, no timeout, _id-sorted)."""
+def test_mongo_wire_replay_full_migration_normalizes_drift(spark, tmp_path, fakes):
+    """Full S3 lifecycle over the recorded cursor. The capture drifts
+    (coupon/shipping/note/session appear on some docs only, coupon is null
+    on one); the drift is normalized at the Spark boundary — every document
+    crosses as one (``_id``, ``doc``) row — and all 10 documents land
+    exactly, drifted fields as they are. The cursor ran with the
+    reference's options (batched, no timeout) plus the _id sort."""
     docs = _load_mongo_recording()
-    src = ReplayMongoCollection(docs)
-    dest = ReplayMongoCollection([])
-    store = CheckpointStore(str(tmp_path), engine="mongodb")
-    stats = MigrationStats()
+    cfg, src, dst = _mongo_transfer(tmp_path, batch_size=4)
+    engine = TransferEngine(spark, cfg)
 
-    res = mongo.migrate_collection(
-        src, dest, "orders", store, stats,
-        batch_size=4, parse_id=int, stable_fields=STABLE,
-    )
-    assert res == {"rows": 10, "resumed_from": None}
-    assert store.is_complete("orders")
+    assert engine.run() == {"orders": {"rows": 10, "resumed_from": None}}
+    assert engine.store.is_complete("orders")
     # 10 docs / batch 4 → 3 bulk writes
-    assert dest.bulk_calls == 3
+    assert len(dst.calls("bulk_write")) == 3
     # cursor options pinned (mongodb.go:313-320 + the _id-sort fix)
-    call = src.find_calls[-1]
+    (call,) = src.calls("find")
+    assert call["filter"] == {}
     assert call["batch_size"] == 4
     assert call["no_cursor_timeout"] is True
-    assert call["sort"] == [("_id", 1)]
+    assert call["sort"] == [["_id", 1]]
 
-    # one stable shape for every doc, drift folded into _extra_json
-    shapes = {tuple(sorted(d)) for d in dest.written.values()}
-    assert shapes == {tuple(sorted(["_id", *STABLE, "_extra_json"]))}
-    # lossless extras: the drifted fields round-trip via json.loads
-    d1001 = dest.written[1001]
-    extras = json.loads(d1001["_extra_json"])
-    assert extras["coupon"] == "WINTER10"
-    assert {i["sku"] for i in extras["items"]} == {"A1", "B2"}
-    d1006 = json.loads(dest.written[1006]["_extra_json"])
-    assert d1006["shipping"]["carrier"] == "dhl"
-    # declared-but-absent fields materialize as None, never missing
-    assert dest.written[1007]["total"] == pytest.approx(0.99)
-    assert all("created" in d for d in dest.written.values())
+    written = {d["_id"]: d for d in dst.rows("orders")}
+    assert written == {d["_id"]: d for d in docs}
+    assert written[1001]["coupon"] == "WINTER10"
+    assert written[1006]["shipping"] == {"carrier": "dhl", "express": True, "weight_g": 1200}
+    assert "coupon" in written[1010] and written[1010]["coupon"] is None
+    assert "coupon" not in written[1002]
 
 
-def test_mongo_wire_replay_watermark_pushdown(tmp_path):
+def test_mongo_wire_replay_watermark_pushdown(spark, tmp_path, fakes):
     """R9/P5 resume: with a checkpoint watermark, the $gt filter must be
     pushed INTO the wire find (not applied client-side) and only the tail
     documents transfer."""
+    cfg, src, dst = _mongo_transfer(tmp_path, batch_size=4)
+    engine = TransferEngine(spark, cfg)
+    engine.store.save("orders", Checkpoint(last_key={"_id": "1005"}, complete=False))
+
+    assert engine.run() == {"orders": {"rows": 5, "resumed_from": "1005"}}
+    # the filter reached the wire, typed as the integral _id (not "1005")
+    assert [c["filter"] for c in src.calls("find")] == [{"_id": {"$gt": 1005}}]
+    assert sorted(d["_id"] for d in dst.rows("orders")) == [1006, 1007, 1008, 1009, 1010]
+
+
+def test_mongo_wire_replay_spark_schema_is_drift_free(spark, tmp_path, fakes):
+    """Schema parity: the source frame has ONE Spark schema no matter
+    which prefix of the capture the collection holds — no sampling-based
+    inference to drift — and its rows carry the documents exactly."""
+    import pickle
+
     docs = _load_mongo_recording()
-    src = ReplayMongoCollection(docs)
-    dest = ReplayMongoCollection([])
-    store = CheckpointStore(str(tmp_path), engine="mongodb")
-    store.save("orders", Checkpoint(last_key={"_id": "1005"}, complete=False))
-
-    res = mongo.migrate_collection(
-        src, dest, "orders", store, batch_size=4, parse_id=int,
-        stable_fields=STABLE,
-    )
-    assert res == {"rows": 5, "resumed_from": "1005"}
-    # the filter reached the wire, typed via parse_id (int, not "1005")
-    assert src.find_calls[-1]["filter"] == {"_id": {"$gt": 1005}}
-    assert set(dest.written) == {1006, 1007, 1008, 1009, 1010}
-
-
-def test_mongo_wire_replay_spark_schema_is_drift_free(spark):
-    """Schema inference parity: the normalized recording infers ONE Spark
-    schema no matter which prefix of the capture is sampled — the property
-    `sampleSize`-based inference lacks and `stable_fields` guarantees."""
-    docs = [
-        mongo.normalize_document(d, ["_id", *STABLE])
-        for d in _load_mongo_recording()
-    ]
-    head = spark.createDataFrame(docs[:3])
-    full = spark.createDataFrame(docs)
+    cfg, src, _ = _mongo_transfer(tmp_path)
+    engine = TransferEngine(spark, cfg)
+    table = TableMapping(name="orders")
+    full = engine.source.read(table)
+    src.put_rows("orders", docs[:3])
+    head = engine.source.read(table)
     assert head.schema == full.schema
-    assert set(full.columns) == {"_id", "user", "total", "created", "_extra_json"}
-    assert full.count() == 10
-
-
-def test_mongo_connector_read_options_pinned():
-    """The options handed to the Spark Mongo connector (S3 scale path) —
-    the read contract a live server would receive."""
-    cfg = DBConfig(
-        type="mongodb", hosts=["mongo1:27017"], database="shop",
-        username="app", password="pw",
+    assert full.dtypes == [("_id", "bigint"), ("doc", "binary")]
+    assert head.count() == 3
+    src.put_rows("orders", docs)
+    assert sorted((pickle.loads(r["doc"]) for r in full.collect()), key=lambda d: d["_id"]) == (
+        sorted(docs, key=lambda d: d["_id"])
     )
-    cfg.set_defaults()
-    opts = mongo.read_options(cfg, TableMapping(name="orders"))
-    assert opts == {
-        "connection.uri": "mongodb://app:pw@mongo1:27017/?authSource=admin",
-        "database": "shop",
-        "collection": "orders",
-        "sampleSize": "1000",
-        "batchSize": "1000",
-    }
+
+
+def test_mongo_connector_read_options_pinned(spark, tmp_path, fakes):
+    """The read contract a live server receives from a default-config
+    transfer: the connection URI, and a cursor of 1000-document batches
+    (the reference's batch_size default, mongodb.go:314-316), without a
+    cursor timeout, sorted by _id."""
+    cfg, src, _ = _mongo_transfer(tmp_path)
+    cfg.source.username, cfg.source.password = "app", "pw"
+    assert connection_uri(cfg.source) == f"mongodb://app:pw@{src.root}/?authSource=admin"
+    TransferEngine(spark, cfg).run()
+    assert src.calls("find") == [{
+        "op": "find", "collection": "orders", "filter": {}, "batch_size": 1000,
+        "no_cursor_timeout": True, "sort": [["_id", 1]],
+    }]
 
 
 # ---------------------------------------------------------------------------
@@ -216,262 +138,184 @@ def _load_cql_transcript() -> dict:
         return json.load(f)
 
 
-class ReplayCQLSession:
-    """Strict statement-level replay: execute() serves only statements
-    present in the transcript; anything else is an unrecorded wire
-    interaction and fails the test."""
-
-    def __init__(self, transcript: dict):
-        self.t = transcript
-        self.statements: list[str] = []
-
-    def execute(self, statement: str, parameters: tuple = ()):  # noqa: D102
-        self.statements.append(statement)
-        if statement.startswith("SELECT column_name, kind, position"):
-            assert parameters == (self.t["keyspace"], self.t["table"])
-            return iter([dict(r) for r in self.t["system_schema.columns"]])
-        if statement in self.t["pages"]:
-            assert parameters == ()
-            return iter([dict(r) for r in self.t["pages"][statement]])
-        raise AssertionError(f"unrecorded wire statement: {statement!r}")
-
-
-class RecordingBatchDest:
-    def __init__(self):
-        self.batches: list[list[tuple[str, tuple]]] = []
-
-    def execute(self, statement: str, parameters: tuple = ()):  # pragma: no cover
-        raise AssertionError("dest only receives batches")
-
-    def execute_batch(self, statements):
-        self.batches.append(list(statements))
+def _cql_transfer(tmp_path, **migration):
+    """The transcript as the source session: each recorded catalog table
+    answers its statements, each recorded page its exact SELECT; the
+    destination keyspace is unset, as in the recorded writes."""
+    t = _load_cql_transcript()
+    cfg, src, dst = make_config(
+        tmp_path, "cassandra", [TableMapping(name=t["table"], target_name="orders_v2")],
+        keyspaces=(t["keyspace"], ""), **migration,
+    )
+    columns = t["system_schema.columns"]
+    FakeCQL(src.root).set_answers([
+        ("SELECT table_name FROM system_schema.tables", t["system_schema.tables"]),
+        ("SELECT default_time_to_live FROM system_schema.tables", t["system_schema.tables"]),
+        ("SELECT column_name, type, kind, position FROM system_schema.columns", columns),
+        ("SELECT table_name, column_name, type FROM system_schema.columns",
+         [{"table_name": t["table"], **c} for c in columns]),
+        ("SELECT type_name", t["system_schema.types"]),
+        ("SELECT options", t["system_schema.indexes"]),
+        ("SELECT function_name", t["system_schema.functions"]),
+        *t["pages"].items(),
+    ])
+    return t, cfg, src, dst
 
 
-def _transcript_columns(t: dict) -> list[tuple[str, str]]:
-    return [(r["column_name"], r["type"]) for r in t["system_schema.columns"]]
-
-
-def test_cassandra_wire_replay_detect_keys_and_full_copy(tmp_path):
+def test_cassandra_wire_replay_detect_keys_and_full_copy(spark, tmp_path, fakes):
     """C3 + S4/S5 against the recorded transcript: key detection from the
     recorded system_schema rows, then a full copy whose SELECT — TTL
     projection included — must be byte-identical to the recorded wire
-    statement (the strict session raises otherwise)."""
-    t = _load_cql_transcript()
-    src = ReplayCQLSession(t)
-    pks, cks = cass.detect_keys(src, t["keyspace"], t["table"])
-    assert (pks, cks) == (["order_id"], ["line_no"])
-
-    dest = RecordingBatchDest()
-    store = CheckpointStore(str(tmp_path), engine="cassandra")
-    stats = MigrationStats()
-    res = cass.copy_data(
-        src, dest,
-        source_keyspace=t["keyspace"], source_name=t["table"],
-        target_name="orders_v2",
-        columns=_transcript_columns(t),
-        partition_keys=pks, key_columns=pks + cks,
-        store=store, stats=stats, batch_size=3,
+    statement; every catalog read names the recorded keyspace and table."""
+    t, cfg, src, dst = _cql_transfer(tmp_path, batch_size=3)
+    assert cass.detect_keys(FakeCQL(src.root), t["keyspace"], t["table"]) == (
+        ["order_id"], ["line_no"]
     )
-    assert res == {"rows": 8, "resumed_from": None}
-    assert store.is_complete(t["table"])
+
+    engine = TransferEngine(spark, cfg)
+    assert engine.run() == {"orders": {"rows": 8, "resumed_from": None}}
+    assert engine.store.is_complete(t["table"])
+    statements = [c["statement"] for c in src.calls("execute")]
+    assert statements[-1] == next(iter(t["pages"]))
+    for c in src.calls("execute")[:-1]:
+        assert c["parameters"] in ([t["keyspace"], t["table"]], [t["keyspace"]])
+    batches = [b["statements"] for b in dst.calls("batch")]
     # 8 rows / batch 3 → 3 batches
-    assert [len(b) for b in dest.batches] == [3, 3, 2]
+    assert [len(b) for b in batches] == [3, 3, 2]
     # INSERT carries every column + USING TTL (text cols eligible,
     # set<text> excluded from the TTL projection)
-    stmt = dest.batches[0][0][0]
-    assert stmt == (
+    assert batches[0][0][0] == (
         "INSERT INTO orders_v2 (order_id, line_no, user, total, tags) "
         "VALUES (?, ?, ?, ?, ?) USING TTL ?"
     )
     # row TTL = first eligible column's recorded remaining TTL; NULL → 0
-    first_params = dest.batches[0][0][1]
-    assert first_params[-1] == 86400
-    bob = next(p for b in dest.batches for s, p in b if p[2] == "bob")
+    assert batches[0][0][1][-1] == 86400
+    bob = next(p for b in batches for s, p in b if p[2] == "bob")
     assert bob[-1] == 0
-    # checkpoint watermark is the last partition key seen
-    assert store.load(t["table"]).last_key == {"order_id": "9"}
 
 
-def test_cassandra_wire_replay_token_resume_pushdown(tmp_path):
-    """P6: resuming from a checkpoint must emit the recorded
-    token-WHERE statement — the predicate travels on the wire, never as
-    a client-side filter — and only the tail page transfers."""
-    t = _load_cql_transcript()
-    src = ReplayCQLSession(t)
-    dest = RecordingBatchDest()
-    store = CheckpointStore(str(tmp_path), engine="cassandra")
-    store.save(
-        t["table"], Checkpoint(last_key={"order_id": "5"}, complete=False)
-    )
-    res = cass.copy_data(
-        src, dest,
-        source_keyspace=t["keyspace"], source_name=t["table"],
-        target_name="orders_v2",
-        columns=_transcript_columns(t),
-        partition_keys=["order_id"], key_columns=["order_id", "line_no"],
-        store=store, batch_size=3,
-    )
-    assert res == {"rows": 4, "resumed_from": {"order_id": "5"}}
-    assert any("WHERE token(order_id) >= token(5)" in s for s in src.statements)
-    moved = {p[0] for b in dest.batches for s, p in b}
-    assert moved == {5, 7, 8, 9}
-
-
-# ---------------------------------------------------------------------------
-# WRITE-path transcripts (r9 VERDICT #4 — closes §2.7): the exact bulk
-# upsert models / batch statements a live server would RECEIVE, recorded
-# as fixtures. Strict: any write not byte-equal to the transcript fails.
-# ---------------------------------------------------------------------------
-
-
-def _load_mongo_write_transcript() -> dict:
-    with open(os.path.join(FIXTURES, "mongo_orders_write_wire.json")) as f:
-        return _decode_extjson(json.load(f))
-
-
-def _load_cql_write_transcript() -> dict:
+def test_cassandra_wire_replay_write_transcript_and_idempotence(spark, tmp_path, fakes):
+    """W4 write wire (cassandra.go:648-698): the full copy must apply the
+    recorded DDL clone and flush EXACTLY the recorded batches — `INSERT
+    ... USING TTL ?` statements byte-identical, parameter tuples (TTL
+    included) value-equal, 3/3/2 grouping — under the recorded session
+    contract (QUORUM consistency, UNLOGGED batch type,
+    cassandra.go:1170-1174), and replaying the transfer must leave the
+    destination state unchanged."""
     with open(os.path.join(FIXTURES, "cassandra_orders_write_wire.json")) as f:
-        return json.load(f)
+        wt = json.load(f)
+    assert wt["session"] == {"consistency": cass.CONSISTENCY, "batch_type": cass.BATCH_TYPE}
+    t, cfg, src, dst = _cql_transfer(tmp_path, batch_size=3)
 
-
-def _normalize_models(models: list) -> list[dict]:
-    """pymongo UpdateOne instances and the dict fallback share one wire
-    shape (filter/update/upsert) — normalize for transcript comparison."""
-    out = []
-    for m in models:
-        if not isinstance(m, dict):
-            m = {"filter": m._filter, "update": m._doc["u"], "upsert": True}
-        out.append(m)
-    return out
-
-
-class StrictMongoWriteDest:
-    """Asserts every bulk_write call equals the recorded transcript call —
-    model order, filter, full $set document, upsert flag, unordered — and
-    APPLIES the models with upsert semantics so idempotent-replay equality
-    is checkable (mongodb.go:390-431: unordered UpdateOne upserts)."""
-
-    def __init__(self, expected_calls: list[list[dict]]):
-        self.expected = expected_calls
-        self.call_idx = 0
-        self.state: dict = {}
-
-    def count_documents(self, filter: dict) -> int:
-        return len(self.state)
-
-    def bulk_write(self, models, ordered=False):
-        assert ordered is False, "reference bulk writes are unordered"
-        norm = _normalize_models(models)
-        assert self.call_idx < len(self.expected), "unrecorded bulk_write call"
-        assert norm == self.expected[self.call_idx]
-        self.call_idx += 1
-        for m in norm:
-            self.state[m["filter"]["_id"]] = dict(m["update"]["$set"])
-
-
-def test_mongo_wire_replay_write_transcript_and_idempotence(tmp_path):
-    """W3 write wire: the full migration must emit EXACTLY the recorded
-    bulk_write sequence (3 unordered calls of upserting UpdateOne models,
-    _id filter, whole-document $set), and replaying the identical
-    transcript a second time must leave the destination state unchanged
-    (upsert idempotence — what makes retry-after-partial-flush safe)."""
-    t = _load_mongo_write_transcript()
-    docs = _load_mongo_recording()
-
-    def run(dest, subdir):
-        store = CheckpointStore(str(tmp_path / subdir), engine="mongodb")
-        return mongo.migrate_collection(
-            ReplayMongoCollection(docs), dest, "orders", store,
-            batch_size=4, parse_id=int, stable_fields=STABLE,
-        )
-
-    dest = StrictMongoWriteDest(t["bulk_writes"])
-    assert run(dest, "first") == {"rows": 10, "resumed_from": None}
-    assert dest.call_idx == len(t["bulk_writes"]) == 3, "transcript not consumed"
-    state_after_first = {k: dict(v) for k, v in dest.state.items()}
-    assert set(state_after_first) == {1001 + i for i in range(10)}
-
-    # idempotent replay: same transcript against the already-written state
-    dest.call_idx = 0
-    assert run(dest, "second") == {"rows": 10, "resumed_from": None}
-    assert dest.state == state_after_first
-
-
-class StrictCQLWriteDest:
-    """Asserts every flushed batch equals the recorded transcript batch —
-    statement text byte-identical, parameters value-equal, batch grouping
-    preserved — and APPLIES the INSERTs keyed on (order_id, line_no) (CQL
-    INSERT is an upsert) for idempotent-replay equality."""
-
-    def __init__(self, expected_batches: list[list[list]]):
-        self.expected = expected_batches
-        self.idx = 0
-        self.state: dict = {}
-
-    def execute(self, statement: str, parameters: tuple = ()):  # pragma: no cover
-        raise AssertionError("dest only receives batches")
-
-    def execute_batch(self, statements):
-        norm = [[s, list(p)] for s, p in statements]
-        assert self.idx < len(self.expected), "unrecorded batch flush"
-        assert norm == self.expected[self.idx]
-        self.idx += 1
-        for s, p in statements:
-            self.state[(p[0], p[1])] = tuple(p)
-
-
-def test_cassandra_wire_replay_write_transcript_and_idempotence(tmp_path):
-    """W4 write wire (cassandra.go:648-698): the full copy must flush
-    EXACTLY the recorded batches — `INSERT ... USING TTL ?` statements
-    byte-identical, parameter tuples (TTL included) value-equal, 3/3/2
-    grouping — under the recorded session contract (QUORUM consistency,
-    UNLOGGED batch type, cassandra.go:1170-1174), and replaying the
-    transcript must leave the destination state unchanged."""
-    t = _load_cql_transcript()
-    wt = _load_cql_write_transcript()
-    assert wt["session"] == {
-        "consistency": cass.CONSISTENCY,
-        "batch_type": cass.BATCH_TYPE,
-    }
-
-    def run(dest, subdir):
-        store = CheckpointStore(str(tmp_path / subdir), engine="cassandra")
-        return cass.copy_data(
-            ReplayCQLSession(t), dest,
-            source_keyspace=t["keyspace"], source_name=t["table"],
-            target_name=wt["table"], columns=_transcript_columns(t),
-            partition_keys=["order_id"], key_columns=["order_id", "line_no"],
-            store=store, batch_size=3,
-        )
-
-    dest = StrictCQLWriteDest(wt["batches"])
-    assert run(dest, "first") == {"rows": 8, "resumed_from": None}
-    assert dest.idx == len(wt["batches"]) == 3, "transcript not consumed"
-    assert [len(b) for b in wt["batches"]] == [3, 3, 2]
-    state_after_first = dict(dest.state)
+    assert TransferEngine(spark, cfg).run() == {"orders": {"rows": 8, "resumed_from": None}}
+    assert [c["statement"] for c in dst.calls("execute")] == wt["ddl"]
+    assert [b["statements"] for b in dst.calls("batch")] == wt["batches"]
+    state_after_first = dst.rows(wt["table"])
     assert len(state_after_first) == 8
 
-    # idempotent replay (the property execute_batch_with_retry relies on)
-    dest.idx = 0
-    assert run(dest, "second") == {"rows": 8, "resumed_from": None}
-    assert dest.state == state_after_first
+    # idempotent replay (the property the batch retry relies on)
+    cfg.migration.checkpoint_dir = str(tmp_path / "ckpt2")
+    assert TransferEngine(spark, cfg).run() == {"orders": {"rows": 8, "resumed_from": None}}
+    assert [b["statements"] for b in dst.calls("batch")] == wt["batches"] * 2
+    assert dst.rows(wt["table"]) == state_after_first
 
 
-def test_cassandra_connector_options_pinned():
-    """The option dicts handed to the Spark Cassandra connector (S4/W4
-    scale path): §2.7 consistency + paging/batching knobs."""
+def test_cassandra_connector_options_pinned(monkeypatch):
+    """The options the engine hands cassandra-driver (S4/W4), against
+    stand-in driver modules: contact points and port from the config
+    hosts, password auth, dict rows, QUORUM reads and writes
+    (cassandra.go:1170), UNLOGGED batches (cassandra.go:648-700) of
+    prepared statements, each statement prepared once."""
+    import types
+
+    made: dict = {"sessions": [], "batches": []}
+
+    class Session:
+        def __init__(self):
+            self.executed, self.prepared = [], []
+            made["sessions"].append(self)
+
+        def execute(self, statement, parameters=None):
+            self.executed.append((statement, parameters))
+
+        def prepare(self, statement):
+            self.prepared.append(statement)
+            return ("prepared", statement)
+
+    class Cluster:
+        def __init__(self, contact_points, port, auth_provider):
+            made["cluster"] = (contact_points, port, auth_provider)
+
+        def connect(self):
+            return Session()
+
+        def shutdown(self):
+            made["shutdown"] = True
+
+    class BatchStatement:
+        def __init__(self, batch_type, consistency_level):
+            self.options, self.added = (batch_type, consistency_level), []
+            made["batches"].append(self)
+
+        def add(self, statement, parameters):
+            self.added.append((statement, parameters))
+
+    modules = {
+        "cassandra": types.SimpleNamespace(ConsistencyLevel=types.SimpleNamespace(QUORUM="Q")),
+        "cassandra.cluster": types.SimpleNamespace(Cluster=Cluster),
+        "cassandra.auth": types.SimpleNamespace(PlainTextAuthProvider=lambda u, p: ("auth", u, p)),
+        "cassandra.query": types.SimpleNamespace(
+            BatchType=types.SimpleNamespace(UNLOGGED="U"), BatchStatement=BatchStatement,
+            dict_factory="dict_factory",
+        ),
+    }
+    for name, module in modules.items():
+        monkeypatch.setitem(sys.modules, name, module)
+
+    from dbtransfer_spark.config import DBConfig
+
     cfg = DBConfig(
-        type="cassandra", hosts=["cass1:9042"], keyspace="shop",
+        type="cassandra", hosts=["cass1:9142", "cass2:9142"], keyspace="shop",
         username="app", password="pw",
     )
-    table = TableMapping(name="orders", target_name="orders_v2")
-    r = cass.read_options(cfg, table)
-    assert r["spark.cassandra.connection.host"] == "cass1"
-    assert r["spark.cassandra.input.consistency.level"] == "QUORUM"
-    assert r["spark.cassandra.input.fetch.sizeInRows"] == "1000"
-    assert (r["keyspace"], r["table"]) == ("shop", "orders")
-    w = cass.write_options(cfg, table, ttl_seconds=3600)
-    assert w["spark.cassandra.output.consistency.level"] == "QUORUM"
-    assert w["spark.cassandra.output.batch.grouping.key"] == "partition"
-    assert w["spark.cassandra.output.ttl"] == "3600"
-    assert w["table"] == "orders_v2"
+    session = cass.client_factory(cfg)()
+    assert made["cluster"] == (["cass1", "cass2"], 9142, ("auth", "app", "pw"))
+    (native,) = made["sessions"]
+    assert (native.row_factory, native.default_consistency_level) == ("dict_factory", "Q")
+    session.execute("SELECT 1 FROM t WHERE k = %s", ("shop",))
+    session.execute("SELECT 1 FROM t")
+    assert native.executed == [("SELECT 1 FROM t WHERE k = %s", ("shop",)), ("SELECT 1 FROM t", None)]
+
+    insert = "INSERT INTO t (k) VALUES (?)"
+    session.execute_batch([(insert, (1,)), (insert, (2,))])
+    session.execute_batch([(insert, (3,))])
+    assert native.prepared == [insert]
+    assert [b.options for b in made["batches"]] == [("U", "Q"), ("U", "Q")]
+    assert made["batches"][0].added == [(("prepared", insert), (1,)), (("prepared", insert), (2,))]
+    assert native.executed[-2:] == [(made["batches"][0], None), (made["batches"][1], None)]
+    session.close()
+    assert made["shutdown"] is True
+
+
+def test_mongo_wire_replay_write_transcript_and_idempotence(spark, tmp_path, fakes):
+    """W3 write wire: the full migration must emit EXACTLY the recorded
+    bulk_write sequence (3 unordered calls of upserting UpdateOne models,
+    _id filter, whole-document $set), and replaying the transfer must
+    leave the destination state unchanged (upsert idempotence — what makes
+    retry-after-partial-flush safe)."""
+    with open(os.path.join(FIXTURES, "mongo_orders_write_wire.json")) as f:
+        wt = decode(json.load(f))
+    cfg, src, dst = _mongo_transfer(tmp_path, batch_size=4)
+
+    assert TransferEngine(spark, cfg).run() == {"orders": {"rows": 10, "resumed_from": None}}
+    calls = dst.calls("bulk_write")
+    assert [c["models"] for c in calls] == wt["bulk_writes"]
+    assert len(calls) == 3 and all(c["ordered"] is False for c in calls)
+    state_after_first = dst.rows("orders")
+    assert sorted(d["_id"] for d in state_after_first) == [1001 + i for i in range(10)]
+
+    # idempotent replay: same transfer against the already-written state
+    cfg.migration.checkpoint_dir = str(tmp_path / "ckpt2")
+    assert TransferEngine(spark, cfg).run() == {"orders": {"rows": 10, "resumed_from": None}}
+    assert [c["models"] for c in dst.calls("bulk_write")] == wt["bulk_writes"] * 2
+    assert dst.rows("orders") == state_after_first
