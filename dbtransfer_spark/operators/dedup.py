@@ -32,13 +32,11 @@ from dbtransfer_spark.textutil import alnum_lower, normalized_text
 
 def exact_dedup(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame:
     """Keep exactly one row per key: the one with the smallest
-    ``order_col`` (deterministic, unlike dropDuplicates)."""
-    w = Window.partitionBy(*key_cols).orderBy(order_col)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    ``order_col`` (deterministic, unlike dropDuplicates). The window is
+    parsed SQL: the same tree as the Column-built window, in fewer py4j
+    round trips."""
+    rn = f"row_number() OVER (PARTITION BY {', '.join(key_cols)} ORDER BY {order_col})"
+    return df.selectExpr("*", f"{rn} AS __rn").filter("__rn = 1").drop("__rn")
 
 
 @register(
@@ -318,16 +316,15 @@ def _minhash_coeffs(num_hashes: int, seed: int) -> list[tuple[int, int]]:
     ]
 
 
-def _word_hash_fast(w) -> Column:
-    """xxhash64-based word hash (JVM-native, fastest; engine-specific)."""
-    return F.pmod(F.xxhash64(w), F.lit(_PRIME))
-
-
-def _word_hash_portable(w) -> Column:
-    """md5-based word hash, bit-identical in any engine that has md5 —
-    first 15 hex digits (60 bits, < 2^63) parsed as an integer, mod PRIME.
-    ~2× the cost of xxhash64; used by the oracle-checked declared query."""
-    return F.pmod(F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast("long"), F.lit(_PRIME))
+# Per-word hash over the ``transform`` lambda variable ``w``, mod _PRIME.
+# xxhash64 is JVM-native and fastest but engine-specific; the md5 form —
+# first 15 hex digits (60 bits, < 2^63) parsed as an integer — is
+# bit-identical in any engine that has md5, at ~2x the cost, and is what
+# the oracle-checked declared queries use.
+_WORD_HASH_FAST = f"pmod(xxhash64(w), {_PRIME})"
+_WORD_HASH_PORTABLE = (
+    f"pmod(CAST(conv(substring(md5(w), 1, 15), 16, 10) AS BIGINT), {_PRIME})"
+)
 
 
 def shingle_arrays(
@@ -349,33 +346,39 @@ def shingle_arrays(
     re-materializing every shingle as a string (O(words × shingle_len)
     string copies per doc) — measured 3.2× faster end-to-end at sf0.1.
     Word hashes are mod-reduced below 2^32 first so coefficient products
-    stay under 2^63 (ANSI overflow)."""
-    words = F.split(F.col(text_col), " ", -1)
-    word_hash = _word_hash_portable if portable_hash else _word_hash_fast
-    word_hashes = F.transform(words, word_hash)
+    stay under 2^63 (ANSI overflow).
+
+    Two parsed SQL projections (the same fix as signatures_from_shingles):
+    the expression trees equal the Column-built ones apart from lambda
+    variable names, so shingles are bit-identical, at a fraction of the
+    py4j round trips per frame."""
+    if shingle_len > len(_POLY):
+        raise ValueError("shingle_len > 7 not supported by the rolling-polynomial hash")
+    word_hash = _WORD_HASH_PORTABLE if portable_hash else _WORD_HASH_FAST
     # ``carry`` columns ride along unchanged (narrow op, no cost): lets
     # distinct-first callers keep e.g. the clique ``ids`` array attached to
     # the signature frame instead of re-joining the distinct-text frame
     # later (r11: two whole shuffle joins removed from the LSH expansion).
-    hashed = df.select(F.col(id_col), *carry, word_hashes.alias("__wh"))
-    if shingle_len > len(_POLY):
-        raise ValueError("shingle_len > 7 not supported by the rolling-polynomial hash")
-    poly = _POLY[:shingle_len]
-    shingle_at = lambda i: F.pmod(
-        sum(
-            (F.element_at("__wh", i + j + 1) * F.lit(c)) if c != 1 else F.element_at("__wh", i + j + 1)
-            for j, c in enumerate(poly)
-        ),
-        F.lit(_PRIME),
+    hashed = df.selectExpr(
+        id_col, *carry, f"transform(split({text_col}, ' ', -1), w -> {word_hash}) AS __wh"
     )
+    # term j of the shingle at offset i: word i+j's hash times poly[j]; the
+    # leading ``+ 0`` keeps the tree of the Python ``sum`` it replaced
+    terms = [
+        f"element_at(__wh, i + {j} + 1)" + (f" * {c}" if c != 1 else "")
+        for j, c in enumerate(_POLY[:shingle_len])
+    ]
+    shingle_at = f"pmod({terms[0]} + 0{''.join(' + ' + t for t in terms[1:])}, {_PRIME})"
     # Guard: sequence(0, -1) is [0, -1] (inferred step -1), not empty; a doc
     # shorter than shingle_len would hit element_at(__wh, 0) (always errors).
-    n = F.size("__wh")
-    idx = F.when(n >= shingle_len, F.sequence(F.lit(0), n - shingle_len)).otherwise(
-        F.array().cast("array<int>")
+    idx = (
+        f"CASE WHEN size(__wh) >= {shingle_len}"
+        f" THEN sequence(0, size(__wh) - {shingle_len})"
+        " ELSE CAST(array() AS ARRAY<INT>) END"
     )
-    shingles = F.array_distinct(F.transform(idx, shingle_at))
-    return hashed.select(F.col(id_col), *carry, shingles.alias("__shingles"))
+    return hashed.selectExpr(
+        id_col, *carry, f"array_distinct(transform({idx}, i -> {shingle_at})) AS __shingles"
+    )
 
 
 def minhash_signatures(
@@ -476,11 +479,12 @@ def minhash_lsh_pairs(
 
 def minhash_agreement(mh_a: str, mh_b: str) -> Column:
     """Estimated Jaccard of two signature columns: the fraction of equal
-    positions, rounded to 4 places."""
-    est = F.size(
-        F.filter(F.zip_with(mh_a, mh_b, lambda x, y: x == y), lambda v: v)
-    ).cast("double") / F.size(F.col(mh_a))
-    return F.round(est, 4)
+    positions, rounded to 4 places. One parsed expression, the same tree
+    as the Column-built form apart from lambda variable names."""
+    return F.expr(
+        f"round(CAST(size(filter(zip_with({mh_a}, {mh_b}, (x, y) -> x = y), v -> v))"
+        f" AS DOUBLE) / size({mh_a}), 4)"
+    )
 
 
 def minhash_jaccard_estimate(

@@ -6,15 +6,14 @@ verified operators; nothing here introduces new math.
 ``incremental_release`` is the canonical one: new crawl batch → exact
 self-dedup → MinHash-LSH near-dup check against the *current corpus
 release* (asymmetric: batch×corpus bucket probes, never corpus×corpus)
-→ atomic versioned commit. Re-running the same batch is idempotent at
-the content level: every kept doc would be caught as its own duplicate
-on replay.
+→ atomic versioned commit, all in one write: the probe runs inside the
+commit. Re-running the same batch is idempotent at the content level:
+every kept doc would be caught as its own duplicate on replay.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from dbtransfer_spark.operators.dedup import (
     exact_dedup,
@@ -91,15 +90,13 @@ def near_dup_probe(
     band rows only ids, and the candidates join the corpus signature
     once by corpus id. A pair sharing several bands is estimated once
     per shared band; the final distinct collapses the repeats."""
-    corpus_sigs = sig_corpus.select(
-        F.col(id_col).alias("corp_id"), F.col("minhash").alias("mh_corp")
-    )
+    corpus_sigs = sig_corpus.selectExpr(f"{id_col} AS corp_id", "minhash AS mh_corp")
     return (
         _banded(sig_new, "new", id_col, "minhash")
         .join(_banded(sig_corpus, "corp", id_col), ["band", "bucket"])
         .join(corpus_sigs, "corp_id")
         .filter(minhash_agreement("minhash", "mh_corp") >= threshold)
-        .select(F.col("new_id").alias(id_col))
+        .selectExpr(f"new_id AS {id_col}")
         .distinct()
     )
 
@@ -124,14 +121,21 @@ def incremental_release(
     re-signing (the 100 TB killer). When the latest version has no
     ``minhash`` column (an out-of-band commit), the release signs the
     corpus once and commits the signed corpus ∪ survivors as a full
-    snapshot, so every later version is signed again."""
-    # n_batch rides whichever job first materializes the signed batch
-    # (guide §1.4/§5 — no standalone count action): the seed commit's
-    # write, or the probe job
+    snapshot, so every later version is signed again.
+
+    One write per release: the commit writes the signed batch
+    anti-joined with the probe, so the probe's stages run inside the
+    commit's write; no drop set is cached or counted first. The counts
+    cost no job: ``n_batch`` is an Observation on the signed batch, read
+    after the write, and ``n_kept`` is the rows the new version adds to
+    its parent, read from the two manifests (the store counts the rows
+    it writes)."""
+    # n_batch rides the commit's write, which reads the signed batch: no
+    # count action of its own
     signed, n_batch_observed = observe_count(
         _signed(
             exact_dedup(
-                new_docs.withColumn("__fp", F.md5(F.col(text_col))), ["__fp"], id_col
+                new_docs.selectExpr("*", f"md5({text_col}) AS __fp"), ["__fp"], id_col
             ).drop("__fp"),
             id_col,
             text_col,
@@ -143,33 +147,24 @@ def incremental_release(
         v = store.commit(signed, note or "initial release")
         n_batch = n_batch_observed()
         return {"version": v, "n_batch": n_batch, "n_kept": n_batch, "n_dropped": 0}
-    signed = signed.persist()  # probed, then committed
+    signed = signed.persist()  # read by the probe and by the kept side
     corpus = store.read(latest)
-    resign = "minhash" not in corpus.columns
-    drops = None
     try:
+        resign = "minhash" not in corpus.columns
         if resign:
             corpus = _signed(_spread(corpus), id_col, text_col).persist()
-        # persist the (small, ids-only) drop set and count it once: the
-        # commit anti-joins the cached ids instead of re-running the probe
-        drops = near_dup_probe(signed, corpus, id_col, threshold).persist()
-        drops.count()
-        # the probe job materialized the signed batch, so the batch-size
-        # metric is available without its own count action (when an
-        # empty probe skipped it, the reader counts the persisted signed
-        # batch, which fills the cache the commit write then reads)
-        n_batch = n_batch_observed()
-        kept, n_kept_observed = observe_count(
-            signed.join(drops, id_col, "left_anti"), "incremental_release kept rows"
+        kept = signed.join(
+            near_dup_probe(signed, corpus, id_col, threshold), id_col, "left_anti"
         )
         if resign:
             v = store.commit(corpus.unionByName(kept), note)
         else:
             # append-commit: writes ONLY the survivors and references the
             # parent release's data dirs — O(|batch|) per release, never
-            # O(corpus); n_batch bounds the file sizing from above
-            v = store.commit_append(kept, note, n_rows_hint=n_batch)
-        n_kept = n_kept_observed()
+            # O(corpus)
+            v = store.commit_append(kept, note)
+        n_batch = n_batch_observed()
+        n_kept = store.manifest(v)["n_rows"] - store.manifest(latest)["n_rows"]
         return {
             "version": v,
             "n_batch": n_batch,
@@ -180,6 +175,5 @@ def incremental_release(
         # the commit has materialized everything — release the cache so
         # repeated releases in one session don't accumulate entries (a
         # stored corpus was never persisted; unpersisting it is a no-op)
-        for frame in (signed, corpus, drops):
-            if frame is not None:
-                frame.unpersist()
+        signed.unpersist()
+        corpus.unpersist()

@@ -47,12 +47,10 @@ class Source(ABC):
         """PK columns: config override first (TableMapping.primary_key),
         else engine catalog detection (C1-C3 in SURVEY.md §2.2)."""
 
-    def table_exists(self, table: TableMapping) -> bool:  # S7 existence probe
-        try:
-            self.read(table).schema
-            return True
-        except Exception:
-            return False
+    @abstractmethod
+    def table_exists(self, table: TableMapping) -> bool:
+        """S7 existence probe (mysql.go:202-207). A catalog that cannot be
+        read (no driver, no server) raises: it is not a missing table."""
 
     def count_rows(
         self, df: DataFrame, table: TableMapping, pk: str | None, watermark: int | None

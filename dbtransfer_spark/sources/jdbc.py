@@ -54,6 +54,19 @@ ORDER BY array_position(i.indkey, a.attnum)
 """
 
 
+# S7 existence probe, scoped like the PK queries above: MySQL's current
+# database, PostgreSQL's search path.
+MYSQL_TABLE_SQL = """\
+SELECT 1 FROM information_schema.tables
+WHERE table_schema = DATABASE() AND table_name = '{table}'
+"""
+
+POSTGRES_TABLE_SQL = """\
+SELECT 1 FROM information_schema.tables
+WHERE table_schema = ANY(current_schemas(false)) AND table_name = '{table}'
+"""
+
+
 def jdbc_url(cfg: DBConfig) -> str:
     host = cfg.hosts[0] if cfg.hosts else "localhost"
     t = (cfg.type or "mysql").lower()
@@ -240,18 +253,11 @@ class JDBCSource(Source):
             )
         return self.spark.read.format("jdbc").options(**opts).load()
 
-    def detect_primary_key(self, table: TableMapping) -> list[str]:
-        if table.primary_key:
-            return [c.strip() for c in table.primary_key.split(",")]
-        t = (self.cfg.type or "mysql").lower()
-        query = (
-            MYSQL_PK_SQL.format(table=table.name)
-            if t == "mysql"
-            else POSTGRES_PK_SQL.format(table=table.name)
-        )
-        # A catalog error (no driver, no server) raises: an empty answer
-        # would run the table with no key and no resume watermark.
-        rows = (
+    def _catalog(self, query: str) -> list[Row]:
+        """Rows of a catalog query. A catalog error (no driver, no server)
+        raises: an empty answer would read as "no such table" or "no
+        primary key"."""
+        return (
             self.spark.read.format("jdbc")
             .options(
                 url=jdbc_url(self.cfg),
@@ -263,9 +269,21 @@ class JDBCSource(Source):
             .load()
             .collect()
         )
-        if t == "mysql":
+
+    def _is_mysql(self) -> bool:
+        return (self.cfg.type or "mysql").lower() == "mysql"
+
+    def table_exists(self, table: TableMapping) -> bool:
+        sql = MYSQL_TABLE_SQL if self._is_mysql() else POSTGRES_TABLE_SQL
+        return bool(self._catalog(sql.format(table=table.name)))
+
+    def detect_primary_key(self, table: TableMapping) -> list[str]:
+        if table.primary_key:
+            return [c.strip() for c in table.primary_key.split(",")]
+        if self._is_mysql():
+            rows = self._catalog(MYSQL_PK_SQL.format(table=table.name))
             return [r["Column_name"] for r in rows]
-        return [r[0] for r in rows]
+        return [r[0] for r in self._catalog(POSTGRES_PK_SQL.format(table=table.name))]
 
 
 class JDBCSink(BatchSink):

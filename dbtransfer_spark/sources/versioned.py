@@ -54,12 +54,12 @@ store exists to avoid. ``commit_append`` therefore auto-compacts: when
 the parent already references ``max_data_dirs`` directories, the commit
 is published as a full snapshot (parent ∪ batch rewritten into ONE
 fresh directory of ``1 + rows // 1M`` files, ``rows`` being the
-parent's ``n_rows`` plus the batch) instead of another incremental
-reference. The compaction is just another version — older manifests
-keep pinning the pre-compaction directories, so time travel and
-``diff`` are unchanged; ``vacuum`` reclaims the superseded small files
-once their versions age out. Invariant: every manifest's ``data_dirs``
-has at most ``max_data_dirs`` entries.
+parent's ``n_rows``) instead of another incremental reference. The
+compaction is just another version — older manifests keep pinning the
+pre-compaction directories, so time travel and ``diff`` are unchanged;
+``vacuum`` reclaims the superseded small files once their versions age
+out. Invariant: every manifest's ``data_dirs`` has at most
+``max_data_dirs`` entries.
 
 Concurrency contract: the store is SINGLE-WRITER (like the reference's
 one-process-per-table checkpoint files, pkg/utils/checkpoint), and
@@ -141,8 +141,6 @@ class VersionedDatasetStore:
         parent_dirs: list[str],
         parent_rows: int = 0,
         compaction: bool = False,
-        n_rows: int | None = None,
-        n_rows_hint: int | None = None,
         n_new_rows: Callable[[], int] | None = None,
     ) -> int:
         """Write a new data directory, then publish a manifest whose file
@@ -151,42 +149,37 @@ class VersionedDatasetStore:
         a failed write at any point leaves the previous version intact
         and at worst an orphaned directory for vacuum().
 
-        ``n_rows``: callers that already counted the frame pass it to
-        size the output file count by data volume (~1M rows/file)
-        instead of cluster width — a 1k-row daily batch written by a
-        1000-task cluster would otherwise strew 1000 near-empty files
-        per commit. ``n_rows_hint`` sizes files the same way when only
-        an upper bound is known (e.g. pre-dedup batch size). When the
-        exact count is unknown it rides the write itself as an
-        ``Observation`` metric — one job total, never a read-back count
-        scan over the just-written files.
+        File count: a commit or an append writes one file per non-empty
+        partition of ``df``, with no sizing shuffle. The release hands
+        in its cached batch anti-joined with the probe. When adaptive
+        execution turns that join into a broadcast of the (small) drop
+        set, the kept rows keep the batch cache's partitions, which are
+        the exact-dedup shuffle's coalesced by bytes (64 MB each by
+        default), so a small append writes one file; a drop set too
+        large to broadcast leaves the join's own coalesced partitions.
+        A ``compaction`` rewrites its parent too and is coalesced to
+        ``1 + parent_rows // 1M`` files (narrow: the parent's rows are
+        not shuffled).
 
-        ``parent_rows``: the rows of the parent this version keeps; the
-        manifest's ``n_rows`` is ``parent_rows`` plus the rows added. A
-        ``compaction`` rewrites them, so its file count is sized by both.
-
-        ``n_new_rows``: reader of the manifest's ``n_new_rows`` when the
-        rows this version adds are fewer than the rows it writes (a
-        compaction rewrites its parent too); called after the write."""
+        The rows written ride the write itself as an ``Observation``
+        metric — one job total, never a read-back count scan over the
+        just-written files. ``n_new_rows``: reader of the manifest's
+        ``n_new_rows`` when the rows this version adds are fewer than
+        the rows it writes (a compaction rewrites its parent too);
+        called after the write. The manifest's ``n_rows`` is
+        ``parent_rows``, the rows of the parent this version keeps, plus
+        the rows added."""
         version = (parent or 0) + 1
         data_name = f"v{version}-{uuid.uuid4().hex[:8]}"
-        size_rows = n_rows if n_rows is not None else n_rows_hint
         if compaction:
-            # coalesce: narrow, so the parent's rows are not shuffled; the
-            # batch's own upstream compute runs in these few tasks too (the
-            # release hands in its cached, signed batch)
-            df = df.coalesce(_n_files(parent_rows + (size_rows or 0)))
-        elif size_rows is not None:
-            # repartition, not coalesce: a narrow coalesce(1) would pull
-            # the whole upstream compute (dedup/anti-join) into one task;
-            # the round-robin shuffle costs O(batch) and keeps it parallel
-            df = df.repartition(_n_files(size_rows))
-        if n_rows is None and n_new_rows is None:
+            # the batch's own upstream compute runs in these few tasks too
+            df = df.coalesce(_n_files(parent_rows))
+        if n_new_rows is None:
             df, n_new_rows = observe_count(
                 df, f"rows of {os.path.join(self.ddir, data_name)}"
             )
         df.write.mode("error").parquet(os.path.join(self.ddir, data_name))
-        added = n_rows if n_rows is not None else n_new_rows()
+        added = n_new_rows()
         man = {
             "version": version,
             "parent": parent,
@@ -211,25 +204,20 @@ class VersionedDatasetStore:
             os.unlink(tmp)
         return version
 
-    def commit(self, df: DataFrame, note: str = "", n_rows: int | None = None) -> int:
+    def commit(self, df: DataFrame, note: str = "") -> int:
         """Publish ``df`` as a FULL-snapshot version (one fresh data
         directory, no parent references). O(|df|) write — use for
         initial loads and compactions."""
-        return self._publish(df, note, self.latest_version(), [], n_rows=n_rows)
+        return self._publish(df, note, self.latest_version(), [])
 
-    def commit_append(
-        self,
-        df: DataFrame,
-        note: str = "",
-        n_rows: int | None = None,
-        n_rows_hint: int | None = None,
-    ) -> int:
+    def commit_append(self, df: DataFrame, note: str = "") -> int:
         """Publish ``current ∪ df`` as the next version by writing ONLY
         the new rows and referencing the parent's data directories in
         the manifest — O(|batch|) regardless of corpus size, the only
         commit shape that survives a 100 TB corpus with daily batches.
         Old versions keep resolving: data dirs are append-only and every
-        manifest pins its own list.
+        manifest pins its own list. The batch is written in the
+        partitions ``df`` already has (see ``_publish``).
 
         ``df`` must have the parent's schema (column names, order and
         types; nullability aside), else ``ValueError``: commit a full
@@ -246,7 +234,7 @@ class VersionedDatasetStore:
         """
         parent = self.latest_version()
         if parent is None:
-            return self._publish(df, note, None, [], n_rows=n_rows, n_rows_hint=n_rows_hint)
+            return self._publish(df, note, None, [])
         man = self.manifest(parent)
         have = "schema" in man and StructType.fromJson(man["schema"]).simpleString()
         if df.schema.simpleString() != have:
@@ -264,18 +252,9 @@ class VersionedDatasetStore:
                 [],
                 man["n_rows"],
                 compaction=True,
-                n_rows_hint=n_rows if n_rows is not None else n_rows_hint,
                 n_new_rows=n_batch,
             )
-        return self._publish(
-            df,
-            note,
-            parent,
-            man["data_dirs"],
-            man["n_rows"],
-            n_rows=n_rows,
-            n_rows_hint=n_rows_hint,
-        )
+        return self._publish(df, note, parent, man["data_dirs"], man["n_rows"])
 
     # -- read path -------------------------------------------------------
     def _resolve(self, version: int | None) -> int:

@@ -86,6 +86,28 @@ def test_detect_primary_key_raises_on_catalog_error(spark):
         JDBCSource(spark, cfg).detect_primary_key(TableMapping(name="t"))
 
 
+def test_table_exists_raises_on_catalog_error(spark, tmp_path):
+    """The existence probe reads the catalog too, so an unreadable one is
+    an error, not "no such table": an engine run reports why the catalog
+    could not be read."""
+    from dbtransfer_spark.config import Config, MigrationConfig
+    from dbtransfer_spark.engine import TransferEngine
+
+    cfg = DBConfig(type="mysql", hosts=["localhost:1"], database="db", username="u")
+    with pytest.raises(Exception):
+        JDBCSource(spark, cfg).table_exists(TableMapping(name="t"))
+    cfg.tables = [TableMapping(name="t")]
+    run = Config(
+        source=cfg,
+        destination=DBConfig(type="parquet", database=str(tmp_path / "out")),
+        migration=MigrationConfig(checkpoint_dir=str(tmp_path / "ckpt")),
+    )
+    run.set_defaults()
+    error = TransferEngine(spark, run).run()["t"]["error"]
+    assert "does not exist" not in error
+    assert "mysql" in error.lower()  # the driver's or the connection's error
+
+
 # ---------------------------------------------------------------------------
 # MySQL writer path e2e (r4 VERDICT #7): the W1 statement path — dialect
 # "mysql", %s placeholders, ON DUPLICATE KEY UPDATE — driven end-to-end

@@ -13,10 +13,14 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMOKE
 from dbtransfer_spark.operators.asof import asof_join
 from dbtransfer_spark.operators.dedup import (
+    _POLY,
+    _PRIME,
     exact_dedup,
+    minhash_agreement,
     minhash_jaccard_estimate,
     minhash_lsh_pairs,
     minhash_signatures,
+    shingle_arrays,
     simhash,
 )
 from dbtransfer_spark.operators.similarity import brute_force_topk, cosine
@@ -73,6 +77,58 @@ def test_minhash_lsh_recall(spark):
     sigs = minhash_signatures(df, "doc_id", "text")
     cand = {(r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(sigs, "doc_id").collect()}
     assert (1, 2) in cand
+
+
+def _py_shingles(text: str, shingle_len: int) -> list[int]:
+    """Pure-Python model of the portable shingle hashes: md5 of each
+    space-separated word (first 15 hex digits) mod _PRIME, combined by
+    the _POLY rolling polynomial, distinct in first-seen order."""
+    import hashlib
+
+    wh = [int(hashlib.md5(w.encode()).hexdigest()[:15], 16) % _PRIME for w in text.split(" ")]
+    poly = _POLY[:shingle_len]
+    sh = [
+        sum(wh[i + j] * c for j, c in enumerate(poly)) % _PRIME
+        for i in range(len(wh) - shingle_len + 1)
+    ]
+    return list(dict.fromkeys(sh))
+
+
+@pytest.mark.parametrize("shingle_len", [1, 3, 7])
+def test_portable_shingles_match_python_model(spark, shingle_len):
+    texts = [
+        "the quick brown fox jumps over the lazy dog the quick brown fox",
+        "two words",  # shorter than most shingle lengths
+        "",
+        "repeated  spaces   between    words and  a trailing space ",
+        "ünïcode wörds ✓ and émoji 🙂 too here",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    got = {
+        r["doc_id"]: r["__shingles"]
+        for r in shingle_arrays(df, "doc_id", "text", shingle_len, portable_hash=True).collect()
+    }
+    assert got == {i: _py_shingles(t, shingle_len) for i, t in enumerate(texts)}
+
+
+def test_minhash_agreement_matches_python_fraction(spark):
+    """Fraction of equal positions, rounded half-up to 4 places like
+    Spark's ``round`` (1/32 = 0.03125 -> 0.0313, where Python's own
+    ``round`` gives 0.0312)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def py_agreement(a, b):
+        frac = sum(x == y for x, y in zip(a, b)) / len(a)
+        return float(Decimal(repr(frac)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
+
+    rows = []
+    for n in (32, 7):
+        for k in range(n + 1):
+            a = list(range(n))
+            rows.append((a, a[:k] + [-1 - i for i in range(n - k)]))
+    df = spark.createDataFrame(rows, "a array<bigint>, b array<bigint>")
+    got = [r["e"] for r in df.select(minhash_agreement("a", "b").alias("e")).collect()]
+    assert got == [py_agreement(a, b) for a, b in rows]
 
 
 def test_minhash_short_and_empty_docs(spark):

@@ -199,15 +199,18 @@ def test_compacting_release_counts_only_the_batch(spark, tmp_path):
     _assert_signed(store, *store.versions())
 
 
-def test_incremental_release_runs_at_most_11_jobs(spark, store):
+def test_incremental_release_runs_at_most_9_jobs(spark, store):
     """Pins the job waves of one incremental release (17 at the
-    sidecar-index design): an extra wave fails here loudly."""
+    sidecar-index design, 11 while the drop set was cached and counted
+    before the commit): an extra wave fails here loudly. No cached RDD
+    outlives the release."""
     incremental_release(spark, store, _docs(spark, [(1, BASE), (3, "short doc here")]))
     batch = _docs(
         spark,
         [(101, BASE.replace("w59", "zz")), (102, " ".join(f"x{i}" for i in range(60)))],
     )
     sc = spark.sparkContext
+    cached = sc._jsc.sc().getPersistentRDDs().size()
     sc.setJobGroup("release", "incremental release")
     try:
         r = incremental_release(spark, store, batch)
@@ -216,7 +219,21 @@ def test_incremental_release_runs_at_most_11_jobs(spark, store):
             sc.setLocalProperty(key, None)
     sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
     assert (r["n_kept"], r["n_dropped"]) == (1, 1)
-    assert len(sc.statusTracker().getJobIdsForGroup("release")) <= 11
+    assert len(sc.statusTracker().getJobIdsForGroup("release")) <= 9
+    assert sc._jsc.sc().getPersistentRDDs().size() == cached
+
+
+def test_small_append_release_writes_one_file(spark, store):
+    """The append writes the kept rows in the partitions the batch
+    already has, with no sizing shuffle: a small batch is one file."""
+    import os
+
+    incremental_release(spark, store, _docs(spark, [(1, BASE)]))
+    novel = [(10 + i, " ".join(f"s{i}x{j}" for j in range(60))) for i in range(5)]
+    r = incremental_release(spark, store, _docs(spark, novel).repartition(4))
+    assert (r["n_batch"], r["n_kept"]) == (5, 5)
+    new_dir = os.path.join(store.ddir, store.manifest(r["version"])["data_dirs"][-1])
+    assert len([n for n in os.listdir(new_dir) if n.endswith(".parquet")]) == 1
 
 
 def test_release_without_candidates_computes_the_batch_once(spark, store):

@@ -724,7 +724,7 @@ def _py_md5_60bit(s: str) -> int:
     max_examples=12, deadline=None, suppress_health_check=[HealthCheck.too_slow]
 )
 def test_md5_60bit_token_hash_matches_python_and_duckdb(spark, tokens):
-    """The 60-bit md5 token hash (dedup._word_hash_portable, the base of
+    """The 60-bit md5 token hash (dedup._WORD_HASH_PORTABLE, the base of
     every portable MinHash/SimHash oracle pair) equals the independent
     hashlib model in BOTH engines for arbitrary unicode tokens — a wrong
     substring window, radix, or sign handling diverges immediately."""
